@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{Parquet, Tables}
 import graft.ext.Similarity
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -58,7 +58,7 @@ object RecallSweep {
       val book = bookL.cache()
       val packed = Similarity.packCodes(codesL, pqM).cache()
       Seq(cents, index, book, packed).foreach(_.count()) // materialize
-      val q = spark.read.parquet(s"$d/embeddings.parquet")
+      val q = Parquet.read(spark, s"$d/embeddings.parquet")
         .filter(col("vec_id") % 5 === 0)
         .select((col("vec_id") + 30000).as("qid"),
           transform(col("embedding"), (x, i) =>

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import graft.core.Parquet
 
 /** sf1.0 soak of the FULL oracle surface (VERDICT r7 #9, widened to
   * every query by r9 #2).
@@ -45,8 +46,8 @@ object Soak {
   /** Deterministic 10x scale-up of the two LLM-pipeline tables. */
   def generate(spark: SparkSession, base: String, out: String,
       replicas: Int): Unit = {
-    val docs = spark.read.parquet(s"$base/documents.parquet")
-    val emb = spark.read.parquet(s"$base/embeddings.parquet")
+    val docs = Parquet.read(spark, s"$base/documents.parquet")
+    val emb = Parquet.read(spark, s"$base/embeddings.parquet")
     val docStep = docs.agg(max("doc_id")).head().getLong(0) + 1
     val embStep = emb.agg(max("vec_id")).head().getLong(0) + 1
 
@@ -91,8 +92,8 @@ object Soak {
     */
   def generateRelational(spark: SparkSession, base: String, out: String,
       replicas: Int): Unit = {
-    val part = spark.read.parquet(s"$base/part.parquet")
-    val ev = spark.read.parquet(s"$base/events.parquet")
+    val part = Parquet.read(spark, s"$base/part.parquet")
+    val ev = Parquet.read(spark, s"$base/events.parquet")
     val partStep = part.agg(max("p_partkey")).head().getLong(0) + 1
     val evStep = ev.agg(max("event_id")).head().getLong(0) + 1
     val userStep = ev.agg(max("user_id")).head().getLong(0) + 1
@@ -100,7 +101,7 @@ object Soak {
     // superset of orders' o_custkey), so the scaled customer dim and
     // the scaled orders fact re-id with the SAME stride and every
     // replica's foreign keys resolve
-    val cust = spark.read.parquet(s"$base/customer.parquet")
+    val cust = Parquet.read(spark, s"$base/customer.parquet")
     val custStep0 = cust.agg(max("c_custkey")).head().getLong(0) + 1
 
     def suffix(c: org.apache.spark.sql.Column, i: Int) = array_join(
@@ -131,7 +132,7 @@ object Soak {
     // subset of o_orderkey, so the step comes from orders' max) and
     // re-ids customers — the HITS bipartite graph then grows 10x on
     // BOTH sides with replicas disjoint, true-to-shape
-    val ord = spark.read.parquet(s"$base/orders.parquet")
+    val ord = Parquet.read(spark, s"$base/orders.parquet")
     val orderStep = ord.agg(max("o_orderkey")).head().getLong(0) + 1
     val scaledOrd = (0 until replicas).map { i =>
       if (i == 0) ord
@@ -150,7 +151,7 @@ object Soak {
       else cust.withColumn("c_custkey", col("c_custkey") + lit(i * custStep0))
     }.reduce(_ unionByName _)
 
-    val li = spark.read.parquet(s"$base/lineitem.parquet")
+    val li = Parquet.read(spark, s"$base/lineitem.parquet")
     val scaledLi = (0 until replicas).map { i =>
       if (i == 0) li
       else li.withColumn("l_orderkey", col("l_orderkey") + lit(i * orderStep))
@@ -162,7 +163,7 @@ object Soak {
     // pair at levenshtein >= 3 — replicas stay DISJOINT at d=1, so the
     // matching problem grows 10x linearly (a 1-char suffix would put
     // cross-replica pairs at distance 1 and grow pairs quadratically)
-    val sup = spark.read.parquet(s"$base/supplier.parquet")
+    val sup = Parquet.read(spark, s"$base/supplier.parquet")
     val supStep = sup.agg(max("s_suppkey")).head().getLong(0) + 1
     val scaledSup = (0 until replicas).map { i =>
       if (i == 0) sup
@@ -185,7 +186,7 @@ object Soak {
     scaledCust.repartition(4).write.mode("overwrite")
       .parquet(s"$out/customer.parquet")
     Seq("nation", "region").foreach { t =>
-      spark.read.parquet(s"$base/$t.parquet").coalesce(1)
+      Parquet.read(spark, s"$base/$t.parquet").coalesce(1)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     }
   }

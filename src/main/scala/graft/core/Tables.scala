@@ -11,6 +11,12 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * possible and let the scan do the work. At 100 TB these would be
   * partitioned parquet/Delta directories — nothing in the call-sites assumes
   * single-file layout.
+  *
+  * Schemas come from [[Parquet.read]]: the driver reads the table's
+  * footer and hands its schema to the reader, so loading a table (and
+  * [[preflight]], which loads all of them) submits no Spark job. The
+  * schema is the one `spark.read.parquet` would infer, session conf
+  * included (the `events` loader's `nanosAsLong` applies).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +24,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Parquet
 
 /** BPE (byte-pair-encoding) vocabulary induction (Sennrich et al. 2016):
   * repeatedly merge the most frequent adjacent symbol pair. The trainer
@@ -405,8 +406,8 @@ object Bpe {
     * [[encode]] and the two-argument [[vocab]]. */
   def loadTokenizer(spark: org.apache.spark.sql.SparkSession,
                     path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/rules"),
-      spark.read.parquet(s"$path/alphabet"))
+    (Parquet.read(spark, s"$path/rules"),
+      Parquet.read(spark, s"$path/alphabet"))
 
   /** Adjacent (l, r) symbol pairs of a symbol array (empty when fewer
     * than two symbols — such words carry no pairs). */

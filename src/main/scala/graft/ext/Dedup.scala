@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Parquet
 
 /** Deduplication operators for an LLM training-data pipeline.
   *
@@ -520,7 +521,7 @@ object Dedup {
                       sigPath: String, threshold: Double,
                       corpusToks: DataFrame,
                       family: MinHashFamily = DefaultFamily): DataFrame = {
-    val stored = newToks.sparkSession.read.parquet(sigPath)
+    val stored = Parquet.read(newToks.sparkSession, sigPath)
     require(stored.columns.count(_.startsWith("mh")) == family.numHashes,
       s"signature store at $sigPath was written with a different " +
         s"MinHash family than (${family.numHashes}, ${family.numBands})")
@@ -578,7 +579,7 @@ object Dedup {
     val spark = ids.sparkSession
     Layout.recoverSwap(spark, sigPath)
     val staging = Layout.hiddenSibling(sigPath, ".tombstone-staging")
-    spark.read.parquet(sigPath)
+    Parquet.read(spark, sigPath)
       .join(ids.select(col(idCol)), Seq(idCol), "left_anti")
       .write.mode("overwrite").parquet(staging)
     Layout.swapIn(spark, sigPath, staging)
@@ -622,7 +623,7 @@ object Dedup {
     val pairs =
       probeSignatures(batch, idCol, tokCol, sigPath, threshold, corpus,
         family)
-    val storedIds = spark.read.parquet(sigPath)
+    val storedIds = Parquet.read(spark, sigPath)
       .select(col(idCol).as("b_id")).distinct()
     val drops = pairs.join(storedIds, Seq("b_id"), "left_semi")
       .select(col("a_id"))

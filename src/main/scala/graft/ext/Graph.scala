@@ -770,11 +770,12 @@ object Graph {
     * heuristic.
     *
     * Scale shape per round: one edges×labels equi-join (the label
-    * frame is MEASURED and broadcast under [[broadcastBudget]],
-    * shuffled past it), one (node, label)-keyed count (map-side
-    * partial), one node-keyed struct-max argmax — (count, −label)
-    * max picks most-votes-then-smallest-label in a single aggregate,
-    * no window — and one left join carrying isolated nodes unchanged.
+    * frame is MEASURED once, before the rounds, and broadcast under
+    * [[broadcastBudget]], shuffled past it), one (node, label)-keyed
+    * count (map-side partial), one node-keyed struct-max argmax —
+    * (count, −label) max picks most-votes-then-smallest-label in a
+    * single aggregate, no window — and one left join carrying
+    * isolated nodes unchanged.
     * Per-round lineage cuts via [[Checkpoints.cut]] (durable dir =
     * the cluster posture). Labels are node ids: exact integers end to
     * end, no float contract.
@@ -804,15 +805,20 @@ object Graph {
     // bounded by the edge count, so the gate (ids in [0, 2^32), edges
     // < 2^31) is checked ONCE on measured values; graphs past the
     // bound take the struct path unchanged.
-    val idBounds = lab.agg(min(col("node")), max(col("node"))).head()
+    // The label frame keeps one fixed-width row per node through every
+    // round, so the same aggregate also sizes it once for the
+    // broadcast decision.
+    val idBounds = lab.agg(min(col("node")), max(col("node")),
+      count(lit(1))).head()
     val eRows = measure(e)._1
     val packable = !idBounds.isNullAt(0) && idBounds.getLong(0) >= 0L &&
       idBounds.getLong(1) < (1L << 32) && eRows < (1L << 31)
+    val lBytes =
+      idBounds.getLong(2) * lab.schema.map(_.dataType.defaultSize).sum
+    val lSide: DataFrame => DataFrame =
+      if (lBytes <= broadcastBudget(spark)) broadcast else identity
     val lowMask = (1L << 32) - 1L
     (1 to rounds).foreach { _ =>
-      val (_, lBytes) = measure(lab)
-      val lSide: DataFrame => DataFrame =
-        if (lBytes <= broadcastBudget(spark)) broadcast else identity
       val votes = e
         .join(lSide(lab.select(col("node").as("dst"), col("lbl"))),
           "dst")

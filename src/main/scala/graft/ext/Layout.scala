@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Parquet
 
 /** Physical data-layout utilities for the lake tables.
   *
@@ -112,7 +113,7 @@ object Layout {
     val total = files.map(_._2).sum
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val staging = hiddenSibling(path, ".compact-staging")
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .repartition(n)
       .write.mode(SaveMode.Overwrite).parquet(staging)
     swapIn(spark, path, staging)
@@ -283,7 +284,7 @@ object Layout {
     val aggs = cols.flatMap { c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
     } :+ count(lit(1)).as("n_rows")
-    val stats = spark.read.parquet(path)
+    val stats = Parquet.read(spark, path)
       .groupBy(input_file_name().as("file_path"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("file_name",
@@ -317,7 +318,7 @@ object Layout {
     * counts. */
   def prunedFiles(spark: SparkSession, path: String, colName: String,
                   lo: Any, hi: Any): Seq[String] = {
-    val man = spark.read.parquet(manifestPath(path))
+    val man = Parquet.read(spark, manifestPath(path))
     val current = spark.createDataFrame(dataFileSizes(spark, path)
         .map { case (p, len) => (p.getName, len) })
       .toDF("file_name", "size")
@@ -353,8 +354,8 @@ object Layout {
     val files = prunedFiles(spark, path, colName, lo, hi)
     val base =
       if (files.isEmpty)
-        spark.read.parquet(path).limit(0)
-      else spark.read.parquet(files: _*)
+        Parquet.read(spark, path).limit(0)
+      else Parquet.read(spark, files: _*)
     base.where(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 

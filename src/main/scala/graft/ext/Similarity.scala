@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Parquet
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -244,8 +245,8 @@ object Similarity {
   /** Load a persisted IVF index: (centroids, assignments) — the same
     * pair [[ivfIndex]] returns, ready for [[ivfTopK]]. */
   def loadIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/assignments"))
+    (Parquet.read(spark, s"$path/centroids"),
+      Parquet.read(spark, s"$path/assignments"))
 
   /** Incrementally extend a persisted index: assign ONLY the new
     * vectors to the existing (frozen) centroids and append their
@@ -258,7 +259,7 @@ object Similarity {
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): Unit = {
     val spark = newVectors.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Parquet.read(spark, s"$path/centroids")
       .select(col("centroid_id").as("cid"), col("cv"))
     assignToCentroids(
         newVectors.select(col(idCol).as("vid"), col(vecCol).as("vv")),
@@ -646,8 +647,8 @@ object Similarity {
 
   /** Load a persisted PQ artifact: (codebook, packed codes). */
   def loadPq(spark: SparkSession, path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/codebook"),
-      spark.read.parquet(s"$path/codes"))
+    (Parquet.read(spark, s"$path/codebook"),
+      Parquet.read(spark, s"$path/codes"))
 
   /** Incrementally extend a persisted PQ artifact: encode ONLY the new
     * vectors against the frozen codebook and append their packed
@@ -658,7 +659,7 @@ object Similarity {
   def extendPq(newVectors: DataFrame, path: String, m: Int,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): Unit = {
-    val book = newVectors.sparkSession.read.parquet(s"$path/codebook")
+    val book = Parquet.read(newVectors.sparkSession, s"$path/codebook")
     packCodes(pqEncode(newVectors, book, m, idCol, vecCol), m)
       .write.mode("append").parquet(s"$path/codes")
   }

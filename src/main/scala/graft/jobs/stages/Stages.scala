@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.jobs.DailyChain
 import graft.kbo.{Metrics, Records}
+import graft.core.Parquet
 
 /** The deployment face of the daily chain: one thin `spark-submit`
   * main per reference DAG stage, exchanging REFERENCE-SHAPED parquet
@@ -47,8 +48,12 @@ object StageIO {
     s
   }
 
+  /** A landed lake table. Its schema is read from the table's footer
+    * on the driver ([[graft.core.Parquet.read]]), so a stage main
+    * builds its input frames without submitting a Spark job; the jobs
+    * a stage runs are its own transform and write. */
   def read(s: SparkSession, lake: String, table: String): DataFrame =
-    s.read.parquet(s"$lake/$table")
+    Parquet.read(s, s"$lake/$table")
 
   /** Overwrite-land a stage output — the parquet equivalent of the
     * reference's per-table upsert target. */

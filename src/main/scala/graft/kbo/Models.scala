@@ -2,6 +2,7 @@ package graft.kbo
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import java.sql.{Date, Timestamp}
+import graft.core.Parquet
 
 /** Typed `Dataset[T]` surface for the core tables (SURVEY.md §1.2):
   * compile-time safety where row shape is stable; the 74/75-col wide
@@ -49,11 +50,11 @@ object Models {
 
   def documents(s: SparkSession, dir: String): Dataset[Document] = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet").as[Document]
+    Parquet.read(s, s"$dir/documents.parquet").as[Document]
   }
 
   def embeddings(s: SparkSession, dir: String): Dataset[Embedding] = {
     import s.implicits._
-    s.read.parquet(s"$dir/embeddings.parquet").as[Embedding]
+    Parquet.read(s, s"$dir/embeddings.parquet").as[Embedding]
   }
 }

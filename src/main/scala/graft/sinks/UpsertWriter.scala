@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Parquet
 
 /** A12 — upsert semantics (`INSERT ... ON DUPLICATE KEY UPDATE`) without a
   * transactional table format. Ref: dags/utils/queries.py:5-261.
@@ -41,6 +42,13 @@ object UpsertWriter {
       .filter(col("__rn") === 1)
       .drop("__src", "__rn")
   }
+
+  /** One row per key, latest-wins by `versionCol` — [[merge]] against
+    * an empty table. A table's first batch goes through this too, so
+    * keys re-delivered inside it never land twice. */
+  private def collapse(df: DataFrame, keys: Seq[String],
+                       versionCol: String): DataFrame =
+    merge(df.limit(0), df, keys, versionCol)
 
   /** Advisory writer lock — the lake upserts assume a SINGLE WRITER per
     * table (the reference runs them from a serial DAG chain). Without
@@ -113,11 +121,11 @@ object UpsertWriter {
         spark.sparkContext.hadoopConfiguration)
       val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
       val merged =
-        if (exists) merge(spark.read.parquet(path), incoming, keys, versionCol)
-        else incoming
+        if (exists) merge(Parquet.read(spark, path), incoming, keys, versionCol)
+        else collapse(incoming, keys, versionCol)
       val staging = path + "__staging"
       merged.write.mode(SaveMode.Overwrite).parquet(staging)
-      spark.read.parquet(staging).write.mode(SaveMode.Overwrite).parquet(path)
+      Parquet.read(spark, staging).write.mode(SaveMode.Overwrite).parquet(path)
       fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     }
   }
@@ -153,10 +161,10 @@ object UpsertWriter {
       // Touched buckets: tiny distinct-aggregate on the (small) batch.
       val touched = tagged.select(col(BucketCol)).distinct()
         .collect().map(_.getInt(0)).sorted
-      val base = spark.read.parquet(path)
+      val base = Parquet.read(spark, path)
         .filter(col(BucketCol).isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
       merge(base, tagged, keys :+ BucketCol, versionCol)
-    } else tagged
+    } else collapse(tagged, keys :+ BucketCol, versionCol)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try merged.write.mode(SaveMode.Overwrite)
@@ -172,7 +180,7 @@ object UpsertWriter {
   /** Read a bucketed-upsert table without the internal bucket column. */
   def readBucketed(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
-    spark.read.parquet(path).drop(BucketCol)
+    Parquet.read(spark, path).drop(BucketCol)
 
   /** JDBC upsert mode (the reference's INSERT ... ON DUPLICATE KEY UPDATE,
     * dags/utils/queries.py:5-261): per-partition statements over a pooled
@@ -191,7 +199,7 @@ object UpsertWriter {
                  keys: Seq[String], versionCol: String,
                  props: java.util.Properties = new java.util.Properties(),
                  batchSize: Int = 1000, dialect: String = "mysql"): Unit = {
-    val collapsed = merge(incoming.limit(0), incoming, keys, versionCol)
+    val collapsed = collapse(incoming, keys, versionCol)
     val cols = collapsed.columns.toSeq
     val nonKeys = cols.filterNot(keys.contains)
     collapsed.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.queries.Q
+import graft.core.Parquet
 
 /** Structured-Streaming surface of the engine over the `events` table
   * shape (event_id, ts, user_id, event_type, value, props).
@@ -1323,7 +1324,7 @@ object EventPipeline {
         val corpus =
           if (kp.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .exists(kp))
-            spark.read.parquet(keptPath)
+            Parquet.read(spark, keptPath)
               .select(col(idCol),
                 graft.ext.Hashing.tokens(col(textCol)).as("__tk"))
           else toks.select(col(idCol), col("__tk")).limit(0)
@@ -1395,7 +1396,7 @@ object EventPipeline {
           Scd2.historize(batch, key, ts, tracked, tieBreak)
             .write.mode("overwrite").parquet(historyPath)
         } else {
-          val merged = Scd2.merge(spark.read.parquet(historyPath), batch,
+          val merged = Scd2.merge(Parquet.read(spark, historyPath), batch,
             key, ts, tracked, tieBreak)
           val staging = new org.apache.hadoop.fs.Path(hp.getParent,
             "." + hp.getName + ".scd2-staging").toString
@@ -1431,7 +1432,7 @@ object EventPipeline {
         val store =
           if (sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .exists(sp))
-            spark.read.parquet(storePath)
+            Parquet.read(spark, storePath)
           else hashed.limit(0)
         def bands(df: DataFrame, id: String, dh: String) =
           df.select(col(idCol).as(id), col("dh").as(dh),
@@ -1510,7 +1511,7 @@ object EventPipeline {
         val corpus =
           if (kp.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .exists(kp))
-            spark.read.parquet(keptPath)
+            Parquet.read(spark, keptPath)
               .select(col(idCol),
                 graft.ext.Hashing.tokens(col(textCol)).as("__tk"))
           else clean.select(col(idCol), col("__tk")).limit(0)
@@ -1543,7 +1544,7 @@ object EventPipeline {
   def readVolumeRollup(spark: SparkSession, rollupPath: String): DataFrame = {
     val vs = rollupVersions(spark, rollupPath)
     require(vs.nonEmpty, s"no complete rollup version under $rollupPath")
-    spark.read.parquet(s"$rollupPath/v=${vs.last}")
+    Parquet.read(spark, s"$rollupPath/v=${vs.last}")
   }
 
   /** One micro-batch of the volume monitor — IDEMPOTENT per batchId,
@@ -1567,7 +1568,7 @@ object EventPipeline {
     if (!versions.lastOption.exists(_ >= batchId)) {
       val bc = graft.ext.Anomaly.dailyCounts(batch, tsCol, typeCol)
       val existing = versions.lastOption
-        .map(v => spark.read.parquet(s"$rollupPath/v=$v"))
+        .map(v => Parquet.read(spark, s"$rollupPath/v=$v"))
         .getOrElse(bc.limit(0))
       existing.unionByName(bc)
         .groupBy(col("stream"), col("day"))
@@ -1649,7 +1650,7 @@ object EventPipeline {
         .groupBy(col(rowCol), col(colCol))
         .agg(count(lit(1)).as("n"))
       val existing = versions.lastOption
-        .map(v => spark.read.parquet(s"$cellsPath/v=$v"))
+        .map(v => Parquet.read(spark, s"$cellsPath/v=$v"))
         .getOrElse(bc.limit(0))
       existing.unionByName(bc)
         .groupBy(col(rowCol), col(colCol))
@@ -1660,8 +1661,8 @@ object EventPipeline {
       versions.filter(_ < batchId).foreach(v =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$cellsPath/v=$v"), true))
     }
-    val cells = spark.read
-      .parquet(s"$cellsPath/v=${rollupVersions(spark, cellsPath).last}")
+    val cells = Parquet.read(spark,
+      s"$cellsPath/v=${rollupVersions(spark, cellsPath).last}")
     graft.ext.Mixture.rakeCells(cells, rowCol, colCol,
         ref.rowTn.toSeq.toDF("k", "tn"), ref.colTn.toSeq.toDF("k", "tn"),
         rounds)

@@ -91,6 +91,23 @@ class UpsertWriterSpec extends SparkSpec {
     assert(untouchedBefore.nonEmpty, "test must cover untouched buckets")
   }
 
+  test("a new table's first batch collapses re-delivered keys " +
+      "latest-wins (bucketed and full-rewrite)") {
+    val dir = Files.createTempDirectory("upsert-day0").toFile.getAbsolutePath
+    val day0 = Seq((1L, 1.0, 1L), (1L, 1.5, 3L), (1L, 1.2, 2L),
+      (2L, 2.0, 1L), (3L, 3.0, 1L), (3L, 3.5, 2L))
+      .toDF("key", "val", "updated_at")
+    val expected = Set((1L, 1.5, 3L), (2L, 2.0, 1L), (3L, 3.5, 2L))
+    UpsertWriter.upsertBucketed(day0, s"$dir/b", Seq("key"), "updated_at", 4)
+    val bucketed = UpsertWriter.readBucketed(spark, s"$dir/b")
+    assert(bucketed.count() == 3)
+    assert(canon(bucketed) == expected)
+    UpsertWriter.upsertParquet(day0, s"$dir/p", Seq("key"), "updated_at")
+    val full = graft.core.Parquet.read(spark, s"$dir/p")
+    assert(full.count() == 3)
+    assert(canon(full) == expected)
+  }
+
   test("writer lock: a held lock fails a second writer fast; a stale " +
       "lock is broken; the lock is released after success") {
     val dir = java.nio.file.Files.createTempDirectory("lock").toString
