@@ -43,37 +43,17 @@ import java.nio.file.{Files, Paths}
   *  - failures are recorded per-query and fail the run (nonzero exit),
   *    never silently timed as fast queries;
   *  - the JSON line goes to stdout AND to BENCH.json in the working
-  *    directory so log-tail truncation cannot lose it.
+  *    directory so log-tail truncation cannot lose it;
+  *  - `shared_prefix` maps each consumer query to the sorted list of
+  *    owner queries whose [[graft.core.Shared]] results it reuses (a
+  *    query may consume several owners' results: q_x_modularity reads
+  *    q_x_lpa's assignment and q_x_triangles' pair frame). A consumer's
+  *    minimum comes from a run where those results were warm, so it is
+  *    not its standalone cost.
   */
 object Bench {
   private val IsoTriggerSec = 3.0
   private val IsoCap = 12
-
-  /** Consumer -> owner map of the cross-query shared prefixes (the
-    * owner/consumer memo discipline: the OWNER always recomputes the
-    * shared artifact and refreshes the memo, so the chain's cost is in
-    * the bench total exactly once; a CONSUMER reuses it when warm).
-    * Emitted into BENCH.json so nobody reads a consumer's memo-warm
-    * minimum (headline = min over passes, and in pass 2/iso the memo
-    * is warm) as its standalone cost. Keep in sync with the TrieMap
-    * memos in LinkQueries / LearnQueries / ExtQueries — BenchSpec
-    * asserts every name here is a declared query and every consumer
-    * names a different query as owner. */
-  private[graft] val SharedPrefix: Map[String, String] = Map(
-    "q_x_ppr" -> "q_x_pagerank",              // coEdgeShared
-    "q_x_linkpred" -> "q_x_triangles",        // pairShared
-    "q_x_assortativity" -> "q_x_triangles",   // pairShared
-    "q_x_kcore" -> "q_x_triangles",           // pairShared
-    "q_x_lpa" -> "q_x_triangles",             // pairShared (owns lpaShared)
-    "q_x_modularity" -> "q_x_lpa",            // lpaShared (+ pairShared)
-    "q_x_clustering_coef" -> "q_x_triangles", // triShared + pairShared
-    "q_x_item_cf" -> "q_x_triangles",         // pairShared + ordShared
-    "q_x_confusion" -> "q_x_naive_bayes",     // nbShared
-    "q_x_kappa" -> "q_x_naive_bayes",         // nbShared
-    "q_x_ann_ivfpq" -> "q_x_ann_ivf_recall",  // ivf16Shared
-    "q_x_ann_ivfpq_res" -> "q_x_ann_ivf_recall",
-    "q_x_ann_ivfpq_res8" -> "q_x_ann_ivf_recall",
-    "q_x_ann_pq_serve" -> "q_x_ann_pq")       // pq24Shared
 
   /** One cheap query per fixture family — warms the session (JIT,
     * codegen cache, parquet footers for all ten tables) without a full
@@ -139,6 +119,7 @@ object Bench {
     subset.foreach(qs => qs.foreach(q =>
       require(SparkEntry.queries.contains(q), s"unknown bench query: $q")))
     val names = subset.getOrElse(SparkEntry.queries.keys.toSeq).sorted
+    val sharedPrefix = SparkEntry.sharedPrefix
 
     WarmupReps.filter(SparkEntry.queries.contains).foreach(runOnce)
     System.err.println(f"[bench] warm-up done at ${elapsedSec}%.0f s; pass 1 over ${names.size} queries")
@@ -165,8 +146,8 @@ object Bench {
       val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val total = results.map(_._2._1).sum
       val prov = if (provisional) ""","provisional":true""" else ""
-      val shared = results.flatMap { case (n, _) => SharedPrefix.get(n)
-          .map(o => s""""$n":"$o"""") }
+      val shared = results.flatMap { case (n, _) => sharedPrefix.get(n)
+          .map(os => s""""$n":${os.map("\"" + _ + "\"").mkString("[", ",", "]")}""") }
         .mkString("{", ",", "}")
       val json = s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"passes":$detail,"shared_prefix":$shared,"failed":$failedJson,"sf":"$sfDir"$prov}"""
       Files.writeString(Paths.get("BENCH.json"), json + "\n")

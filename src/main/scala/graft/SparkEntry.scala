@@ -52,6 +52,13 @@ object SparkEntry {
       }
     }
 
+  /** Consumer query -> the sorted owner queries of the
+    * [[graft.core.Shared]] results it reuses. */
+  def sharedPrefix: Map[String, Seq[String]] = {
+    queries // initializes every query object, which declares its results
+    graft.core.Shared.owners
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] =

@@ -50,14 +50,13 @@ object Recommend {
     * @param topK       neighbors kept per item (cosine desc, item asc).
     * @param maxBasketSize baskets with more distinct items than this
     *                   are dropped before pairing.
-    * @param prebuilt   optional shared frames derived from `baskets`
-    *                   (the clusteringCoef triCounts convention):
+    * @param prebuilt   optional shared frames derived from `baskets`:
     *                   (distinct (basketCol, itemCol) rows,
     *                    per-basket a<b distinct pair rows
     *                    (basketCol, a, b)). Must be exactly what this
     *                   method would derive itself — the caller owns
-    *                   that contract (in-repo: the memoized
-    *                   co-purchase frames the graph family shares).
+    *                   that contract (in-repo: the shared
+    *                   co-purchase result of the graph family).
     */
   def itemItemCf(baskets: DataFrame, basketCol: String, itemCol: String,
       minSupport: Int, topK: Int, maxBasketSize: Int,

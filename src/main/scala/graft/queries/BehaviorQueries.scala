@@ -1139,16 +1139,14 @@ object BehaviorQueries {
   private val itemCfTopK = 5
   private val itemCfMaxBasket = 20
 
-  /** Consumer of the graph family's memoized co-purchase frames
-    * (owner: q_x_triangles — see LinkQueries.coPurchaseOrdPairs): the
-    * distinct (order, part) rows explode out of the shared basket-array
-    * checkpoint and the a<b pair rows come from the shared pair
-    * checkpoint, so item_cf never re-pays the basket-squared explode
-    * the whole co-purchase family shares (guide §2.4). Bit-identical
-    * to deriving both from lineitem (same distinct/same pair multiset);
-    * the oracle pins it. */
+  /** Reads the co-purchase family's shared basket and pair frames
+    * ([[LinkQueries.coPurchase]]): the distinct (order, part) rows
+    * explode out of the basket-array frame and the a<b pair rows come
+    * from the pair frame, so item_cf never re-pays the basket-squared
+    * explode (guide §2.4). Bit-identical to deriving both from
+    * lineitem (same distinct/same pair multiset); the oracle pins it. */
   private val itemCfQ: QFn = (s, d) => {
-    val (ord, pairs) = LinkQueries.coPurchaseOrdPairs(s, d)
+    val LinkQueries.CoPurchase(ord, pairs) = LinkQueries.coPurchase(s, d)
     graft.ext.Recommend.itemItemCf(
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey")),

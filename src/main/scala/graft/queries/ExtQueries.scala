@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Shared, Tables}
 import graft.ext.{Dedup, Hashing, Multimodal, Similarity, TextStats}
 import Q._
 
@@ -1001,35 +1001,17 @@ object ExtQueries {
       |  (SELECT COUNT(*) FROM embeddings WHERE vec_id % 5 = 0) AS n_queries,
       |  CAST(1 AS BOOLEAN) AS pass""".stripMargin
 
-  /** k=16 IVF index shared by the four queries that build the
-    * IDENTICAL deterministic artifact (q_x_ann_ivf_recall,
-    * q_x_ann_ivfpq, q_x_ann_ivfpq_res, q_x_ann_ivfpq_res8) — the
-    * triCounts owner/consumer pattern: q_x_ann_ivf_recall (owner)
-    * always rebuilds and refreshes the memo so its benched time is the
-    * real build; consumers reuse when present, so the build chain is
-    * counted once and never vanishes from every headline. Both frames
-    * come out of ivfIndex already localCheckpointed. */
-  private val ivf16Shared = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def ivf16Fresh(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val t = Similarity.ivfIndex(Tables.embeddings(s, d), k = 16)
-    ivf16Shared.put((s, d), t)
-    t
+  /** The k=16 IVF index (both frames come out of ivfIndex already
+    * localCheckpointed). */
+  private val ivf16 = Shared("q_x_ann_ivf_recall", "q_x_ann_ivfpq",
+      "q_x_ann_ivfpq_res", "q_x_ann_ivfpq_res8") { (s, d) =>
+    Similarity.ivfIndex(Tables.embeddings(s, d), k = 16)
   }
-  private def ivf16(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ivf16Shared.getOrElse((s, d), ivf16Fresh(s, d))
 
-  /** (m=2, k=4) PQ codebook+codes shared the same way: q_x_ann_pq is
-    * the owner, q_x_ann_pq_serve the consumer. */
-  private val pq24Shared = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def pq24Fresh(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val t = Similarity.pqTrain(Tables.embeddings(s, d), m = 2, k = 4)
-    pq24Shared.put((s, d), t)
-    t
+  /** The (m=2, k=4) PQ codebook and codes. */
+  private val pq24 = Shared("q_x_ann_pq", "q_x_ann_pq_serve") { (s, d) =>
+    Similarity.pqTrain(Tables.embeddings(s, d), m = 2, k = 4)
   }
-  private def pq24(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    pq24Shared.getOrElse((s, d), pq24Fresh(s, d))
 
   /** IVF recall@1 self-check, same contract as the LSH one: ground truth
     * is each perturbed query's original; the oracle pins the verdict. */
@@ -1038,7 +1020,7 @@ object ExtQueries {
     // an index is a cross-job artifact: build once, persist, and probe
     // the LOADED parquet tables — the path every later job takes (the
     // in-session frames are localCheckpoints, session-lifetime only)
-    val (builtC, builtI) = ivf16Fresh(s, d)
+    val (builtC, builtI) = ivf16.fresh(s, d)
     // fixed per-dataset location, overwritten each run — repeated bench
     // passes must not leak an index copy per invocation
     val idxPath = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -1124,7 +1106,7 @@ object ExtQueries {
     * decimal-summed ADC ranking — so codebooks, codes and scores are
     * all bit-adjudicated. */
   private val annPq: QFn = (s, d) => {
-    val (book, codes) = pq24Fresh(s, d)
+    val (book, codes) = pq24.fresh(s, d)
     val q = perturbed(s, d)
       .select(col("qid").as("vec_id"), col("qv").as("embedding"))
     // serve over the packed one-row-per-vector layout; the oracle's

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Shared, Tables}
 import graft.ext.{Classifier, Hashing}
 import Q._
 
@@ -389,15 +389,8 @@ object LearnQueries {
     * fallbacks — then the per-doc log-posterior sums and the argmax,
     * so training-as-counting is adjudicated end to end, like the GD
     * trajectory rows. */
-  /** Adjudicated NB prediction frame shared by the three queries that
-    * consume the IDENTICAL deterministic chain (q_x_naive_bayes,
-    * q_x_confusion, q_x_kappa) — the triCounts owner/consumer
-    * pattern: q_x_naive_bayes (owner) always recomputes and refreshes
-    * the memo, so its benched time is the real train+score chain;
-    * the eval rows reuse and pay only their own eval math. */
-  private val nbShared = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]()
-  private def nbFresh(s: SparkSession, d: String): DataFrame = {
+  private val nbPred = Shared("q_x_naive_bayes", "q_x_confusion",
+      "q_x_kappa") { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
       Hashing.tokens(col("text")).as("tk"))
     val sp = graft.ext.Sampling.splitAssign(docs, "doc_id",
@@ -406,19 +399,15 @@ object LearnQueries {
     val vl = sp.where(col("split") =!= "train")
     val pred = graft.ext.NaiveBayes.predict(
       graft.ext.NaiveBayes.score(tr, vl, "doc_id", "lang", "tk"), "doc_id")
-    val out = pred
+    pred
       .join(vl.select(col("doc_id"), col("lang").as("true_lang")),
         Seq("doc_id"))
       .select(col("doc_id"), col("pred"), col("best_score"),
         col("true_lang"))
       .localCheckpoint()
-    nbShared.put((s, d), out)
-    out
   }
-  private def nbPred(s: SparkSession, d: String): DataFrame =
-    nbShared.getOrElse((s, d), nbFresh(s, d))
 
-  private val nbQ: QFn = (s, d) => nbFresh(s, d)
+  private val nbQ: QFn = nbPred.fresh
 
   /** Documents -> (doc_id, lang, tk) token CTE — shared by both NB
     * oracles. */

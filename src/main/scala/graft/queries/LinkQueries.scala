@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Shared, Tables}
 import graft.ext.{FuzzyJoin, Hashing, Scd2}
 import Q._
 
@@ -165,38 +165,23 @@ object LinkQueries {
   private val pagerankIters = 5
   private val pagerankDamp = "0.85"
 
-  /** Weighted co-purchase edge frame + part node frame shared by
-    * q_x_pagerank (owner) and q_x_ppr (consumer) — both rebuild the
-    * IDENTICAL deterministic artifact from lineitem, and its
-    * basket-squared explode was each query's single most expensive
-    * prefix (the triCounts owner/consumer pattern; guide §2.4/§2.6).
-    * The basket frame is cut before the explode so the fan-out stage
-    * runs at cluster width instead of the 3 AQE-coalesced partitions
-    * of the groupBy output (guide §2.6 — starved fan-out). */
-  private val coEdgeShared = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def coEdgesFresh(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-    val ord = li.groupBy("l_orderkey")
-      .agg(array_sort(array_distinct(collect_list(col("l_partkey"))))
-        .as("ps"))
-    val e = graft.ext.Checkpoints
-      .spread(ord.localCheckpoint())
-      .select(explode(col("ps")).as("a"), col("ps"))
-      .select(col("a"), explode(col("ps")).as("b"))
-      .where(col("a") =!= col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("w"))
+  /** Directed weighted co-purchase edges (w = orders holding both
+    * parts) and the part node frame, derived from the shared a<b pair
+    * frame: the per-pair row count, plus its swapped copy, is the a≠b
+    * self-join count without a second basket build. */
+  private val coEdges = Shared("q_x_pagerank", "q_x_ppr") { (s, d) =>
+    val w = coPurchase(s, d).pairs.groupBy("a", "b")
+      .agg(count(lit(1)).as("w"))
+    val e = w.unionByName(w.select(col("b").as("a"), col("a").as("b"),
+        col("w")))
       .localCheckpoint()
-    val nodes = li.select(col("l_partkey")).distinct().localCheckpoint()
-    val t = (e, nodes)
-    coEdgeShared.put((s, d), t)
-    t
+    val nodes = Tables.lineitem(s, d).select(col("l_partkey")).distinct()
+      .localCheckpoint()
+    (e, nodes)
   }
-  private def coEdges(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    coEdgeShared.getOrElse((s, d), coEdgesFresh(s, d))
 
   private val pagerankQ: QFn = (s, d) => {
-    val (e, nodes) = coEdgesFresh(s, d)
+    val (e, nodes) = coEdges.fresh(s, d)
     graft.ext.Graph.pageRank(e, "a", "b", "w", nodes, "l_partkey",
         iters = pagerankIters, damping = pagerankDamp.toDouble)
       .select(col("node").cast("long").as("part"), col("rank"))
@@ -397,83 +382,55 @@ object LinkQueries {
 
   // ===== triangle counting ============================================
 
-  /** Per-part triangle counts over the undirected co-purchase graph.
-    * ENGINE: degree-ordered orientation (O(m^1.5) wedges); ORACLE: the
-    * naive a<b<c three-way self-join — brute force adjudicates the
-    * orientation trick, integer-exact. */
-  /** Raw a<b co-purchase pair frame (order multiplicities kept) —
-    * the basket-squared explode every query of the co-purchase family
-    * (triangles, clustering coef, link prediction, assortativity,
-    * k-core, LPA, modularity) used to rebuild from scratch, ~2 s of
-    * identical deterministic work per query at sf0.1. Shared with the
-    * triCounts owner/consumer discipline: q_x_triangles (owner, via
-    * triCountsFresh) always recomputes and refreshes the memo, so the
-    * build cost never vanishes from every headline; the others reuse
-    * when present. The basket frame is cut before the explode so the
-    * fan-out runs at cluster width instead of the AQE-coalesced
-    * handful of partitions of the groupBy output (guide §2.6). */
-  private val pairShared =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  /** The checkpointed (l_orderkey, ps) basket-array frame the pair
-    * explode runs over — memoized alongside [[pairShared]] (always put
-    * together in [[coPurchasePairsFresh]]) so q_x_item_cf can derive
-    * its distinct (basket, item) rows by exploding it instead of
-    * re-scanning lineitem and paying a distinct shuffle. */
-  private val ordShared =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def coPurchasePairsFresh(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-    val ord = li.groupBy("l_orderkey")
+  /** The co-purchase family's shared prefix (triangles, clustering
+    * coef, link prediction, assortativity, k-core, LPA, modularity,
+    * pagerank, item_cf): `ord`, the checkpointed (l_orderkey, ps)
+    * basket-array frame, and `pairs`, its basket-squared explode into
+    * raw a<b pair rows (order multiplicities kept), ~2 s of work at
+    * sf0.1. The basket id rides along in `pairs` (one long per row):
+    * q_x_item_cf needs per-basket pair rows for its basket-size guard
+    * and explodes `ord` for its distinct (basket, item) rows; the graph
+    * queries select (a, b) and never see it. The basket frame is cut
+    * before the explode so the fan-out runs at cluster width instead of
+    * the AQE-coalesced handful of partitions of the groupBy output
+    * (guide §2.6). */
+  private[graft] final case class CoPurchase(ord: DataFrame, pairs: DataFrame)
+  private[graft] val coPurchase = Shared("q_x_triangles", "q_x_pagerank",
+      "q_x_linkpred", "q_x_assortativity", "q_x_kcore", "q_x_lpa",
+      "q_x_modularity", "q_x_clustering_coef", "q_x_item_cf") { (s, d) =>
+    val ord = Tables.lineitem(s, d).groupBy("l_orderkey")
       .agg(array_sort(array_distinct(collect_list(col("l_partkey"))))
         .as("ps"))
     val ordCk = graft.ext.Checkpoints.spread(ord.localCheckpoint())
-    ordShared.put((s, d), ordCk)
-    // the basket id rides along (one long per row): q_x_item_cf needs
-    // per-basket pair rows to apply its basket-size guard; the graph
-    // consumers keep selecting (a, b) and never see it
-    val t = ordCk
+    val pairs = ordCk
       .select(col("l_orderkey").as("o"), explode(col("ps")).as("a"),
         col("ps"))
       .select(col("o"), col("a"), explode(col("ps")).as("b"))
       .where(col("a") < col("b"))
       .localCheckpoint()
-    pairShared.put((s, d), t)
-    t
+    CoPurchase(ordCk, pairs)
   }
   private def coPurchasePairs(s: SparkSession, d: String): DataFrame =
-    pairShared.getOrElse((s, d), coPurchasePairsFresh(s, d))
-  /** (basket-array frame, per-basket a<b pair frame) for the
-    * q_x_item_cf consumer — same memo discipline as [[coPurchasePairs]]
-    * (owner q_x_triangles always rebuilds; consumers reuse when warm). */
-  private[queries] def coPurchaseOrdPairs(
-      s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val p = coPurchasePairs(s, d)
-    (ordShared((s, d)), p)
+    coPurchase(s, d).pairs
+
+  /** Per-node triangle counts: clusteringCoef grades the SAME wedge
+    * recount triangleCounts runs, and the O(m^1.5) closing join is the
+    * bench's second most expensive prefix. */
+  private val triCounts = Shared("q_x_triangles", "q_x_clustering_coef") {
+    (s, d) =>
+      graft.ext.Graph.triangleCounts(coPurchasePairs(s, d), "a", "b")
+        .localCheckpoint()
   }
 
-  /** Per-node triangle counts shared by q_x_triangles and
-    * q_x_clustering_coef (the lpaAssign owner/consumer pattern):
-    * clusteringCoef grades the SAME wedge recount triangleCounts
-    * already ran — the O(m^1.5) closing join is the bench's second
-    * most expensive prefix. q_x_triangles (owner) always recomputes
-    * and refreshes the memo; q_x_clustering_coef (consumer) reuses
-    * when present — the chain is counted once per pair and never
-    * vanishes from both headlines. Deterministic, hash-stable. */
-  private val triShared =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def triCountsFresh(s: SparkSession, d: String): DataFrame = {
-    val t = graft.ext.Graph.triangleCounts(coPurchasePairsFresh(s, d),
-        "a", "b")
-      .localCheckpoint()
-    triShared.put((s, d), t)
-    t
-  }
-  private def triCounts(s: SparkSession, d: String): DataFrame =
-    triShared.getOrElse((s, d), triCountsFresh(s, d))
-
-  private val trianglesQ: QFn = (s, d) =>
-    triCountsFresh(s, d)
+  /** Per-part triangle counts over the undirected co-purchase graph.
+    * ENGINE: degree-ordered orientation (O(m^1.5) wedges); ORACLE: the
+    * naive a<b<c three-way self-join — brute force adjudicates the
+    * orientation trick, integer-exact. */
+  private val trianglesQ: QFn = (s, d) => {
+    coPurchase.fresh(s, d)
+    triCounts.fresh(s, d)
       .select(col("node").cast("long").as("part"), col("n_tri"))
+  }
 
   private val trianglesSql =
     """WITH ord AS (
@@ -801,32 +758,15 @@ object LinkQueries {
     p.unionByName(p.select(col("b").as("a"), col("a").as("b")))
   }
 
-  /** The LPA assignment is the single most expensive shared prefix on
-    * the bench (the full iteration chain costs ~6 s at sf0.1), and BOTH
-    * q_x_lpa and q_x_modularity need it — q_x_modularity grades the
-    * very partition q_x_lpa emits. Memoize the assignment per
-    * (session, fixture dir) behind a localCheckpoint with OWNER /
-    * CONSUMER roles: q_x_lpa (the owner) always recomputes the chain
-    * and refreshes the memo — its benched time is always the real
-    * chain cost — while q_x_modularity (the consumer) reuses the
-    * ~|V|-row checkpointed result when present, so the pair's combined
-    * cost counts the chain exactly ONCE and each query's headline is
-    * at least its own serving cost. LPA is deterministic, so sharing
-    * cannot move a hash.
-    */
-  private val lpaShared =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private def lpaAssignFresh(s: SparkSession, d: String): DataFrame = {
-    val a = graft.ext.Graph.labelPropagation(coPurchaseEdges(s, d),
-      "a", "b", lpaRounds).localCheckpoint()
-    lpaShared.put((s, d), a)
-    a
+  /** The LPA assignment: its iteration chain costs ~6 s at sf0.1, and
+    * q_x_modularity grades the very partition q_x_lpa emits. */
+  private val lpaAssign = Shared("q_x_lpa", "q_x_modularity") { (s, d) =>
+    graft.ext.Graph.labelPropagation(coPurchaseEdges(s, d), "a", "b",
+      lpaRounds).localCheckpoint()
   }
-  private def lpaAssign(s: SparkSession, d: String): DataFrame =
-    lpaShared.getOrElse((s, d), lpaAssignFresh(s, d))
 
   private val lpaQ: QFn = (s, d) =>
-    lpaAssignFresh(s, d)
+    lpaAssign.fresh(s, d)
       .select(col("node").cast("long").as("node"), col("community"))
 
   private val lpaSql = {

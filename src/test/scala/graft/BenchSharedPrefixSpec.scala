@@ -2,34 +2,66 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared-prefix ledger Bench emits into BENCH.json must stay
-  * coherent with the declared query surface: every consumer and owner
-  * is a real query, nobody owns itself, and the owner chain always
-  * terminates at a query that recomputes from scratch (no memo
-  * cycles — the owner-always-recomputes discipline needs exactly one
-  * always-fresh root per artifact). */
+/** The shared-prefix ledger Bench emits into BENCH.json, derived from
+  * the [[graft.core.Shared]] declarations, must stay coherent with the
+  * declared query surface: every consumer and owner is a real query,
+  * no query owns a result it consumes, and the owner chains always
+  * terminate at a query that recomputes from scratch (the
+  * owner-always-recomputes discipline needs one always-fresh root per
+  * result). */
 class BenchSharedPrefixSpec extends AnyFunSuite {
 
+  private lazy val prefix = SparkEntry.sharedPrefix
+
   test("every shared-prefix consumer and owner is a declared query") {
-    Bench.SharedPrefix.foreach { case (consumer, owner) =>
+    assert(prefix.nonEmpty)
+    prefix.foreach { case (consumer, owners) =>
       assert(SparkEntry.queries.contains(consumer),
         s"consumer $consumer is not a declared query")
-      assert(SparkEntry.queries.contains(owner),
-        s"owner $owner is not a declared query")
-      assert(consumer != owner, s"$consumer cannot own its own prefix")
+      assert(owners.nonEmpty && owners == owners.distinct.sorted,
+        s"owners of $consumer are not a sorted, distinct, non-empty list")
+      owners.foreach(o => assert(SparkEntry.queries.contains(o),
+        s"owner $o is not a declared query"))
+    }
+  }
+
+  test("no query owns a result it consumes") {
+    prefix.foreach { case (consumer, owners) =>
+      assert(!owners.contains(consumer), s"$consumer owns its own prefix")
     }
   }
 
   test("owner chains terminate (no memo cycles)") {
-    Bench.SharedPrefix.keys.foreach { q =>
-      var cur = q
-      var hops = 0
-      while (Bench.SharedPrefix.contains(cur)) {
-        cur = Bench.SharedPrefix(cur)
-        hops += 1
-        assert(hops <= Bench.SharedPrefix.size,
-          s"owner chain from $q does not terminate")
-      }
+    def visit(q: String, path: List[String]): Unit = {
+      assert(!path.contains(q),
+        s"owner chain ${(q :: path).reverse.mkString(" -> ")} cycles")
+      prefix.getOrElse(q, Nil).foreach(visit(_, q :: path))
     }
+    prefix.keys.foreach(visit(_, Nil))
+  }
+
+  test("the ledger keeps every consumer -> owner pair of the old hand map") {
+    val expected = Seq(
+      "q_x_ppr" -> "q_x_pagerank",
+      "q_x_linkpred" -> "q_x_triangles",
+      "q_x_assortativity" -> "q_x_triangles",
+      "q_x_kcore" -> "q_x_triangles",
+      "q_x_lpa" -> "q_x_triangles",
+      "q_x_modularity" -> "q_x_lpa",
+      "q_x_clustering_coef" -> "q_x_triangles",
+      "q_x_item_cf" -> "q_x_triangles",
+      "q_x_confusion" -> "q_x_naive_bayes",
+      "q_x_kappa" -> "q_x_naive_bayes",
+      "q_x_ann_ivfpq" -> "q_x_ann_ivf_recall",
+      "q_x_ann_ivfpq_res" -> "q_x_ann_ivf_recall",
+      "q_x_ann_ivfpq_res8" -> "q_x_ann_ivf_recall",
+      "q_x_ann_pq_serve" -> "q_x_ann_pq",
+      // pagerank derives its edges from the triangles pair frame
+      "q_x_pagerank" -> "q_x_triangles")
+    expected.foreach { case (consumer, owner) =>
+      assert(prefix.getOrElse(consumer, Nil).contains(owner),
+        s"$consumer -> $owner missing from ${prefix.get(consumer)}")
+    }
+    assert(prefix("q_x_modularity") == Seq("q_x_lpa", "q_x_triangles"))
   }
 }

@@ -14,10 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * session rather than inheriting the corpse. `SparkSpec.session()`
   * checks `isStopped` and clears the dead default/active session before
   * getOrCreate, so at most the suite that hosted the death fails and
-  * every subsequent suite runs on a fresh context. Operator memos
-  * (LinkQueries/ExtQueries/LearnQueries shared frames) are keyed by
-  * SparkSession, so a fresh session can never be served a frame whose
-  * blocks died with the old context.
+  * every subsequent suite runs on a fresh context. Shared query
+  * results ([[graft.core.Shared]]) are keyed by SparkSession and drop
+  * the entries of a stopped context at the next lookup, so a fresh
+  * session can never be served a frame whose blocks died with the old
+  * context.
   *
   * `spark` stays a `lazy val` (a stable identifier — 79 suites do
   * `import spark.implicits._`), so freshness is per-suite, which is as
