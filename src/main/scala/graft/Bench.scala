@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Per-round benchmark over the full oracle-checked query surface.
@@ -71,21 +70,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "1450").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Codegen compile failures normally fall back to interpreted
-      // execution — correct but several times slower, and invisible in a
-      // timing-only harness. The bench is the perf gate, so make them
-      // loud failures instead.
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session("graft-bench")
     // fixture-vintage gate (same as Verify): fail loudly in one place
     // on fixture schema drift instead of timing 150 broken queries
     graft.core.Tables.preflight(spark, sfDir)
@@ -113,12 +99,8 @@ object Bench {
 
     // SPARK_GRAFT_QUERIES=a,b,c restricts the run to a subset — the
     // isolation knob for re-measuring one query without the other 100
-    // sharing the same JVM (unknown names fail loudly).
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    subset.foreach(qs => qs.foreach(q =>
-      require(SparkEntry.queries.contains(q), s"unknown bench query: $q")))
-    val names = subset.getOrElse(SparkEntry.queries.keys.toSeq).sorted
+    // sharing the same JVM.
+    val names = SparkEntry.selected
     val sharedPrefix = SparkEntry.sharedPrefix
 
     WarmupReps.filter(SparkEntry.queries.contains).foreach(runOnce)

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Tables
 import graft.ext.{Bpe, Hashing}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -24,16 +23,7 @@ import java.nio.file.{Files, Paths}
 object BpeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session("graft-bpe-bench")
 
     def rs(env: String, dflt: String): Seq[Int] =
       sys.env.getOrElse(env, dflt).split(",").map(_.trim.toInt).toSeq

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.{Parquet, Tables}
 import graft.ext.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -28,16 +27,7 @@ import java.nio.file.{Files, Paths}
   */
 object RecallSweep {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session("graft-recall-sweep")
 
     val sfs = sys.env.getOrElse("SPARK_GRAFT_SWEEP_SFS", "0.001,0.01,0.1")
       .split(",").map(_.trim).toSeq

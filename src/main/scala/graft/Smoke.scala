@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry and
   * checks rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session("graft-smoke")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

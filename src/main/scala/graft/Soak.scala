@@ -197,16 +197,7 @@ object Soak {
     val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_DIR",
       "/tmp/graft_soak_sf1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session("graft-soak")
 
     if (!Files.exists(Paths.get(out, "documents.parquet"))) {
       System.err.println(s"[soak] generating ${replicas}x fixtures at $out")
@@ -226,14 +217,9 @@ object Soak {
     graft.core.Tables.preflight(spark, out)
 
     // FULL surface by default (VERDICT r9 #2): every oracle query gets
-    // a measured second-decade scaling exponent. SPARK_GRAFT_SOAK_QUERIES
+    // a measured second-decade scaling exponent. SPARK_GRAFT_QUERIES
     // =a,b,c restricts the run (fast local iteration; merge by hand).
-    val allNames = SparkEntry.queries.keys.toSeq.sorted
-    val names = sys.env.get("SPARK_GRAFT_SOAK_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(allNames)
-    names.foreach(n => require(SparkEntry.queries.contains(n),
-      s"unknown soak query: $n"))
+    val names = SparkEntry.selected
 
     def runOnce(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -52,6 +52,21 @@ object SparkEntry {
       }
     }
 
+  /** The sorted query names of a comma list. Empty or unknown names
+    * fail loudly: a typo must not produce a vacuous green run. */
+  def named(list: String): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(queries.contains)
+    require(names.nonEmpty && unknown.isEmpty,
+      s"empty or unknown queries in '$list': ${unknown.mkString(",")}")
+    names.distinct.sorted
+  }
+
+  /** The queries a harness main runs, sorted: every query, or the
+    * subset named by `SPARK_GRAFT_QUERIES=a,b,c`. */
+  def selected: Seq[String] =
+    sys.env.get("SPARK_GRAFT_QUERIES").fold(queries.keys.toSeq.sorted)(named)
+
   /** Consumer query -> the sorted owner queries of the
     * [[graft.core.Shared]] results it reuses. */
   def sharedPrefix: Map[String, Seq[String]] = {

@@ -1,40 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session("graft-verify")
     // fixture-vintage gate: ANY schema drift in the driver's parquet
     // fixtures fails here as one readable message, not as 150
     // scattered per-query analysis errors (the round-8 lesson)
     graft.core.Tables.preflight(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for fast local iteration; the
-    // driver sets nothing and gets the full surface. Unknown names are
-    // a loud failure — a typo must not produce a vacuous green run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(names.nonEmpty && unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY: empty or unknown queries: ${unknown.mkString(",")}")
-    }
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // SPARK_GRAFT_QUERIES=a,b,c restricts the run for fast local
+    // iteration; unset, the run covers the full surface.
+    val queries = SparkEntry.queries
+    val selected = SparkEntry.selected
     println(s"[verify] running ${selected.size} queries")
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    selected.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

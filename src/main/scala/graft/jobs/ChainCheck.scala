@@ -14,7 +14,7 @@ import graft.jobs.stages.StageIO
 object ChainCheck {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-chain-check")
+    val s = graft.core.Session("graft-chain-check")
     def landed(t: String) = StageIO.read(s, lake, t)
     val expected = DailyChain.run(
       landed("game_records"), landed("hitters"), landed("pitchers"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.jobs.DailyChain
 import graft.kbo.{Metrics, Records}
-import graft.core.Parquet
+import graft.core.{Parquet, Session}
 
 /** The deployment face of the daily chain: one thin `spark-submit`
   * main per reference DAG stage, exchanging REFERENCE-SHAPED parquet
@@ -29,24 +29,6 @@ import graft.core.Parquet
   * derivations the oracle queries use).
   */
 object StageIO {
-
-  /** Session for a stage main: under `spark-submit` the master comes
-    * from the submit conf; standalone (tests, local runs) falls back
-    * to local cores with right-sized shuffle partitions. */
-  def session(name: String): SparkSession = {
-    val b = SparkSession.builder().appName(name)
-      .config("spark.sql.session.timeZone", "UTC")
-    val s =
-      if (SparkSession.getActiveSession.isDefined ||
-          sys.props.contains("spark.master")) b.getOrCreate()
-      else {
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        b.master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus).getOrCreate()
-      }
-    graft.GraftExtensions.ensureRegistered(s)
-    s
-  }
 
   /** A landed lake table. Its schema is read from the table's footer
     * on the driver ([[graft.core.Parquet.read]]), so a stage main
@@ -161,7 +143,7 @@ object Stage000LandTables {
 
   def main(args: Array[String]): Unit = {
     val Array(fixture, lake) = args
-    val s = StageIO.session("graft-000-land")
+    val s = Session("graft-000-land")
     tables(s, fixture).foreach { case (name, df) =>
       StageIO.write(df, lake, name)
     }
@@ -183,7 +165,7 @@ object Stage000LandTables {
 object Stage031LineupTriggers {
   def main(args: Array[String]): Unit = {
     val Array(lake, nowIso, lead, horizon) = args
-    val s = StageIO.session("graft-031-lineup-triggers")
+    val s = Session("graft-031-lineup-triggers")
     val due = graft.streaming.EventPipeline.dueWithin(
       StageIO.read(s, lake, "today_games"),
       java.sql.Timestamp.valueOf(nowIso), horizon.toInt)
@@ -202,7 +184,7 @@ object Stage031LineupTriggers {
 object Stage001ParkFactor {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-001-park-factor")
+    val s = Session("graft-001-park-factor")
     StageIO.write(Metrics.parkFactor(StageIO.read(s, lake, "game_records")),
       lake, "park_factor")
   }
@@ -212,7 +194,7 @@ object Stage001ParkFactor {
 object Stage011HitterWoba {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-011-woba")
+    val s = Session("graft-011-woba")
     StageIO.write(Metrics.hitterWoba(StageIO.read(s, lake, "hitters")),
       lake, "hitter_woba")
   }
@@ -222,7 +204,7 @@ object Stage011HitterWoba {
 object Stage012HitterWrc {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-012-wrc")
+    val s = Session("graft-012-wrc")
     StageIO.write(
       Metrics.hitterWrc(StageIO.read(s, lake, "game_records"),
         StageIO.read(s, lake, "hitters"),
@@ -235,7 +217,7 @@ object Stage012HitterWrc {
 object Stage013HitterRates {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-013-rates")
+    val s = Session("graft-013-rates")
     StageIO.write(Metrics.hitterRates(StageIO.read(s, lake, "hitters")),
       lake, "hitter_rates")
   }
@@ -245,7 +227,7 @@ object Stage013HitterRates {
 object Stage021PitcherMetrics {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-021-pitcher-metrics")
+    val s = Session("graft-021-pitcher-metrics")
     StageIO.write(Metrics.pitcherMetrics(StageIO.read(s, lake, "pitchers")),
       lake, "pitcher_metrics")
   }
@@ -256,7 +238,7 @@ object Stage021PitcherMetrics {
 object Stage041HitterMetrics {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-041-hitter-metrics")
+    val s = Session("graft-041-hitter-metrics")
     val wrc = StageIO.read(s, lake, "hitter_wrc")
     val adjustedOne = DailyChain.adjustedOnePerHitter(
       StageIO.read(s, lake, "today_lineup"),
@@ -274,7 +256,7 @@ object Stage041HitterMetrics {
 object Stage050HitterRecords {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-050-hitter-records")
+    val s = Session("graft-050-hitter-records")
     StageIO.write(
       Records.wideRecord(StageIO.read(s, lake, "today_lineup"),
         StageIO.read(s, lake, "hitters"),
@@ -298,7 +280,7 @@ object Stage050HitterRecords {
 object Stage070FiveInnings {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-070-five-innings")
+    val s = Session("graft-070-five-innings")
     StageIO.write(
       Metrics.fiveInningResult(StageIO.read(s, lake, "scoreboard")),
       lake, "game_records_until_5_innings")
@@ -309,7 +291,7 @@ object Stage070FiveInnings {
 object Stage060PitcherRecords {
   def main(args: Array[String]): Unit = {
     val Array(lake) = args
-    val s = StageIO.session("graft-060-pitcher-records")
+    val s = Session("graft-060-pitcher-records")
     StageIO.write(
       Records.wideRecord(StageIO.read(s, lake, "today_lineup"),
         StageIO.read(s, lake, "pitchers"),

@@ -38,15 +38,11 @@ object SparkSpec {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
     }
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
+    // specs that save tables write them under a temp warehouse, not
+    // the working directory; as a system property it reaches every
+    // context this JVM starts
+    sys.props.getOrElseUpdate("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    graft.core.Session("graft-test", cpus = 2)
   }
 }

@@ -3,7 +3,7 @@ package graft.core
 import graft.SparkSpec
 import graft.jobs.stages._
 import graft.sinks.UpsertWriter
-import org.apache.spark.TestListenerBus
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -38,7 +38,7 @@ class ParquetReadSpec extends SparkSpec {
     sc.setJobGroup(group, "build only")
     try {
       val r = body
-      TestListenerBus.drain(sc)
+      ListenerBusDrain.drain(sc)
       (r, jobs.get)
     } finally {
       sc.clearJobGroup()

@@ -15,7 +15,6 @@ class CorpusCardSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("each card row equals its standalone operator's value") {
-    graft.GraftExtensions.ensureRegistered(spark)
     val card = CorpusQueries.queries("q_x_pipeline11")(spark, sf)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) ->

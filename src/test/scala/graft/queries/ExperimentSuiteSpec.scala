@@ -10,7 +10,6 @@ class ExperimentSuiteSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("each suite row equals its standalone query's statistic") {
-    graft.GraftExtensions.ensureRegistered(spark)
     val suite = TimeSeriesQueries.queries("q_x_pipeline8")(spark, sf)
       .collect().map(r => r.getString(0) ->
         ((Option(r.get(1)).map(_.asInstanceOf[Double]),
