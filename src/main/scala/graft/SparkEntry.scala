@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The entry points of SURVEY.md §7: the flagship `entry` query, and
+  * the oracle-checked query surface, where each query is declared once
+  * with the DuckDB SQL that checks it. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -32,17 +34,21 @@ object SparkEntry {
         .as("revenue"), count(lit(1)).as("n_items"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2, plus the KBO
+  /** The query modules. Each declares every query once, as
+    * `name -> (build, oracleSql)`, so no query exists without the
+    * ANSI SQL that DuckDB runs as its oracle on the same parquet tables.
+    * One entry per implemented operator from SURVEY.md §2, plus the KBO
     * metric core (M1-M12 + wide records) and the LLM-data-pipeline ext/
     * operators (dedup, similarity, text stats, multimodal). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (RelationalQueries.queries ++ KboQueries.queries ++ ExtQueries.queries ++
-      TemporalQueries.queries ++ CorpusQueries.queries ++
-      PrepQueries.queries ++ LinkQueries.queries ++
-      BehaviorQueries.queries ++ LearnQueries.queries ++
-      TimeSeriesQueries.queries ++ StatsQueries.queries ++
-      GovernQueries.queries ++ SpatialQueries.queries).map {
-      case (name, fn) =>
+  private[graft] lazy val modules = Seq(RelationalQueries.queries,
+    KboQueries.queries, ExtQueries.queries, TemporalQueries.queries,
+    CorpusQueries.queries, PrepQueries.queries, LinkQueries.queries,
+    BehaviorQueries.queries, LearnQueries.queries, TimeSeriesQueries.queries,
+    StatsQueries.queries, GovernQueries.queries, SpatialQueries.queries)
+
+  /** Every query's build function, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.flatten.map { case (name, (fn, _)) =>
       name -> { (s: SparkSession, d: String) =>
         // native expressions resolve through the function registry; make
         // the surface work even on sessions built without
@@ -50,7 +56,11 @@ object SparkEntry {
         GraftExtensions.ensureRegistered(s)
         fn(s, d)
       }
-    }
+    }.toMap
+
+  /** Every query's oracle SQL, by name: the same keys as [[queries]]. */
+  lazy val oracleSql: Map[String, String] =
+    modules.flatten.map { case (name, (_, sql)) => name -> sql }.toMap
 
   /** The sorted query names of a comma list. Empty or unknown names
     * fail loudly: a typo must not produce a vacuous green run. */
@@ -73,14 +83,4 @@ object SparkEntry {
     queries // initializes every query object, which declares its results
     graft.core.Shared.owners
   }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ KboQueries.oracles ++ ExtQueries.oracles ++
-      TemporalQueries.oracles ++ CorpusQueries.oracles ++
-      PrepQueries.oracles ++ LinkQueries.oracles ++
-      BehaviorQueries.oracles ++ LearnQueries.oracles ++
-      TimeSeriesQueries.oracles ++ StatsQueries.oracles ++
-      GovernQueries.oracles ++ SpatialQueries.oracles
 }

@@ -222,16 +222,6 @@ object Layout {
       .drop("__z")
       .write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** [[zorderedWrite]]'s Hilbert sibling: cluster by [[hilbertValue]]
-    * of two columns. */
-  def hilbertWrite(df: DataFrame, path: String, aCol: String,
-                   bCol: String, partitions: Int, bits: Int = 16): Unit =
-    df.withColumn("__h", hilbertValue(col(aCol), col(bCol), bits))
-      .repartitionByRange(partitions, col("__h"))
-      .sortWithinPartitions(col("__h"))
-      .drop("__h")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Materialize a corpus in TRAINING ORDER as balanced shard files —
     * the writer half of [[Sampling.epochShuffle]]. Input rows carry
     * `shardCol`/`orderCol` (shard id + position within shard); output

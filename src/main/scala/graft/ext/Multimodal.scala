@@ -294,7 +294,6 @@ object Multimodal {
     * LSH chunk scheme applies unchanged. */
   val dhashRows = 6
   val dhashCols = 11
-  val dhashBits: Int = dhashRows * (dhashCols - 1) // 60
 
   /** 60-bit difference hash of a row-major luma grid column
     * (`array<numeric>` of length rows*cols): bit r*(cols-1)+c is set

@@ -1319,55 +1319,4 @@ object Similarity {
         if (degenerate) None else Some(lambda), nVecs)
     }.toDF("i", "loading", "lambda", "n_vecs")
   }
-
-  /** Per-group embedding dispersion — "how diverse is this source /
-    * cluster in embedding space": the variance trace
-    * E‖x‖² − ‖μ‖² (= Σ_d Var(x_d) = ½·mean pairwise squared
-    * distance), its RMS spread, and the centroid norm. A source whose
-    * trace collapses is near-duplicate mass a [[semDedup]] pass
-    * should visit; one whose trace explodes is a mixture to split
-    * before weighting. The centroid identity makes this ONE corpus
-    * pass — never a pairwise product.
-    *
-    * Scale shape: one row pass for the sig9'd squared norms (the
-    * codegen'd LTR dot), one (group, dim) posexplode aggregate for
-    * the centroid (d bounded — the PCA convention), one bounded
-    * per-group fold of μ_d². Determinism: every element, norm, mean
-    * and the final subtraction is a single sig9 point through
-    * [[graft.queries.Q.dsum]] / dsumStable.
-    *
-    * @return per group: (group, n_vecs, dim, mean_nsq, centroid_nsq,
-    *         trace_var, rms_spread) */
-  def embedDispersion(emb: DataFrame, labelCol: String,
-      vecCol: String): DataFrame = {
-    import graft.queries.Q
-    import org.apache.spark.sql.types.DoubleType
-    val base = emb.select(col(labelCol).cast("long").as("g"),
-        col(vecCol).as("v"))
-      .where(col("g").isNotNull && col("v").isNotNull)
-    val norms = base
-      .select(col("g"), Q.sig9(normSq(col("v"))).as("nsq"))
-      .groupBy(col("g"))
-      .agg(count(lit(1)).cast("long").as("n_vecs"),
-        Q.dsum(col("nsq")).as("s_nsq"))
-      .withColumn("mean_nsq", Q.sig9(col("s_nsq") /
-        col("n_vecs").cast(DoubleType)))
-    val byDim = base
-      .select(col("g"), posexplode(col("v")).as(Seq("p", "x0")))
-      .select(col("g"), (col("p") + 1).cast("long").as("dim"),
-        Q.sig9(col("x0").cast(DoubleType)).as("x"))
-      .groupBy(col("g"), col("dim"))
-      .agg(Q.dsumStable(col("x"), 9).as("sx"),
-        count(lit(1)).cast("long").as("nd"))
-      .withColumn("mu", Q.sig9(col("sx") / col("nd").cast(DoubleType)))
-    val cent = byDim.groupBy(col("g"))
-      .agg(max(col("dim")).as("dim"),
-        Q.dsum(Q.sig9(col("mu") * col("mu"))).as("centroid_nsq"))
-    norms.join(cent, Seq("g"))
-      .withColumn("trace_var", Q.sig9(greatest(lit(0.0),
-        col("mean_nsq") - col("centroid_nsq"))))
-      .select(col("g").as("group"), col("n_vecs"), col("dim"),
-        col("mean_nsq"), col("centroid_nsq"), col("trace_var"),
-        Q.sig9(sqrt(col("trace_var"))).as("rms_spread"))
-  }
 }

@@ -96,16 +96,9 @@ object Exprs {
   def parseDotTimestamp(c: Column): Column =
     to_timestamp(trim(c), "yyyy.M.d H:mm")
 
-  /** F13 — audit timestamp column (updated_at DEFAULT CURRENT_TIMESTAMP on
-    * every reference stat table; dags/0_init_baseball_table.py:76 et al.).
-    * Non-deterministic by nature, so it never appears in oracle-checked
-    * outputs; writers attach it at the sink. */
-  def auditTimestamp(): Column = current_timestamp()
-
   /** S5 — KST (Asia/Seoul) pinning: the reference runs wall-clock KST
     * (execution_date + 9h, dags/031_schedule_dag_for_get_today_line_up
     * .py:11-12); our sessions run UTC, so KST-local semantics are an
     * explicit conversion, never an ambient timezone. */
   def toKst(ts: Column): Column = from_utc_timestamp(ts, "Asia/Seoul")
-  def kstDate(ts: Column): Column = to_date(toKst(ts))
 }

@@ -1262,53 +1262,28 @@ object BehaviorQueries {
        |FROM it$alsIters""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_als" -> alsQ,
-    "q_x_item_cf" -> itemCfQ,
-    "q_x_growth" -> growthQ,
-    "q_x_stickiness" -> stickinessQ,
-    "q_x_competing_risks" -> crQ,
-    "q_x_shapley" -> shapleyQ,
-    "q_x_markov_attrib" -> markovQ,
-    "q_x_logrank" -> logRankQ,
-    "q_x_paths" -> pathsQ,
-    "q_x_time_to_convert" -> timeToConvertQ,
-    "q_x_rfm" -> rfmQ,
-    "q_x_rmst" -> rmstQ,
-    "q_x_kaplan_meier" -> kmQ,
-    "q_x_nelson_aalen" -> nelsonAalenQ,
-    "q_x_pipeline12" -> pipeline12Q,
-    "q_x_ltv" -> ltvQ,
-    "q_x_multitouch" -> multiTouchQ,
-    "q_x_funnel" -> funnel,
-    "q_x_retention" -> retentionQ,
-    "q_x_transitions" -> transitionsQ,
-    "q_x_seq3" -> seqPatternsQ,
-    "q_x_coxph" -> coxQ,
-    "q_x_decay" -> decayQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_als" -> alsSql,
-    "q_x_item_cf" -> itemCfSql,
-    "q_x_growth" -> growthSql,
-    "q_x_stickiness" -> stickinessSql,
-    "q_x_competing_risks" -> crSql,
-    "q_x_shapley" -> shapleySql,
-    "q_x_markov_attrib" -> markovSql,
-    "q_x_logrank" -> logRankSql,
-    "q_x_paths" -> pathsSql,
-    "q_x_time_to_convert" -> timeToConvertSql,
-    "q_x_rfm" -> rfmSql,
-    "q_x_rmst" -> rmstSql,
-    "q_x_kaplan_meier" -> kmSql,
-    "q_x_nelson_aalen" -> nelsonAalenSql,
-    "q_x_pipeline12" -> pipeline12Sql,
-    "q_x_ltv" -> ltvSql,
-    "q_x_multitouch" -> multiTouchSql,
-    "q_x_funnel" -> funnelSql,
-    "q_x_retention" -> retentionSql,
-    "q_x_transitions" -> transitionsSql,
-    "q_x_seq3" -> seqPatternsSql,
-    "q_x_coxph" -> coxSql,
-    "q_x_decay" -> decaySql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_als" -> (alsQ, alsSql),
+    "q_x_item_cf" -> (itemCfQ, itemCfSql),
+    "q_x_growth" -> (growthQ, growthSql),
+    "q_x_stickiness" -> (stickinessQ, stickinessSql),
+    "q_x_competing_risks" -> (crQ, crSql),
+    "q_x_shapley" -> (shapleyQ, shapleySql),
+    "q_x_markov_attrib" -> (markovQ, markovSql),
+    "q_x_logrank" -> (logRankQ, logRankSql),
+    "q_x_paths" -> (pathsQ, pathsSql),
+    "q_x_time_to_convert" -> (timeToConvertQ, timeToConvertSql),
+    "q_x_rfm" -> (rfmQ, rfmSql),
+    "q_x_rmst" -> (rmstQ, rmstSql),
+    "q_x_kaplan_meier" -> (kmQ, kmSql),
+    "q_x_nelson_aalen" -> (nelsonAalenQ, nelsonAalenSql),
+    "q_x_pipeline12" -> (pipeline12Q, pipeline12Sql),
+    "q_x_ltv" -> (ltvQ, ltvSql),
+    "q_x_multitouch" -> (multiTouchQ, multiTouchSql),
+    "q_x_funnel" -> (funnel, funnelSql),
+    "q_x_retention" -> (retentionQ, retentionSql),
+    "q_x_transitions" -> (transitionsQ, transitionsSql),
+    "q_x_seq3" -> (seqPatternsQ, seqPatternsSql),
+    "q_x_coxph" -> (coxQ, coxSql),
+    "q_x_decay" -> (decayQ, decaySql))
 }

@@ -2241,95 +2241,49 @@ object CorpusQueries {
        |FROM u""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_skipping" -> skippingQ,
-    "q_x_kmv" -> kmvQ,
-    "q_x_join_card" -> joinCardQ,
-    "q_x_hilbert" -> hilbertQ,
-    "q_x_coord_sample" -> coordQ,
-    "q_x_hist_quantile" -> histQuantQ,
-    "q_x_interleave" -> interleaveQ,
-    "q_x_rbo" -> rboQ,
-    "q_x_neyman" -> neymanQ,
-    "q_x_tail_index" -> tailQ,
-    "q_x_unseen_mass" -> unseenQ,
-    "q_x_lexical" -> lexicalQ,
-    "q_x_keywords" -> keywordsQ,
-    "q_x_zipf" -> zipfQ,
-    "q_x_readability" -> readabilityQ,
-    "q_x_ndcg" -> ndcgQ,
-    "q_x_rank_eval" -> rankEvalQ,
-    "q_x_pipeline10" -> pipeline10Q,
-    "q_x_pipeline11" -> pipeline11Q,
-    "q_x_entropy" -> entropyQ,
-    "q_x_vocab_growth" -> vocabGrowthQ,
-    "q_x_gini" -> giniQ,
-    "q_x_budget_select" -> budgetSelectQ,
-    "q_x_quantize" -> quantizeQ,
-    "q_x_weighted_sample" -> weightedSampleQ,
-    "q_x_epoch_shuffle" -> epochShuffleQ,
-    "q_x_decontam" -> decontam,
-    "q_x_unigram_lm" -> unigramLm,
-    "q_x_jsd" -> jsdQ,
-    "q_x_cms" -> cmsQ,
-    "q_x_stratified_exact" -> stratExactQ,
-    "q_x_hll" -> hllQ,
-    "q_x_hll_merge" -> hllMergeQ,
-    "q_x_bigram_lm" -> bigramLm,
-    "q_x_pmi" -> pmiQ,
-    "q_x_bm25" -> bm25,
-    "q_x_split" -> splitAssignQ,
-    "q_x_zorder" -> zorderQ,
-    "q_x_heavy_hitters" -> heavyHittersQ,
-    "q_x_heavy_hitters_by" -> heavyHittersByQ,
-    "q_x_dsir" -> dsirQ,
-    "q_x_vocab_coverage" -> vocabQ,
-    "q_x_novelty" -> noveltyQ,
-    "q_x_rrf" -> rrfQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_skipping" -> skippingSql,
-    "q_x_kmv" -> kmvSql,
-    "q_x_join_card" -> joinCardSql,
-    "q_x_hilbert" -> hilbertSql,
-    "q_x_coord_sample" -> coordSql,
-    "q_x_hist_quantile" -> histQuantSql,
-    "q_x_interleave" -> interleaveSql,
-    "q_x_rbo" -> rboSql,
-    "q_x_neyman" -> neymanSql,
-    "q_x_tail_index" -> tailSql,
-    "q_x_unseen_mass" -> unseenSql,
-    "q_x_lexical" -> lexicalSql,
-    "q_x_keywords" -> keywordsSql,
-    "q_x_zipf" -> zipfSql,
-    "q_x_readability" -> readabilitySql,
-    "q_x_ndcg" -> ndcgSql,
-    "q_x_rank_eval" -> rankEvalSql,
-    "q_x_pipeline10" -> pipeline10Sql,
-    "q_x_pipeline11" -> pipeline11Sql,
-    "q_x_entropy" -> entropySql,
-    "q_x_vocab_growth" -> vocabGrowthSql,
-    "q_x_gini" -> giniSql,
-    "q_x_budget_select" -> budgetSelectSql,
-    "q_x_quantize" -> quantizeSql,
-    "q_x_weighted_sample" -> weightedSampleSql,
-    "q_x_epoch_shuffle" -> epochShuffleSql,
-    "q_x_decontam" -> decontamSql,
-    "q_x_unigram_lm" -> unigramLmSql,
-    "q_x_jsd" -> jsdSql,
-    "q_x_cms" -> cmsSql,
-    "q_x_stratified_exact" -> stratExactSql,
-    "q_x_hll" -> hllSql,
-    "q_x_hll_merge" -> hllMergeSql,
-    "q_x_bigram_lm" -> bigramLmSql,
-    "q_x_pmi" -> pmiSql,
-    "q_x_bm25" -> bm25Sql,
-    "q_x_split" -> splitAssignSql,
-    "q_x_zorder" -> zorderSql,
-    "q_x_heavy_hitters" -> heavyHittersSql,
-    "q_x_heavy_hitters_by" -> heavyHittersBySql,
-    "q_x_dsir" -> dsirSql,
-    "q_x_vocab_coverage" -> vocabSql,
-    "q_x_novelty" -> noveltySql,
-    "q_x_rrf" -> rrfSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_skipping" -> (skippingQ, skippingSql),
+    "q_x_kmv" -> (kmvQ, kmvSql),
+    "q_x_join_card" -> (joinCardQ, joinCardSql),
+    "q_x_hilbert" -> (hilbertQ, hilbertSql),
+    "q_x_coord_sample" -> (coordQ, coordSql),
+    "q_x_hist_quantile" -> (histQuantQ, histQuantSql),
+    "q_x_interleave" -> (interleaveQ, interleaveSql),
+    "q_x_rbo" -> (rboQ, rboSql),
+    "q_x_neyman" -> (neymanQ, neymanSql),
+    "q_x_tail_index" -> (tailQ, tailSql),
+    "q_x_unseen_mass" -> (unseenQ, unseenSql),
+    "q_x_lexical" -> (lexicalQ, lexicalSql),
+    "q_x_keywords" -> (keywordsQ, keywordsSql),
+    "q_x_zipf" -> (zipfQ, zipfSql),
+    "q_x_readability" -> (readabilityQ, readabilitySql),
+    "q_x_ndcg" -> (ndcgQ, ndcgSql),
+    "q_x_rank_eval" -> (rankEvalQ, rankEvalSql),
+    "q_x_pipeline10" -> (pipeline10Q, pipeline10Sql),
+    "q_x_pipeline11" -> (pipeline11Q, pipeline11Sql),
+    "q_x_entropy" -> (entropyQ, entropySql),
+    "q_x_vocab_growth" -> (vocabGrowthQ, vocabGrowthSql),
+    "q_x_gini" -> (giniQ, giniSql),
+    "q_x_budget_select" -> (budgetSelectQ, budgetSelectSql),
+    "q_x_quantize" -> (quantizeQ, quantizeSql),
+    "q_x_weighted_sample" -> (weightedSampleQ, weightedSampleSql),
+    "q_x_epoch_shuffle" -> (epochShuffleQ, epochShuffleSql),
+    "q_x_decontam" -> (decontam, decontamSql),
+    "q_x_unigram_lm" -> (unigramLm, unigramLmSql),
+    "q_x_jsd" -> (jsdQ, jsdSql),
+    "q_x_cms" -> (cmsQ, cmsSql),
+    "q_x_stratified_exact" -> (stratExactQ, stratExactSql),
+    "q_x_hll" -> (hllQ, hllSql),
+    "q_x_hll_merge" -> (hllMergeQ, hllMergeSql),
+    "q_x_bigram_lm" -> (bigramLm, bigramLmSql),
+    "q_x_pmi" -> (pmiQ, pmiSql),
+    "q_x_bm25" -> (bm25, bm25Sql),
+    "q_x_split" -> (splitAssignQ, splitAssignSql),
+    "q_x_zorder" -> (zorderQ, zorderSql),
+    "q_x_heavy_hitters" -> (heavyHittersQ, heavyHittersSql),
+    "q_x_heavy_hitters_by" -> (heavyHittersByQ, heavyHittersBySql),
+    "q_x_dsir" -> (dsirQ, dsirSql),
+    "q_x_vocab_coverage" -> (vocabQ, vocabSql),
+    "q_x_novelty" -> (noveltyQ, noveltySql),
+    "q_x_rrf" -> (rrfQ, rrfSql))
 }

@@ -1956,105 +1956,54 @@ object ExtQueries {
       |    AS frame_hex
       |FROM f""".stripMargin
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_media_headers" -> mediaHeadersQ,
-    "q_x_frames" -> framesQ,
-    "q_x_pipeline_e2e" -> pipelineE2e,
-    "q_x_pipeline4" -> pipeline4,
-    "q_x_source_cap" -> sourceCap,
-    "q_x_chunking" -> chunkingQ,
-    "q_x_source_mix" -> sourceMix,
-    "q_x_repetition" -> repetitionQ,
-    "q_x_pii_redact" -> piiRedact,
-    "q_x_text_stats" -> textStats,
-    "q_x_fingerprint" -> fingerprint,
-    "q_x_dedup_exact" -> dedupExact,
-    "q_x_dedup_minhash" -> dedupMinhash,
-    "q_x_dedup_eval" -> dedupEvalQ,
-    "q_x_split_leakage" -> splitLeakage,
-    "q_x_image_dedup" -> imageDedupQ,
-    "q_x_simhash" -> simhash,
-    "q_x_jaccard_nn" -> jaccardNn,
-    "q_x_ann_brute" -> annBrute,
-    "q_x_mmr" -> mmrQ,
-    "q_x_kcenter" -> kcenterQ,
-    "q_x_kmeans" -> kmeansQ,
-    "q_x_pca" -> pcaQ,
-    "q_x_embed_neardup" -> embedNearDup,
-    "q_x_semdedup" -> semDedupQ,
-    "q_x_ann_lsh_recall" -> annLshRecall,
-    "q_x_ann_ivf_recall" -> annIvfRecall,
-    "q_x_ann_int8" -> annInt8,
-    "q_x_ann_pq" -> annPq,
-    "q_x_ann_pq_serve" -> annPqServe,
-    "q_x_ann_ivfpq" -> annIvfPq,
-    "q_x_ann_ivfpq_sample" -> annIvfPqSample,
-    "q_x_ann_ivfpq_res" -> annIvfPqRes,
-    "q_x_ann_ivfpq_res8" -> annIvfPqRes8,
-    "q_x_multimodal" -> multimodal,
-    "q_x_pixels" -> pixelsQ,
-    "q_x_dedup_clusters" -> dedupClusters,
-    "q_x_cluster_rep" -> clusterRep,
-    "q_x_contrastive" -> contrastive,
-    "q_x_quality_filter" -> qualityFilter,
-    "q_x_token_count" -> tokenCount,
-    "q_x_lang_eval" -> langEval,
-    "q_x_approx_distinct" -> approxDistinct,
-    "q_s_event_window" -> eventWindow,
-    "q_s_attribution" -> attribution,
-    "q_s_enrich" -> enrich,
-    "q_s_event_props" -> eventProps,
-    "q_s_user_series" -> userSeries,
-    "q_s_user_sessions" -> userSessionsQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_media_headers" -> mediaHeadersSql,
-    "q_x_frames" -> framesSql,
-    "q_x_pipeline_e2e" -> pipelineE2eSql,
-    "q_x_pipeline4" -> pipeline4Sql,
-    "q_x_source_cap" -> sourceCapSql,
-    "q_x_chunking" -> chunkingSql,
-    "q_x_source_mix" -> sourceMixSql,
-    "q_x_repetition" -> repetitionSql,
-    "q_x_pii_redact" -> piiRedactSql,
-    "q_x_text_stats" -> textStatsSql,
-    "q_x_fingerprint" -> fingerprintSql,
-    "q_x_dedup_exact" -> dedupExactSql,
-    "q_x_dedup_minhash" -> dedupMinhashSql,
-    "q_x_dedup_eval" -> dedupEvalSql,
-    "q_x_split_leakage" -> splitLeakageSql,
-    "q_x_image_dedup" -> imageDedupSql,
-    "q_x_simhash" -> simhashSql,
-    "q_x_jaccard_nn" -> jaccardNnSql,
-    "q_x_ann_brute" -> annBruteSql,
-    "q_x_mmr" -> mmrSql,
-    "q_x_kcenter" -> kcenterSql,
-    "q_x_kmeans" -> kmeansSql,
-    "q_x_pca" -> pcaSql,
-    "q_x_embed_neardup" -> embedNearDupSql,
-    "q_x_semdedup" -> semDedupSql,
-    "q_x_ann_lsh_recall" -> annLshRecallSql,
-    "q_x_ann_ivf_recall" -> annIvfRecallSql,
-    "q_x_ann_int8" -> annInt8Sql,
-    "q_x_ann_pq" -> annPqSql,
-    "q_x_ann_pq_serve" -> annPqServeSql,
-    "q_x_ann_ivfpq" -> annIvfPqSql,
-    "q_x_ann_ivfpq_sample" -> annIvfPqSampleSql,
-    "q_x_ann_ivfpq_res" -> annIvfPqResSql,
-    "q_x_ann_ivfpq_res8" -> annIvfPqRes8Sql,
-    "q_x_multimodal" -> multimodalSql,
-    "q_x_pixels" -> pixelsSql,
-    "q_x_dedup_clusters" -> dedupClustersSql,
-    "q_x_cluster_rep" -> clusterRepSql,
-    "q_x_contrastive" -> contrastiveSql,
-    "q_x_quality_filter" -> qualityFilterSql,
-    "q_x_token_count" -> tokenCountSql,
-    "q_x_lang_eval" -> langEvalSql,
-    "q_x_approx_distinct" -> approxDistinctSql,
-    "q_s_event_window" -> eventWindowSql,
-    "q_s_attribution" -> attributionSql,
-    "q_s_enrich" -> enrichSql,
-    "q_s_event_props" -> eventPropsSql,
-    "q_s_user_series" -> userSeriesSql,
-    "q_s_user_sessions" -> userSessionsSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_media_headers" -> (mediaHeadersQ, mediaHeadersSql),
+    "q_x_frames" -> (framesQ, framesSql),
+    "q_x_pipeline_e2e" -> (pipelineE2e, pipelineE2eSql),
+    "q_x_pipeline4" -> (pipeline4, pipeline4Sql),
+    "q_x_source_cap" -> (sourceCap, sourceCapSql),
+    "q_x_chunking" -> (chunkingQ, chunkingSql),
+    "q_x_source_mix" -> (sourceMix, sourceMixSql),
+    "q_x_repetition" -> (repetitionQ, repetitionSql),
+    "q_x_pii_redact" -> (piiRedact, piiRedactSql),
+    "q_x_text_stats" -> (textStats, textStatsSql),
+    "q_x_fingerprint" -> (fingerprint, fingerprintSql),
+    "q_x_dedup_exact" -> (dedupExact, dedupExactSql),
+    "q_x_dedup_minhash" -> (dedupMinhash, dedupMinhashSql),
+    "q_x_dedup_eval" -> (dedupEvalQ, dedupEvalSql),
+    "q_x_split_leakage" -> (splitLeakage, splitLeakageSql),
+    "q_x_image_dedup" -> (imageDedupQ, imageDedupSql),
+    "q_x_simhash" -> (simhash, simhashSql),
+    "q_x_jaccard_nn" -> (jaccardNn, jaccardNnSql),
+    "q_x_ann_brute" -> (annBrute, annBruteSql),
+    "q_x_mmr" -> (mmrQ, mmrSql),
+    "q_x_kcenter" -> (kcenterQ, kcenterSql),
+    "q_x_kmeans" -> (kmeansQ, kmeansSql),
+    "q_x_pca" -> (pcaQ, pcaSql),
+    "q_x_embed_neardup" -> (embedNearDup, embedNearDupSql),
+    "q_x_semdedup" -> (semDedupQ, semDedupSql),
+    "q_x_ann_lsh_recall" -> (annLshRecall, annLshRecallSql),
+    "q_x_ann_ivf_recall" -> (annIvfRecall, annIvfRecallSql),
+    "q_x_ann_int8" -> (annInt8, annInt8Sql),
+    "q_x_ann_pq" -> (annPq, annPqSql),
+    "q_x_ann_pq_serve" -> (annPqServe, annPqServeSql),
+    "q_x_ann_ivfpq" -> (annIvfPq, annIvfPqSql),
+    "q_x_ann_ivfpq_sample" -> (annIvfPqSample, annIvfPqSampleSql),
+    "q_x_ann_ivfpq_res" -> (annIvfPqRes, annIvfPqResSql),
+    "q_x_ann_ivfpq_res8" -> (annIvfPqRes8, annIvfPqRes8Sql),
+    "q_x_multimodal" -> (multimodal, multimodalSql),
+    "q_x_pixels" -> (pixelsQ, pixelsSql),
+    "q_x_dedup_clusters" -> (dedupClusters, dedupClustersSql),
+    "q_x_cluster_rep" -> (clusterRep, clusterRepSql),
+    "q_x_contrastive" -> (contrastive, contrastiveSql),
+    "q_x_quality_filter" -> (qualityFilter, qualityFilterSql),
+    "q_x_token_count" -> (tokenCount, tokenCountSql),
+    "q_x_lang_eval" -> (langEval, langEvalSql),
+    "q_x_approx_distinct" -> (approxDistinct, approxDistinctSql),
+    "q_s_event_window" -> (eventWindow, eventWindowSql),
+    "q_s_attribution" -> (attribution, attributionSql),
+    "q_s_enrich" -> (enrich, enrichSql),
+    "q_s_event_props" -> (eventProps, eventPropsSql),
+    "q_s_user_series" -> (userSeries, userSeriesSql),
+    "q_s_user_sessions" -> (userSessionsQ, userSessionsSql))
 }

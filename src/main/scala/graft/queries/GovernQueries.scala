@@ -344,19 +344,11 @@ object GovernQueries {
       "AND p.p_brand = 'Brand#11'"))
     .mkString("\nUNION ALL\n")
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_tcloseness" -> tclosenessQ,
-    "q_x_kanon" -> kanonQ,
-    "q_x_fd_audit" -> fdAuditQ,
-    "q_x_dp_release" -> dpReleaseQ,
-    "q_x_dp_quantile" -> dpQuantQ,
-    "q_x_ri_audit" -> riAuditQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_tcloseness" -> tclosenessSql,
-    "q_x_kanon" -> kanonSql,
-    "q_x_fd_audit" -> fdAuditSql,
-    "q_x_dp_release" -> dpReleaseSql,
-    "q_x_dp_quantile" -> dpQuantSql,
-    "q_x_ri_audit" -> riAuditSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_tcloseness" -> (tclosenessQ, tclosenessSql),
+    "q_x_kanon" -> (kanonQ, kanonSql),
+    "q_x_fd_audit" -> (fdAuditQ, fdAuditSql),
+    "q_x_dp_release" -> (dpReleaseQ, dpReleaseSql),
+    "q_x_dp_quantile" -> (dpQuantQ, dpQuantSql),
+    "q_x_ri_audit" -> (riAuditQ, riAuditSql))
 }

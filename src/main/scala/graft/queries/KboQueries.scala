@@ -628,27 +628,15 @@ object KboQueries {
        |LEFT JOIN rates r ON r.hitter_id = w.hitter_id
        |LEFT JOIN adj1 a ON a.hitter_id = w.hitter_id""".stripMargin
 
-  val queries: Map[String, QFn] = Map(
-    "q_m1_park_factor" -> m1,
-    "q_m2_woba" -> m2,
-    "q_m3m4_wrc" -> m3m4,
-    "q_m5m7_rates" -> m5m7,
-    "q_m8m10_fip" -> m8m10,
-    "q_m070_five_inning" -> m070,
-    "q_m11m12_park_adjusted" -> m11m12,
-    "q_rec_wide_hitter" -> recHitter,
-    "q_rec_wide_pitcher" -> recPitcher,
-    "q_chain_hitter_metrics" -> chainHitterMetrics)
-
-  val oracles: Map[String, String] = Map(
-    "q_m1_park_factor" -> m1Sql,
-    "q_m2_woba" -> m2Sql,
-    "q_m3m4_wrc" -> m3m4Sql,
-    "q_m5m7_rates" -> m5m7Sql,
-    "q_m8m10_fip" -> m8m10Sql,
-    "q_m070_five_inning" -> m070Sql,
-    "q_m11m12_park_adjusted" -> m11m12Sql,
-    "q_rec_wide_hitter" -> recHitterSql,
-    "q_rec_wide_pitcher" -> recPitcherSql,
-    "q_chain_hitter_metrics" -> chainHitterMetricsSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_m1_park_factor" -> (m1, m1Sql),
+    "q_m2_woba" -> (m2, m2Sql),
+    "q_m3m4_wrc" -> (m3m4, m3m4Sql),
+    "q_m5m7_rates" -> (m5m7, m5m7Sql),
+    "q_m8m10_fip" -> (m8m10, m8m10Sql),
+    "q_m070_five_inning" -> (m070, m070Sql),
+    "q_m11m12_park_adjusted" -> (m11m12, m11m12Sql),
+    "q_rec_wide_hitter" -> (recHitter, recHitterSql),
+    "q_rec_wide_pitcher" -> (recPitcher, recPitcherSql),
+    "q_chain_hitter_metrics" -> (chainHitterMetrics, chainHitterMetricsSql))
 }

@@ -1480,55 +1480,29 @@ object LearnQueries {
        |FROM fit$huberIters f CROSS JOIN fit0""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_isotonic" -> isotonicQ,
-    "q_x_ridge_cv" -> ridgeCvQ,
-    "q_x_pr_auc" -> prAucQ,
-    "q_x_stump" -> stumpQ,
-    "q_x_adaboost" -> adaboostQ,
-    "q_x_gbm" -> gbmQ,
-    "q_x_logo" -> logoQ,
-    "q_x_huber" -> huberQ,
-    "q_x_eb_shrink" -> ebQ,
-    "q_x_confusion" -> confusionQ,
-    "q_x_kappa" -> kappaQ,
-    "q_x_feature_hash" -> featureHashQ,
-    "q_x_target_encode" -> targetEncodeQ,
-    "q_x_moments" -> momentsQ,
-    "q_x_conformal" -> conformalQ,
-    "q_x_logistic" -> logisticQ,
-    "q_x_lift" -> liftQ,
-    "q_x_ridge" -> ridgeQ,
-    "q_x_linreg" -> linregQ,
-    "q_x_auc" -> aucQ,
-    "q_x_calibration" -> calibrationQ,
-    "q_x_naive_bayes" -> nbQ,
-    "q_x_kfold_nb" -> kfoldQ,
-    "q_x_pipeline5" -> pipeline5Q)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_isotonic" -> isotonicSql,
-    "q_x_ridge_cv" -> ridgeCvSql,
-    "q_x_pr_auc" -> prAucSql,
-    "q_x_stump" -> stumpSql,
-    "q_x_adaboost" -> adaboostSql,
-    "q_x_gbm" -> gbmSql,
-    "q_x_logo" -> logoSql,
-    "q_x_huber" -> huberSql,
-    "q_x_eb_shrink" -> ebSql,
-    "q_x_confusion" -> confusionSql,
-    "q_x_kappa" -> kappaSql,
-    "q_x_feature_hash" -> featureHashSql,
-    "q_x_target_encode" -> targetEncodeSql,
-    "q_x_moments" -> momentsSql,
-    "q_x_conformal" -> conformalSql,
-    "q_x_logistic" -> logisticSql,
-    "q_x_lift" -> liftSql,
-    "q_x_ridge" -> ridgeSql,
-    "q_x_linreg" -> linregSql,
-    "q_x_auc" -> aucSql,
-    "q_x_calibration" -> calibrationSql,
-    "q_x_naive_bayes" -> nbSql,
-    "q_x_kfold_nb" -> kfoldSql,
-    "q_x_pipeline5" -> pipeline5Sql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_isotonic" -> (isotonicQ, isotonicSql),
+    "q_x_ridge_cv" -> (ridgeCvQ, ridgeCvSql),
+    "q_x_pr_auc" -> (prAucQ, prAucSql),
+    "q_x_stump" -> (stumpQ, stumpSql),
+    "q_x_adaboost" -> (adaboostQ, adaboostSql),
+    "q_x_gbm" -> (gbmQ, gbmSql),
+    "q_x_logo" -> (logoQ, logoSql),
+    "q_x_huber" -> (huberQ, huberSql),
+    "q_x_eb_shrink" -> (ebQ, ebSql),
+    "q_x_confusion" -> (confusionQ, confusionSql),
+    "q_x_kappa" -> (kappaQ, kappaSql),
+    "q_x_feature_hash" -> (featureHashQ, featureHashSql),
+    "q_x_target_encode" -> (targetEncodeQ, targetEncodeSql),
+    "q_x_moments" -> (momentsQ, momentsSql),
+    "q_x_conformal" -> (conformalQ, conformalSql),
+    "q_x_logistic" -> (logisticQ, logisticSql),
+    "q_x_lift" -> (liftQ, liftSql),
+    "q_x_ridge" -> (ridgeQ, ridgeSql),
+    "q_x_linreg" -> (linregQ, linregSql),
+    "q_x_auc" -> (aucQ, aucSql),
+    "q_x_calibration" -> (calibrationQ, calibrationSql),
+    "q_x_naive_bayes" -> (nbQ, nbSql),
+    "q_x_kfold_nb" -> (kfoldQ, kfoldSql),
+    "q_x_pipeline5" -> (pipeline5Q, pipeline5Sql))
 }

@@ -1302,53 +1302,28 @@ object LinkQueries {
        |$rows""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_nbrhood" -> nbrhoodQ,
-    "q_x_hyperball" -> hyperballQ,
-    "q_x_pipeline13" -> pipeline13Q,
-    "q_x_ppr" -> pprQ,
-    "q_x_clustering_coef" -> ccoefQ,
-    "q_x_modularity" -> modularityQ,
-    "q_x_fs_link" -> fsLinkQ,
-    "q_x_assortativity" -> assortQ,
-    "q_x_snapshot_diff" -> snapDiffQ,
-    "q_x_lpa" -> lpaQ,
-    "q_x_assoc_rules" -> assocQ,
-    "q_x_fuzzy_join" -> fuzzyJoin,
-    "q_x_contain_join" -> containQ,
-    "q_x_edit_join" -> editJoin,
-    "q_x_jw_link" -> jwLinkQ,
-    "q_x_pagerank" -> pagerankQ,
-    "q_x_hits" -> hitsQ,
-    "q_x_triangles" -> trianglesQ,
-    "q_x_linkpred" -> linkpredQ,
-    "q_x_khop" -> khopQ,
-    "q_x_kcore" -> kcoreQ,
-    "q_x_sssp" -> ssspQ,
-    "q_x_scd2" -> scd2)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_nbrhood" -> nbrhoodSql,
-    "q_x_hyperball" -> hyperballSql,
-    "q_x_pipeline13" -> pipeline13Sql,
-    "q_x_ppr" -> pprSql,
-    "q_x_clustering_coef" -> ccoefSql,
-    "q_x_modularity" -> modularitySql,
-    "q_x_fs_link" -> fsLinkSql,
-    "q_x_assortativity" -> assortSql,
-    "q_x_snapshot_diff" -> snapDiffSql,
-    "q_x_lpa" -> lpaSql,
-    "q_x_assoc_rules" -> assocSql,
-    "q_x_fuzzy_join" -> fuzzyJoinSql,
-    "q_x_contain_join" -> containSql,
-    "q_x_edit_join" -> editJoinSql,
-    "q_x_jw_link" -> jwLinkSql,
-    "q_x_pagerank" -> pagerankSql,
-    "q_x_hits" -> hitsSql,
-    "q_x_triangles" -> trianglesSql,
-    "q_x_linkpred" -> linkpredSql,
-    "q_x_khop" -> khopSql,
-    "q_x_kcore" -> kcoreSql,
-    "q_x_sssp" -> ssspSql,
-    "q_x_scd2" -> scd2Sql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_nbrhood" -> (nbrhoodQ, nbrhoodSql),
+    "q_x_hyperball" -> (hyperballQ, hyperballSql),
+    "q_x_pipeline13" -> (pipeline13Q, pipeline13Sql),
+    "q_x_ppr" -> (pprQ, pprSql),
+    "q_x_clustering_coef" -> (ccoefQ, ccoefSql),
+    "q_x_modularity" -> (modularityQ, modularitySql),
+    "q_x_fs_link" -> (fsLinkQ, fsLinkSql),
+    "q_x_assortativity" -> (assortQ, assortSql),
+    "q_x_snapshot_diff" -> (snapDiffQ, snapDiffSql),
+    "q_x_lpa" -> (lpaQ, lpaSql),
+    "q_x_assoc_rules" -> (assocQ, assocSql),
+    "q_x_fuzzy_join" -> (fuzzyJoin, fuzzyJoinSql),
+    "q_x_contain_join" -> (containQ, containSql),
+    "q_x_edit_join" -> (editJoin, editJoinSql),
+    "q_x_jw_link" -> (jwLinkQ, jwLinkSql),
+    "q_x_pagerank" -> (pagerankQ, pagerankSql),
+    "q_x_hits" -> (hitsQ, hitsSql),
+    "q_x_triangles" -> (trianglesQ, trianglesSql),
+    "q_x_linkpred" -> (linkpredQ, linkpredSql),
+    "q_x_khop" -> (khopQ, khopSql),
+    "q_x_kcore" -> (kcoreQ, kcoreSql),
+    "q_x_sssp" -> (ssspQ, ssspSql),
+    "q_x_scd2" -> (scd2, scd2Sql))
 }

@@ -1273,59 +1273,31 @@ object PrepQueries {
        |FROM g LEFT JOIN o ON o.digit = g.digit CROSS JOIN t""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_benford" -> benfordQ,
-    "q_x_psi" -> psiQ,
-    "q_x_binned_drift" -> binnedDriftQ,
-    "q_x_wasserstein" -> wassersteinQ,
-    "q_x_ipf" -> ipfQ,
-    "q_x_pipeline14" -> pipeline14Q,
-    "q_x_histogram" -> histogramQ,
-    "q_x_group_corr" -> groupCorrQ,
-    "q_x_knn_label" -> knnLabel,
-    "q_x_segment_dedup" -> segmentDedupQ,
-    "q_x_span_dedup" -> spanDedupQ,
-    "q_x_seq_pack" -> seqPackQ,
-    "q_x_seq_blocks" -> seqBlocksQ,
-    "q_x_temperature_mix" -> temperatureMixQ,
-    "q_x_anomaly" -> anomalyQ,
-    "q_x_bpe" -> bpeQ,
-    "q_x_bpe_encode" -> bpeEncodeQ,
-    "q_x_bpe_decode" -> bpeDecodeQ,
-    "q_x_bpe_ids" -> bpeIdsQ,
-    "q_x_pipeline3" -> pipeline3Q,
-    "q_x_profile" -> profileQ,
-    "q_x_corpus_diff" -> corpusDiffQ,
-    "q_x_curriculum" -> curriculumQ,
-    "q_x_normalize" -> normalizeQ,
-    "q_x_epoch_mix" -> epochMixQ,
-    "q_x_pipeline2" -> pipeline2Q)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_benford" -> benfordSql,
-    "q_x_psi" -> psiSql,
-    "q_x_binned_drift" -> binnedDriftSql,
-    "q_x_wasserstein" -> wassersteinSql,
-    "q_x_ipf" -> ipfSql,
-    "q_x_pipeline14" -> pipeline14Sql,
-    "q_x_histogram" -> histogramSql,
-    "q_x_group_corr" -> groupCorrSql,
-    "q_x_knn_label" -> knnLabelSql,
-    "q_x_segment_dedup" -> segmentDedupSql,
-    "q_x_span_dedup" -> spanDedupSql,
-    "q_x_seq_pack" -> seqPackSql,
-    "q_x_seq_blocks" -> seqBlocksSql,
-    "q_x_temperature_mix" -> temperatureMixSql,
-    "q_x_anomaly" -> anomalySql,
-    "q_x_bpe" -> bpeSql,
-    "q_x_bpe_encode" -> bpeEncodeSql,
-    "q_x_bpe_decode" -> bpeDecodeSql,
-    "q_x_bpe_ids" -> bpeIdsSql,
-    "q_x_pipeline3" -> pipeline3Sql,
-    "q_x_profile" -> profileSql,
-    "q_x_corpus_diff" -> corpusDiffSql,
-    "q_x_curriculum" -> curriculumSql,
-    "q_x_normalize" -> normalizeSql,
-    "q_x_epoch_mix" -> epochMixSql,
-    "q_x_pipeline2" -> pipeline2Sql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_benford" -> (benfordQ, benfordSql),
+    "q_x_psi" -> (psiQ, psiSql),
+    "q_x_binned_drift" -> (binnedDriftQ, binnedDriftSql),
+    "q_x_wasserstein" -> (wassersteinQ, wassersteinSql),
+    "q_x_ipf" -> (ipfQ, ipfSql),
+    "q_x_pipeline14" -> (pipeline14Q, pipeline14Sql),
+    "q_x_histogram" -> (histogramQ, histogramSql),
+    "q_x_group_corr" -> (groupCorrQ, groupCorrSql),
+    "q_x_knn_label" -> (knnLabel, knnLabelSql),
+    "q_x_segment_dedup" -> (segmentDedupQ, segmentDedupSql),
+    "q_x_span_dedup" -> (spanDedupQ, spanDedupSql),
+    "q_x_seq_pack" -> (seqPackQ, seqPackSql),
+    "q_x_seq_blocks" -> (seqBlocksQ, seqBlocksSql),
+    "q_x_temperature_mix" -> (temperatureMixQ, temperatureMixSql),
+    "q_x_anomaly" -> (anomalyQ, anomalySql),
+    "q_x_bpe" -> (bpeQ, bpeSql),
+    "q_x_bpe_encode" -> (bpeEncodeQ, bpeEncodeSql),
+    "q_x_bpe_decode" -> (bpeDecodeQ, bpeDecodeSql),
+    "q_x_bpe_ids" -> (bpeIdsQ, bpeIdsSql),
+    "q_x_pipeline3" -> (pipeline3Q, pipeline3Sql),
+    "q_x_profile" -> (profileQ, profileSql),
+    "q_x_corpus_diff" -> (corpusDiffQ, corpusDiffSql),
+    "q_x_curriculum" -> (curriculumQ, curriculumSql),
+    "q_x_normalize" -> (normalizeQ, normalizeSql),
+    "q_x_epoch_mix" -> (epochMixQ, epochMixSql),
+    "q_x_pipeline2" -> (pipeline2Q, pipeline2Sql))
 }

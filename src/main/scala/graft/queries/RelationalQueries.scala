@@ -612,61 +612,32 @@ object RelationalQueries {
       |    AND (q.p_retailprice < p.p_retailprice
       |      OR q.p_size > p.p_size))""".stripMargin
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_skyline" -> skylineQ,
-    "q_g11_pivot" -> g11Pivot,
-    "q_f1_date_filter" -> f1,
-    "q_f3_ip_parse" -> f3,
-    "q_f4_dash_null" -> f4,
-    "q_f6_regex_bundle" -> f6,
-    "q_f8_datetime_parse" -> f8,
-    "q_f10_sign" -> f10,
-    "q_g1_groupby_agg" -> g1,
-    "q_g2_complement_agg" -> g2,
-    "q_g3_league_scalars" -> g3,
-    "q_g4_first5_sum" -> g4,
-    "q_g5_nullskip_avg" -> g5,
-    "q_g6_guarded_ratio" -> g6,
-    "q_g7_rollup" -> g7,
-    "q_g10_cube" -> g10,
-    "q_g8_percentiles" -> g8,
-    "q_g9_pivot" -> g9,
-    "q_f15_explode" -> f15,
-    "q_j9_semi_anti" -> j9,
-    "q_set_ops" -> setOps,
-    "q_j1_star_inner" -> j1,
-    "q_j2_left_null_pad" -> j2,
-    "q_j5_revenue_rollup" -> j5,
-    "q_j6_default_zero_lookup" -> j6,
-    "q_w1_topk_per_group" -> w1,
-    "q_a12_upsert_merge" -> a12)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_skyline" -> skylineSql,
-    "q_g11_pivot" -> g11PivotSql,
-    "q_f1_date_filter" -> f1Sql,
-    "q_f3_ip_parse" -> f3Sql,
-    "q_f4_dash_null" -> f4Sql,
-    "q_f6_regex_bundle" -> f6Sql,
-    "q_f8_datetime_parse" -> f8Sql,
-    "q_f10_sign" -> f10Sql,
-    "q_g1_groupby_agg" -> g1Sql,
-    "q_g2_complement_agg" -> g2Sql,
-    "q_g3_league_scalars" -> g3Sql,
-    "q_g4_first5_sum" -> g4Sql,
-    "q_g5_nullskip_avg" -> g5Sql,
-    "q_g6_guarded_ratio" -> g6Sql,
-    "q_g7_rollup" -> g7Sql,
-    "q_g10_cube" -> g10Sql,
-    "q_g8_percentiles" -> g8Sql,
-    "q_g9_pivot" -> g9Sql,
-    "q_f15_explode" -> f15Sql,
-    "q_j9_semi_anti" -> j9Sql,
-    "q_set_ops" -> setOpsSql,
-    "q_j1_star_inner" -> j1Sql,
-    "q_j2_left_null_pad" -> j2Sql,
-    "q_j5_revenue_rollup" -> j5Sql,
-    "q_j6_default_zero_lookup" -> j6Sql,
-    "q_w1_topk_per_group" -> w1Sql,
-    "q_a12_upsert_merge" -> a12Sql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_skyline" -> (skylineQ, skylineSql),
+    "q_g11_pivot" -> (g11Pivot, g11PivotSql),
+    "q_f1_date_filter" -> (f1, f1Sql),
+    "q_f3_ip_parse" -> (f3, f3Sql),
+    "q_f4_dash_null" -> (f4, f4Sql),
+    "q_f6_regex_bundle" -> (f6, f6Sql),
+    "q_f8_datetime_parse" -> (f8, f8Sql),
+    "q_f10_sign" -> (f10, f10Sql),
+    "q_g1_groupby_agg" -> (g1, g1Sql),
+    "q_g2_complement_agg" -> (g2, g2Sql),
+    "q_g3_league_scalars" -> (g3, g3Sql),
+    "q_g4_first5_sum" -> (g4, g4Sql),
+    "q_g5_nullskip_avg" -> (g5, g5Sql),
+    "q_g6_guarded_ratio" -> (g6, g6Sql),
+    "q_g7_rollup" -> (g7, g7Sql),
+    "q_g10_cube" -> (g10, g10Sql),
+    "q_g8_percentiles" -> (g8, g8Sql),
+    "q_g9_pivot" -> (g9, g9Sql),
+    "q_f15_explode" -> (f15, f15Sql),
+    "q_j9_semi_anti" -> (j9, j9Sql),
+    "q_set_ops" -> (setOps, setOpsSql),
+    "q_j1_star_inner" -> (j1, j1Sql),
+    "q_j2_left_null_pad" -> (j2, j2Sql),
+    "q_j5_revenue_rollup" -> (j5, j5Sql),
+    "q_j6_default_zero_lookup" -> (j6, j6Sql),
+    "q_w1_topk_per_group" -> (w1, w1Sql),
+    "q_a12_upsert_merge" -> (a12, a12Sql))
 }

@@ -180,11 +180,7 @@ object SpatialQueries {
        |FROM asg GROUP BY 1""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_geo_join" -> geoJoinQ,
-    "q_x_geo_cluster" -> geoClusterQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_geo_join" -> geoJoinSql,
-    "q_x_geo_cluster" -> geoClusterSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_geo_join" -> (geoJoinQ, geoJoinSql),
+    "q_x_geo_cluster" -> (geoClusterQ, geoClusterSql))
 }

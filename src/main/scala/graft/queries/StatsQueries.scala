@@ -1051,43 +1051,23 @@ object StatsQueries {
        |FROM pg CROSS JOIN tot CROSS JOIN np""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_ips_eval" -> ipsEvalQ,
-    "q_x_theil" -> theilQ,
-    "q_x_weighted_quantile" -> wquantQ,
-    "q_x_iv" -> ivQ,
-    "q_x_psm" -> psmQ,
-    "q_x_rdd" -> rddQ,
-    "q_x_msprt" -> msprtQ,
-    "q_x_cochran_q" -> cochranQ2,
-    "q_x_ks_battery" -> ksBatteryQ,
-    "q_x_pipeline9" -> pipeline9Q,
-    "q_x_spearman" -> spearmanQ,
-    "q_x_partial_corr" -> partialQ,
-    "q_x_kruskal" -> kruskalQ,
-    "q_x_friedman" -> friedmanQ,
-    "q_x_anova" -> anovaQ,
-    "q_x_levene" -> leveneQ,
-    "q_x_mutual_info" -> miQ,
-    "q_x_mcnemar" -> mcnemarQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_ips_eval" -> ipsEvalSql,
-    "q_x_theil" -> theilSql,
-    "q_x_weighted_quantile" -> wquantSql,
-    "q_x_iv" -> ivSql,
-    "q_x_psm" -> psmSql,
-    "q_x_rdd" -> rddSql,
-    "q_x_msprt" -> msprtSql,
-    "q_x_cochran_q" -> cochranSql,
-    "q_x_ks_battery" -> ksBatterySql,
-    "q_x_pipeline9" -> pipeline9Sql,
-    "q_x_spearman" -> spearmanSql,
-    "q_x_partial_corr" -> partialSql,
-    "q_x_kruskal" -> kruskalSql,
-    "q_x_friedman" -> friedmanSql,
-    "q_x_anova" -> anovaSql,
-    "q_x_levene" -> leveneSql,
-    "q_x_mutual_info" -> miSql,
-    "q_x_mcnemar" -> mcnemarSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_ips_eval" -> (ipsEvalQ, ipsEvalSql),
+    "q_x_theil" -> (theilQ, theilSql),
+    "q_x_weighted_quantile" -> (wquantQ, wquantSql),
+    "q_x_iv" -> (ivQ, ivSql),
+    "q_x_psm" -> (psmQ, psmSql),
+    "q_x_rdd" -> (rddQ, rddSql),
+    "q_x_msprt" -> (msprtQ, msprtSql),
+    "q_x_cochran_q" -> (cochranQ2, cochranSql),
+    "q_x_ks_battery" -> (ksBatteryQ, ksBatterySql),
+    "q_x_pipeline9" -> (pipeline9Q, pipeline9Sql),
+    "q_x_spearman" -> (spearmanQ, spearmanSql),
+    "q_x_partial_corr" -> (partialQ, partialSql),
+    "q_x_kruskal" -> (kruskalQ, kruskalSql),
+    "q_x_friedman" -> (friedmanQ, friedmanSql),
+    "q_x_anova" -> (anovaQ, anovaSql),
+    "q_x_levene" -> (leveneQ, leveneSql),
+    "q_x_mutual_info" -> (miQ, miSql),
+    "q_x_mcnemar" -> (mcnemarQ, mcnemarSql))
 }

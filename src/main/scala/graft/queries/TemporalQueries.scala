@@ -255,23 +255,13 @@ object TemporalQueries {
   private val approxPctSql =
     """SELECT 'approx_percentile_p50_p90' AS metric, TRUE AS ok"""
 
-  val queries: Map[String, QFn] = Map(
-    "q_j10_asof" -> j10,
-    "q_j10b_asof_forward" -> j10b,
-    "q_j10c_asof_tolerance" -> j10c,
-    "q_j11_range" -> j11,
-    "q_j12_bloom_prune" -> j12,
-    "q_j13_salted_join" -> j13,
-    "q_w2_recent10" -> w2,
-    "q_x_approx_percentile" -> approxPct)
-
-  val oracles: Map[String, String] = Map(
-    "q_j10_asof" -> j10Sql,
-    "q_j10b_asof_forward" -> j10bSql,
-    "q_j10c_asof_tolerance" -> j10cSql,
-    "q_j11_range" -> j11Sql,
-    "q_j12_bloom_prune" -> j12Sql,
-    "q_j13_salted_join" -> j13Sql,
-    "q_w2_recent10" -> w2Sql,
-    "q_x_approx_percentile" -> approxPctSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_j10_asof" -> (j10, j10Sql),
+    "q_j10b_asof_forward" -> (j10b, j10bSql),
+    "q_j10c_asof_tolerance" -> (j10c, j10cSql),
+    "q_j11_range" -> (j11, j11Sql),
+    "q_j12_bloom_prune" -> (j12, j12Sql),
+    "q_j13_salted_join" -> (j13, j13Sql),
+    "q_w2_recent10" -> (w2, w2Sql),
+    "q_x_approx_percentile" -> (approxPct, approxPctSql))
 }

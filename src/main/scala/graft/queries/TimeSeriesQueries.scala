@@ -2570,101 +2570,52 @@ object TimeSeriesQueries {
        |FROM hw CROSS JOIN hs""".stripMargin
   }
 
-  val queries: Map[String, QFn] = Map(
-    "q_x_holt_winters" -> hwQ,
-    "q_x_burst" -> burstQ,
-    "q_x_sax" -> saxQ,
-    "q_x_qte" -> qteQ,
-    "q_x_dispersion" -> dispersionQ,
-    "q_x_mantel_haenszel" -> mhQ,
-    "q_x_ipw_ate" -> ipwQ,
-    "q_x_seasonal_strength" -> seasonalStrengthQ,
-    "q_x_srm" -> srmQ,
-    "q_x_pipeline8" -> pipeline8Q,
-    "q_x_cuped" -> cupedQ,
-    "q_x_prop_test" -> propTestQ,
-    "q_x_trend" -> trendQ,
-    "q_x_mann_kendall" -> mkQ,
-    "q_x_theil_sen" -> theilSenQ,
-    "q_x_xcorr" -> xcorrQ,
-    "q_x_changepoint" -> changepointQ,
-    "q_x_acf" -> acfQ,
-    "q_x_ar2" -> ar2Q,
-    "q_x_pipeline7" -> pipeline7Q,
-    "q_x_ewma" -> ewmaQ,
-    "q_x_des" -> desQ,
-    "q_x_quantile_norm" -> qnormQ,
-    "q_x_chisq" -> chisqQ,
-    "q_x_mwu" -> mwuQ,
-    "q_x_effect_size" -> effectQ,
-    "q_x_risk_ratio" -> riskQ,
-    "q_x_ks" -> ksQ,
-    "q_x_cvm" -> cvmQ,
-    "q_x_backtest" -> backtestQ,
-    "q_x_bootstrap" -> bootstrapQ,
-    "q_x_permtest" -> permTestQ,
-    "q_x_jackknife" -> jackknifeQ,
-    "q_x_mde" -> mdeQ,
-    "q_x_trimmed_mean" -> trimmedQ,
-    "q_x_resample" -> resampleQ,
-    "q_x_interp" -> interpQ,
-    "q_x_seasonal" -> seasonalQ,
-    "q_x_cusum" -> cusumQ,
-    "q_x_robust_z" -> robustZQ,
-    "q_x_abtest" -> abtestQ,
-    "q_x_did" -> didQ,
-    "q_x_winsorize" -> winsorQ,
-    "q_x_pct_rank" -> pctRankQ,
-    "q_x_pipeline6" -> pipeline6Q,
-    "q_x_gaps" -> gapsQ,
-    "q_x_agg_merge" -> aggMergeQ)
-
-  val oracles: Map[String, String] = Map(
-    "q_x_holt_winters" -> hwSql,
-    "q_x_burst" -> burstSql,
-    "q_x_sax" -> saxSql,
-    "q_x_qte" -> qteSql,
-    "q_x_dispersion" -> dispersionSql,
-    "q_x_mantel_haenszel" -> mhSql,
-    "q_x_ipw_ate" -> ipwSql,
-    "q_x_seasonal_strength" -> seasonalStrengthSql,
-    "q_x_srm" -> srmSql,
-    "q_x_pipeline8" -> pipeline8Sql,
-    "q_x_cuped" -> cupedSql,
-    "q_x_prop_test" -> propTestSql,
-    "q_x_trend" -> trendSql,
-    "q_x_mann_kendall" -> mkSql,
-    "q_x_theil_sen" -> theilSenSql,
-    "q_x_xcorr" -> xcorrSql,
-    "q_x_changepoint" -> changepointSql,
-    "q_x_acf" -> acfSql,
-    "q_x_ar2" -> ar2Sql,
-    "q_x_pipeline7" -> pipeline7Sql,
-    "q_x_ewma" -> ewmaSql,
-    "q_x_des" -> desSql,
-    "q_x_quantile_norm" -> qnormSql,
-    "q_x_chisq" -> chisqSql,
-    "q_x_mwu" -> mwuSql,
-    "q_x_effect_size" -> effectSql,
-    "q_x_risk_ratio" -> riskSql,
-    "q_x_ks" -> ksSql,
-    "q_x_cvm" -> cvmSql,
-    "q_x_backtest" -> backtestSql,
-    "q_x_bootstrap" -> bootstrapSql,
-    "q_x_permtest" -> permTestSql,
-    "q_x_jackknife" -> jackknifeSql,
-    "q_x_mde" -> mdeSql,
-    "q_x_trimmed_mean" -> trimmedSql,
-    "q_x_resample" -> resampleSql,
-    "q_x_interp" -> interpSql,
-    "q_x_seasonal" -> seasonalSql,
-    "q_x_cusum" -> cusumSql,
-    "q_x_robust_z" -> robustZSql,
-    "q_x_abtest" -> abtestSql,
-    "q_x_did" -> didSql,
-    "q_x_winsorize" -> winsorSql,
-    "q_x_pct_rank" -> pctRankSql,
-    "q_x_pipeline6" -> pipeline6Sql,
-    "q_x_gaps" -> gapsSql,
-    "q_x_agg_merge" -> aggMergeSql)
+  val queries: Map[String, (QFn, String)] = Map(
+    "q_x_holt_winters" -> (hwQ, hwSql),
+    "q_x_burst" -> (burstQ, burstSql),
+    "q_x_sax" -> (saxQ, saxSql),
+    "q_x_qte" -> (qteQ, qteSql),
+    "q_x_dispersion" -> (dispersionQ, dispersionSql),
+    "q_x_mantel_haenszel" -> (mhQ, mhSql),
+    "q_x_ipw_ate" -> (ipwQ, ipwSql),
+    "q_x_seasonal_strength" -> (seasonalStrengthQ, seasonalStrengthSql),
+    "q_x_srm" -> (srmQ, srmSql),
+    "q_x_pipeline8" -> (pipeline8Q, pipeline8Sql),
+    "q_x_cuped" -> (cupedQ, cupedSql),
+    "q_x_prop_test" -> (propTestQ, propTestSql),
+    "q_x_trend" -> (trendQ, trendSql),
+    "q_x_mann_kendall" -> (mkQ, mkSql),
+    "q_x_theil_sen" -> (theilSenQ, theilSenSql),
+    "q_x_xcorr" -> (xcorrQ, xcorrSql),
+    "q_x_changepoint" -> (changepointQ, changepointSql),
+    "q_x_acf" -> (acfQ, acfSql),
+    "q_x_ar2" -> (ar2Q, ar2Sql),
+    "q_x_pipeline7" -> (pipeline7Q, pipeline7Sql),
+    "q_x_ewma" -> (ewmaQ, ewmaSql),
+    "q_x_des" -> (desQ, desSql),
+    "q_x_quantile_norm" -> (qnormQ, qnormSql),
+    "q_x_chisq" -> (chisqQ, chisqSql),
+    "q_x_mwu" -> (mwuQ, mwuSql),
+    "q_x_effect_size" -> (effectQ, effectSql),
+    "q_x_risk_ratio" -> (riskQ, riskSql),
+    "q_x_ks" -> (ksQ, ksSql),
+    "q_x_cvm" -> (cvmQ, cvmSql),
+    "q_x_backtest" -> (backtestQ, backtestSql),
+    "q_x_bootstrap" -> (bootstrapQ, bootstrapSql),
+    "q_x_permtest" -> (permTestQ, permTestSql),
+    "q_x_jackknife" -> (jackknifeQ, jackknifeSql),
+    "q_x_mde" -> (mdeQ, mdeSql),
+    "q_x_trimmed_mean" -> (trimmedQ, trimmedSql),
+    "q_x_resample" -> (resampleQ, resampleSql),
+    "q_x_interp" -> (interpQ, interpSql),
+    "q_x_seasonal" -> (seasonalQ, seasonalSql),
+    "q_x_cusum" -> (cusumQ, cusumSql),
+    "q_x_robust_z" -> (robustZQ, robustZSql),
+    "q_x_abtest" -> (abtestQ, abtestSql),
+    "q_x_did" -> (didQ, didSql),
+    "q_x_winsorize" -> (winsorQ, winsorSql),
+    "q_x_pct_rank" -> (pctRankQ, pctRankSql),
+    "q_x_pipeline6" -> (pipeline6Q, pipeline6Sql),
+    "q_x_gaps" -> (gapsQ, gapsSql),
+    "q_x_agg_merge" -> (aggMergeQ, aggMergeSql))
 }

@@ -8,8 +8,29 @@ import org.scalatest.funsuite.AnyFunSuite
   * no query owns a result it consumes, and the owner chains always
   * terminate at a query that recomputes from scratch (the
   * owner-always-recomputes discipline needs one always-fresh root per
-  * result). */
+  * result). The registry under both: each query is declared in one
+  * module only, always with its oracle SQL. */
 class BenchSharedPrefixSpec extends AnyFunSuite {
+
+  test("no query name is declared by two modules") {
+    val names = SparkEntry.modules.flatMap(_.keys)
+    val twice = names.diff(names.distinct)
+    assert(twice.isEmpty, s"declared by two modules: ${twice.mkString(",")}")
+    assert(SparkEntry.modules.size == 13)
+    assert(names.size == SparkEntry.queries.size)
+    assert(SparkEntry.queries.size == 307)
+  }
+
+  test("the oracles cover exactly the queries") {
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
+
+  test("no oracle SQL is null or empty") {
+    val blank = SparkEntry.oracleSql.collect {
+      case (name, sql) if sql == null || sql.trim.isEmpty => name
+    }
+    assert(blank.isEmpty, s"null or empty oracle SQL: ${blank.mkString(",")}")
+  }
 
   private lazy val prefix = SparkEntry.sharedPrefix
 

@@ -159,11 +159,11 @@ class BpeSpec extends SparkSpec {
   }
 
   test("local encode == SQL-fold twin at a trained many-rule artifact " +
-      "on a rich synthetic vocabulary (the BpeBench encode fixture)") {
+      "on a rich synthetic vocabulary (the BPE_BENCH.json encode fixture)") {
     // deterministic rich corpus: per-(token, doc) base-36 suffixes, the
-    // same enrichment BpeBench measures encode under — so the
-    // local==fold contract is pinned on the REGIME the bench reports,
-    // not only the 5-rule Sennrich fixture
+    // same enrichment BPE_BENCH.json's encode rows were measured under —
+    // so the local==fold contract is pinned on the REGIME the bench
+    // reports, not only the 5-rule Sennrich fixture
     val base = Seq("low", "lower", "newest", "widest", "news", "wide",
       "lowest", "est", "rowed", "stew")
     val docs = (1L to 40L).map { d =>

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.core.Tables
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,7 @@ class CorpusCardSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("each card row equals its standalone operator's value") {
-    val card = CorpusQueries.queries("q_x_pipeline11")(spark, sf)
+    val card = SparkEntry.queries("q_x_pipeline11")(spark, sf)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         Option(r.get(2)).map(_.asInstanceOf[Double])).toMap
@@ -25,9 +25,9 @@ class CorpusCardSpec extends SparkSpec {
       "vocab", "ttr", "hapax_rate", "yule_k", "entropy",
       "norm_entropy", "quality_pass_rate", "exact_dup_rate"))
 
-    val lex = CorpusQueries.queries("q_x_lexical")(spark, sf)
+    val lex = SparkEntry.queries("q_x_lexical")(spark, sf)
       .collect().map(r => r.getString(0) -> r).toMap
-    val ent = CorpusQueries.queries("q_x_entropy")(spark, sf)
+    val ent = SparkEntry.queries("q_x_entropy")(spark, sf)
       .collect().map(r => r.getString(0) -> r).toMap
     sources.foreach { s =>
       assert(card((s, "n_tokens")) ===

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.ext.Profile
 import graft.core.Tables
 
@@ -14,7 +14,7 @@ class DependenceSuiteSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("each suite row equals its standalone query's statistic") {
-    val suite = StatsQueries.queries("q_x_pipeline9")(spark, sf)
+    val suite = SparkEntry.queries("q_x_pipeline9")(spark, sf)
       .collect().map(r => r.getString(0) ->
         ((Option(r.get(1)).map(_.asInstanceOf[Double]),
           Option(r.get(2)).map(_.asInstanceOf[Double]),
@@ -28,14 +28,14 @@ class DependenceSuiteSpec extends SparkSpec {
     assert(suite("pearson")._1 === Option(pe.getAs[Double]("corr")))
     assert(suite("pearson")._3 === pe.getAs[Long]("n"))
 
-    val sp = StatsQueries.queries("q_x_spearman")(spark, sf).head()
+    val sp = SparkEntry.queries("q_x_spearman")(spark, sf).head()
     assert(suite("spearman")._1 === Option(sp.getAs[Double]("rho")))
 
-    val an = StatsQueries.queries("q_x_anova")(spark, sf).head()
+    val an = SparkEntry.queries("q_x_anova")(spark, sf).head()
     assert(suite("anova_f")._1 === Option(an.getAs[Double]("f")))
     assert(suite("anova_f")._2 === Option(an.getAs[Double]("ssb")))
 
-    val lv = StatsQueries.queries("q_x_levene")(spark, sf).head()
+    val lv = SparkEntry.queries("q_x_levene")(spark, sf).head()
     assert(suite("levene_f")._1 === Option(lv.getAs[Double]("f")))
 
     val kw = Profile.kruskalWallis(li, "l_returnflag", "l_quantity")

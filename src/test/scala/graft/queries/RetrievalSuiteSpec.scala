@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Pipeline 10 (the retrieval-quality suite) must report EXACTLY the
   * standalone `q_x_ndcg` / `q_x_rank_eval` statistics — composition
@@ -11,7 +11,7 @@ class RetrievalSuiteSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("each suite row equals its standalone query's statistic") {
-    val suite = CorpusQueries.queries("q_x_pipeline10")(spark, sf)
+    val suite = SparkEntry.queries("q_x_pipeline10")(spark, sf)
       .collect().map(r => r.getString(0) ->
         ((Option(r.get(1)).map(_.asInstanceOf[Double]),
           Option(r.get(2)).map(_.asInstanceOf[Double]),
@@ -19,12 +19,12 @@ class RetrievalSuiteSpec extends SparkSpec {
     assert(suite.keySet === Set("ndcg", "mrr", "precision", "recall",
       "hit"))
 
-    val nd = CorpusQueries.queries("q_x_ndcg")(spark, sf).head()
+    val nd = SparkEntry.queries("q_x_ndcg")(spark, sf).head()
     assert(suite("ndcg")._1 === Option(nd.getAs[Double]("ndcg")))
     assert(suite("ndcg")._2 === Option(nd.getAs[Double]("dcg")))
     assert(suite("ndcg")._3 === nd.getAs[Long]("n_ranked"))
 
-    val re = CorpusQueries.queries("q_x_rank_eval")(spark, sf).head()
+    val re = SparkEntry.queries("q_x_rank_eval")(spark, sf).head()
     assert(suite("mrr")._1 === Option(re.getAs[Double]("mrr")))
     assert(suite("mrr")._2 ===
       Option(re.getAs[Long]("first_rel_rank").toDouble))

@@ -34,10 +34,13 @@ def canon(df):
                         ignore_index=True, kind="mergesort")
     return df
 
+# a typo in the subset must not pass as a vacuous "0/0 match"
+unknown = sorted((ONLY or set()) - set(oracle))
+if unknown:
+    sys.exit(f"unknown queries (not in oracle_sql.json): {','.join(unknown)}")
+checked = sorted(n for n in oracle if not ONLY or n in ONLY)
 fails = 0
-for name in sorted(oracle):
-    if ONLY and name not in ONLY:
-        continue
+for name in checked:
     files = glob.glob(f"{OUT}/{name}/*.parquet")
     if not files:
         print(f"FAIL {name}: no spark output"); fails += 1; continue
@@ -75,5 +78,5 @@ for name in sorted(oracle):
         print(f"FAIL {name}: {bad}"); fails += 1
     else:
         print(f"OK   {name} ({len(spark_df)} rows)")
-print(f"\n{len(oracle) - fails}/{len(oracle)} oracle-checked queries match")
+print(f"\n{len(checked) - fails}/{len(checked)} oracle-checked queries match")
 sys.exit(1 if fails else 0)
