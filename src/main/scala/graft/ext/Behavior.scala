@@ -59,7 +59,7 @@ object Behavior {
     *
     * Determinism: deltas are EXACT epoch-microsecond longs; the
     * percentiles are DISCRETE order statistics k = ceil(q·n) read off
-    * [[Profile.percentRank]]'s binned prefix sums (min value with
+    * [[Profile.percentRank]]'s exact ranks (min value with
     * cum ≥ k — the conformal convention, never interpolated), so the
     * whole operator has no float contract at all. No per-step global
     * sort: the prefix machinery bins each (step) group.
@@ -68,7 +68,7 @@ object Behavior {
     *         p90_us, max_us) */
   def timeToConvert(events: DataFrame, userCol: String, tsCol: String,
       typeCol: String, steps: Seq[String],
-      maxGap: Option[Column] = None, nBins: Int = 1024): DataFrame = {
+      maxGap: Option[Column] = None): DataFrame = {
     val fn = conversionFunnel(events, userCol, tsCol, typeCol, steps,
       maxGap)
     val t0 = fn.where(col("step_idx") === 0)
@@ -78,7 +78,7 @@ object Behavior {
         (unix_micros(col("ts")) - unix_micros(col("t0")))
           .as("delta_us"))
     val pr = Profile.percentRank(deltas, Seq("step_idx", "step"),
-      "delta_us", nBins)
+      "delta_us")
     val tot = pr.groupBy(col("step_idx"), col("step"))
       .agg(max(col("n_below") + col("cnt")).as("n"))
     val cum = col("n_below") + col("cnt")

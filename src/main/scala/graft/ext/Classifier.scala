@@ -91,51 +91,33 @@ object Classifier {
     df.withColumn(outCol, zOf(features, w))
   }
 
-  /** Exact ROC AUC (Mann–Whitney with the standard tie correction):
-    * AUC = [Σ_s p(s)·negBelow(s) + ½·p(s)·q(s)] / (P·Q) over distinct
-    * score values s. The cumulative-negatives rank runs as the
-    * Curriculum two-phase prefix sum — monotone value-range bins from
-    * a broadcast (lo, hi), a within-bin window (partitions bounded by
-    * per-bin density), and per-bin bases folded inside ONE O(nBins)
-    * row — so no global-order window exists at any corpus size
-    * (lint-clean, spec-pinned). Counts multiply through DECIMAL(38,0)
-    * (P·Q overflows Long at ~10^12-row corpora); the single final
-    * division is sig9'd for cross-engine parity. Output: one row
-    * (auc, n_pos, n_neg); AUC is NULL when either class is absent. */
-  def auc(df: DataFrame, scoreCol: String, labelCol: String,
-          nBins: Int = 1024): DataFrame = {
+  /** Distinct non-null scores with their positive (p) and negative (q)
+    * label counts, checkpointed — the prefix sum and the caller both
+    * read it. */
+  private def scoreCounts(df: DataFrame, scoreCol: String,
+      labelCol: String): DataFrame = {
     val y = col(labelCol)
-    val counts = df
-      .filter(col(scoreCol).isNotNull && y.isNotNull)
+    df.filter(col(scoreCol).isNotNull && y.isNotNull)
       .groupBy(col(scoreCol).cast("double").as("s"))
       .agg(sum(when(y === 1.0, 1L).otherwise(0L)).as("p"),
         sum(when(y === 1.0, 0L).otherwise(1L)).as("q"))
       .localCheckpoint()
-    val mm = counts.agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
-    val binned = counts.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-      .select(col("s"), col("p"), col("q"), col("bin"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bin")).orderBy(col("s"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val within = binned.withColumn("localq",
-      coalesce(sum(col("q")).over(wIn), lit(0L)))
-    val binTot = binned.groupBy(col("bin")).agg(sum(col("q")).as("bc"))
-    val bases = binTot
-      .agg(array_sort(collect_list(struct(col("bin"), col("bc")))).as("a"))
-      .select(explode(transform(col("a"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("a"), lit(1), i), lit(0L),
-            (acc, b) => acc + b.getField("bc")).as("base")))).as("b"))
-      .select(col("b.bin").as("bin"), col("b.base").as("base"))
+  }
+
+  /** Exact ROC AUC (Mann–Whitney with the standard tie correction):
+    * AUC = [Σ_s p(s)·negBelow(s) + ½·p(s)·q(s)] / (P·Q) over distinct
+    * score values s. The cumulative-negatives rank is
+    * [[Prefix.below]], so no global-order window exists at any corpus
+    * size (lint-clean, spec-pinned). Counts multiply through
+    * DECIMAL(38,0) (P·Q overflows Long at ~10^12-row corpora); the
+    * single final division is sig9'd for cross-engine parity. Output:
+    * one row (auc, n_pos, n_neg); AUC is NULL when either class is
+    * absent. */
+  def auc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val cum = within.join(bases, Seq("bin"))
-      .withColumn("nb", col("base") + col("localq"))
+    val cum = Prefix.below(scoreCounts(df, scoreCol, labelCol), Nil, "s",
+        Seq("q"))
+      .withColumnRenamed("below_q", "nb")
     cum.agg(
         sum(col("p").cast(dec) * (lit(2).cast(dec) * col("nb").cast(dec)
           + col("q").cast(dec))).as("num"),
@@ -583,59 +565,22 @@ object Classifier {
     * metric when positives are rare (quality filtering, dedup
     * verification, contamination flags — ROC-AUC saturates there).
     *
-    * Same scale shape as [[auc]]: distinct-score counts, equi-width
-    * score bins, KEYED within-bin prefix windows + one bounded
-    * cross-bin base fold — no global-order window at any size. The
-    * ≥s cumulatives come from totals − exclusive-ascending-prefix
-    * (exact integers); each threshold term is one sig9'd IEEE
-    * expression of exact integers, summed via dsumStable(6).
+    * Plan: distinct-score counts, then [[Prefix.below]] — no
+    * global-order window at any size. The ≥s cumulatives are
+    * totals − exclusive-ascending-prefix (exact integers); each
+    * threshold term is one sig9'd IEEE expression of exact integers,
+    * summed via dsumStable(6).
     *
     * @return one row: (average_precision, n_pos, n_neg, baseline =
     *         P/(P+Q), the random-classifier AP) */
-  def prAuc(df: DataFrame, scoreCol: String, labelCol: String,
-      nBins: Int = 1024): DataFrame = {
-    val y = col(labelCol)
-    val counts = df
-      .filter(col(scoreCol).isNotNull && y.isNotNull)
-      .groupBy(col(scoreCol).cast("double").as("s"))
-      .agg(sum(when(y === 1.0, 1L).otherwise(0L)).as("p"),
-        sum(when(y === 1.0, 0L).otherwise(1L)).as("q"))
-      .localCheckpoint()
-    val mm = counts.agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
-    val binned = counts.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-      .select(col("s"), col("p"), col("q"), col("bin"))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bin")).orderBy(col("s"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val within = binned
-      .withColumn("localp", coalesce(sum(col("p")).over(wIn), lit(0L)))
-      .withColumn("localq", coalesce(sum(col("q")).over(wIn), lit(0L)))
-    val binTot = binned.groupBy(col("bin"))
-      .agg(sum(col("p")).as("bp"), sum(col("q")).as("bq"))
-    val bases = binTot
-      .agg(array_sort(collect_list(struct(col("bin"), col("bp"),
-        col("bq")))).as("a"))
-      .select(explode(transform(col("a"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("a"), lit(1), i), lit(0L),
-            (acc, b) => acc + b.getField("bp")).as("basep"),
-          aggregate(slice(col("a"), lit(1), i), lit(0L),
-            (acc, b) => acc + b.getField("bq")).as("baseq")))).as("b"))
-      .select(col("b.bin").as("bin"), col("b.basep").as("basep"),
-        col("b.baseq").as("baseq"))
-    val tot = counts.agg(sum(col("p")).cast("long").as("pt"),
-      sum(col("q")).cast("long").as("qt"))
-    val cum = within.join(bases, Seq("bin"))
-      .crossJoin(broadcast(tot))
+  def prAuc(df: DataFrame, scoreCol: String,
+      labelCol: String): DataFrame = {
+    val cum = Prefix.below(scoreCounts(df, scoreCol, labelCol), Nil, "s",
+        Seq("p", "q"))
+      .withColumnRenamed("tot_p", "pt").withColumnRenamed("tot_q", "qt")
       // positives/negatives at score >= s: total − exclusive prefix
-      .withColumn("cp", col("pt") - (col("basep") + col("localp")))
-      .withColumn("cq", col("qt") - (col("baseq") + col("localq")))
+      .withColumn("cp", col("pt") - col("below_p"))
+      .withColumn("cq", col("qt") - col("below_q"))
       .withColumn("term", when(col("p") > 0, Q.sig9(
         col("p").cast("double") * col("cp").cast("double")
           / (col("cp") + col("cq")).cast("double")))
@@ -715,6 +660,27 @@ object Classifier {
         col("fit"))
   }
 
+  /** One row: each feature's observed [min, max] as `__lo_<f>` and
+    * `__hi_<f>` — the per-feature bounds the stump learners bin by. */
+  private def featureBounds(base: DataFrame,
+      features: Seq[String]): DataFrame = {
+    val bounds = features.flatMap(f => Seq(
+      min(col(f).cast("double")).as(s"__lo_$f"),
+      max(col(f).cast("double")).as(s"__hi_$f")))
+    base.agg(bounds.head, bounds.tail: _*)
+  }
+
+  /** Feature f's equi-width bin in [0, bins) over its
+    * [[featureBounds]] columns. */
+  private def featureBin(f: String, bins: Int): Column = {
+    val x = col(f).cast("double")
+    val lo = col(s"__lo_$f"); val hi = col(s"__hi_$f")
+    when(hi === lo, lit(0L))
+      .otherwise(least(lit((bins - 1).toLong),
+        greatest(lit(0L),
+          floor((x - lo) / ((hi - lo) / bins)).cast("long"))))
+  }
+
   /** Depth-1 decision-tree (stump) split search over binned numeric
     * features — the exact-Gini candidate table a distributed CART /
     * GBDT trainer evaluates at every node (finding THE split is the
@@ -745,24 +711,10 @@ object Classifier {
     val base = df.where(y.isNotNull &&
       features.map(f => col(f).cast("double").isNotNull)
         .reduce(_ && _))
-    val mm = base.agg(
-      features.flatMap(f => Seq(
-        min(col(f).cast("double")).as(s"__lo_$f"),
-        max(col(f).cast("double")).as(s"__hi_$f"))).head,
-      features.flatMap(f => Seq(
-        min(col(f).cast("double")).as(s"__lo_$f"),
-        max(col(f).cast("double")).as(s"__hi_$f"))).tail: _*)
-    def binOf(f: String) = {
-      val x = col(f).cast("double")
-      val lo = col(s"__lo_$f"); val hi = col(s"__hi_$f")
-      when(hi === lo, lit(0L))
-        .otherwise(least(lit((bins - 1).toLong),
-          greatest(lit(0L),
-            floor((x - lo) / ((hi - lo) / bins)).cast("long"))))
-    }
-    val stacked = base.crossJoin(broadcast(mm))
+    val stacked = base.crossJoin(broadcast(featureBounds(base, features)))
       .select(y.as("y"), array(features.map(f =>
-        struct(lit(f).as("feature"), binOf(f).as("bin"))): _*).as("fb"))
+        struct(lit(f).as("feature"), featureBin(f, bins).as("bin"))): _*)
+        .as("fb"))
       .select(col("y"), explode(col("fb")).as("e"))
       .groupBy(col("e.feature").as("feature"), col("e.bin").as("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).cast("long").as("pos"))
@@ -1048,24 +1000,10 @@ object Classifier {
     val y = col(labelCol).cast("long")
     val base = df.where(y.isNotNull &&
       features.map(f => col(f).cast("double").isNotNull).reduce(_ && _))
-    val mm = base.agg(
-      features.flatMap(f => Seq(
-        min(col(f).cast("double")).as(s"__lo_$f"),
-        max(col(f).cast("double")).as(s"__hi_$f"))).head,
-      features.flatMap(f => Seq(
-        min(col(f).cast("double")).as(s"__lo_$f"),
-        max(col(f).cast("double")).as(s"__hi_$f"))).tail: _*)
-    def binOf(f: String) = {
-      val x = col(f).cast("double")
-      val lo = col(s"__lo_$f"); val hi = col(s"__hi_$f")
-      when(hi === lo, lit(0L))
-        .otherwise(least(lit((bins - 1).toLong),
-          greatest(lit(0L),
-            floor((x - lo) / ((hi - lo) / bins)).cast("long"))))
-    }
     // ONE corpus scan -> the bounded cell table the loop runs on
-    var cells = base.crossJoin(broadcast(mm))
-      .select(features.map(f => binOf(f).as(s"__b_$f")) :+ y.as("__y"): _*)
+    var cells = base.crossJoin(broadcast(featureBounds(base, features)))
+      .select(features.map(f => featureBin(f, bins).as(s"__b_$f")) :+
+        y.as("__y"): _*)
       .groupBy(features.map(f => col(s"__b_$f")) :+ col("__y"): _*)
       .agg(count(lit(1)).as("__n"))
       .withColumn("__w", lit(1.0))
@@ -1174,24 +1112,10 @@ object Classifier {
     val y = col(labelCol).cast("double")
     val base = df.where(y.isNotNull &&
       features.map(f => col(f).cast("double").isNotNull).reduce(_ && _))
-    val mm = base.agg(
-      features.flatMap(f => Seq(
-        min(col(f).cast("double")).as(s"__lo_$f"),
-        max(col(f).cast("double")).as(s"__hi_$f"))).head,
-      features.flatMap(f => Seq(
-        min(col(f).cast("double")).as(s"__lo_$f"),
-        max(col(f).cast("double")).as(s"__hi_$f"))).tail: _*)
-    def binOf(f: String) = {
-      val x = col(f).cast("double")
-      val lo = col(s"__lo_$f"); val hi = col(s"__hi_$f")
-      when(hi === lo, lit(0L))
-        .otherwise(least(lit((bins - 1).toLong),
-          greatest(lit(0L),
-            floor((x - lo) / ((hi - lo) / bins)).cast("long"))))
-    }
     // ONE corpus scan -> bounded (bin vector, n, sy, sy2) cell table
-    var cells = base.crossJoin(broadcast(mm))
-      .select(features.map(f => binOf(f).as(s"__b_$f")) :+ y.as("__yv"): _*)
+    var cells = base.crossJoin(broadcast(featureBounds(base, features)))
+      .select(features.map(f => featureBin(f, bins).as(s"__b_$f")) :+
+        y.as("__yv"): _*)
       .groupBy(features.map(f => col(s"__b_$f")): _*)
       .agg(count(lit(1)).as("__n"),
         Q.dsumStable(col("__yv"), 6).as("__sy"),

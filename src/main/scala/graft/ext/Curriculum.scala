@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Curriculum construction: assign every document to a score-quantile
@@ -20,15 +19,9 @@ import org.apache.spark.sql.functions._
   *  1. `groupBy(score).count()` — the distinct-score histogram; one
   *     shuffle, map-side partial aggregation, skew-immune (a hot score
   *     collapses to one row before the exchange);
-  *  2. cumulative counts over the histogram via the two-phase prefix
-  *     sum (the [[Packing]] pattern): value-range bins from a
-  *     broadcast (min, max) — binning is monotone in the score, so any
-  *     bin width gives the same answer — a windowed sum WITHIN each
-  *     bin (partitions bounded by per-bin distinct count, and the sort
-  *     spills; an aggregation buffer does not), and per-bin bases from
-  *     one O(nBins)-row array aggregate (no global window: the prefix
-  *     over the bin axis is a higher-order fold inside a single
-  *     O(nBins) row);
+  *  2. cumulative counts over the histogram via [[Prefix.below]] (no
+  *     global window; every sort is bounded by a value bin and spills,
+  *     where an aggregation buffer would not);
   *  3. each target rank k = p*(n-1) (Spark's Percentile formula,
   *     reproduced exactly: floor/ceil neighbors, linear interpolation)
   *     finds its value by a broadcast range-probe into the cumulative
@@ -41,7 +34,8 @@ import org.apache.spark.sql.functions._
   * the bucket of a score sitting exactly on it); the result is
   * bit-identical to `percentile(score, probs)` — the DuckDB
   * `quantile_cont` oracle adjudicates that — with every aggregation
-  * buffer bounded by O(nBins) and every sort bounded by a bin.
+  * buffer bounded by O([[Prefix.Bins]]) and every sort bounded by a
+  * bin.
   *
   * With heavy score ties the buckets are unequal by exactly the tie
   * mass — the price of a deterministic, order-free assignment (ntile
@@ -54,11 +48,9 @@ import org.apache.spark.sql.functions._
 object Curriculum {
 
   def buckets(df: DataFrame, keyCol: String, scoreCol: String,
-              nBuckets: Int, salt: String = "curriculum",
-              nBins: Int = 1024): DataFrame = {
+              nBuckets: Int, salt: String = "curriculum"): DataFrame = {
     require(nBuckets >= 2, "nBuckets must be >= 2")
-    require(nBins >= 1, "nBins must be >= 1")
-    val bounds = exactBoundaries(df, scoreCol, nBuckets, nBins)
+    val bounds = exactBoundaries(df, scoreCol, nBuckets)
     df.crossJoin(broadcast(bounds))
       .withColumn("bucket",
         aggregate(col("bounds"), lit(0L),
@@ -73,8 +65,8 @@ object Curriculum {
     * `transform(percentile(score, probs), sig9)` but with bounded
     * state (see object doc). Exposed for callers that want the
     * boundary artifact itself (e.g. to freeze a stage schedule). */
-  def exactBoundaries(df: DataFrame, scoreCol: String, nBuckets: Int,
-                      nBins: Int = 1024): DataFrame = {
+  def exactBoundaries(df: DataFrame, scoreCol: String,
+                      nBuckets: Int): DataFrame = {
     // 1. distinct-score histogram (null-skipping, like percentile).
     // Materialized once: it feeds the binning, the per-bin totals and
     // the rank count — without this the score projection re-scans per
@@ -83,34 +75,9 @@ object Curriculum {
       .groupBy(col(scoreCol).cast("double").as("s"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    // 2. monotone value-range binning from a broadcast (lo, hi)
-    val mm = counts.agg(min(col("s")).as("lo"), max(col("s")).as("hi"))
-    val binned = counts.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-      .select(col("s"), col("c"), col("bin"))
-    // within-bin running count (partitions bounded by per-bin density)
-    val wIn = Window.partitionBy(col("bin")).orderBy(col("s"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val within = binned.withColumn("local",
-      coalesce(sum(col("c")).over(wIn), lit(0L)))
-    // per-bin bases: prefix over the bin axis inside ONE O(nBins) row
-    // (array fold), instead of a global-window — same lint posture as
-    // the league-scalar pattern
-    val binTot = binned.groupBy(col("bin")).agg(sum(col("c")).as("bc"))
-    val bases = binTot
-      .agg(array_sort(collect_list(struct(col("bin"), col("bc")))).as("a"))
-      .select(explode(transform(col("a"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("a"), lit(1), i), lit(0L),
-            (acc, y) => acc + y.getField("bc")).as("base")))).as("b"))
-      .select(col("b.bin").as("bin"), col("b.base").as("base"))
-    val cum = within.join(bases, Seq("bin"))
-      .select(col("s"), col("c"),
-        (col("base") + col("local")).as("cum_before"))
+    // 2. count of scores strictly below each distinct score
+    val cum = Prefix.below(counts, Nil, "s", Seq("c"))
+      .select(col("s"), col("c"), col("below_c").as("cum_before"))
     // 3. target ranks: position = p * (n - 1), v = interpolate between
     // the floor/ceil order statistics — Spark Percentile's exact
     // formula, term order preserved

@@ -518,7 +518,7 @@ object Profile {
     *         winsorized_mean) — means NULL when the trim empties the
     *         middle */
   def trimmedMean(df: DataFrame, keyCols: Seq[String], valCol: String,
-      trimPerMille: Int = 50, nBins: Int = 1024): DataFrame = {
+      trimPerMille: Int = 50): DataFrame = {
     import graft.queries.Q
     import org.apache.spark.sql.types.DecimalType
     require(trimPerMille >= 0 && trimPerMille < 500,
@@ -532,7 +532,7 @@ object Profile {
     val dk = DecimalType(12, 0)
     val da = DecimalType(33, 15)
     val keys = keyCols.map(col)
-    val pr = percentRank(df, keyCols, valCol, nBins)
+    val pr = percentRank(df, keyCols, valCol)
     val totals = pr.groupBy(keys: _*)
       .agg(max(col("n_below") + col("cnt")).as("n"))
     val cut = pr.join(broadcast(totals), keyCols)
@@ -732,64 +732,34 @@ object Profile {
     * scale. pct(s) = |{x < s}| / (n − 1), the SQL PERCENT_RANK
     * definition, ties sharing their rank.
     *
-    * Plan (the AUC/Curriculum two-phase binned prefix sum, per
-    * group): collapse to distinct (group, value) counts; equi-width
-    * bin each group's value range; within-bin running counts run on
-    * bounded partitions (group × bin), and the cross-bin bases fold
-    * inside ONE O(nBins) array per group — no unpartitioned window
-    * exists at any size, which is the whole point: the naive
-    * `PERCENT_RANK() OVER (PARTITION BY g ORDER BY s)` sorts each
+    * Plan: distinct (group, value) counts, then [[Prefix.below]] — the
+    * naive `PERCENT_RANK() OVER (PARTITION BY g ORDER BY s)` sorts each
     * group globally and dies on a hot group. The ratio is one exact
     * integer division (bit-identical, no sig9 needed). Groups with a
     * single row have no defined rank (n−1 = 0) — pct is NULL, like
     * SQL's 0/0 guard.
     *
     * @return (keys..., s, cnt, n_below, pct) per distinct value */
-  def percentRank(df: DataFrame, keyCols: Seq[String], valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def percentRank(df: DataFrame, keyCols: Seq[String],
+      valCol: String): DataFrame = {
     val keys = keyCols.map(col)
     // LAZY checkpoint: the distinct-value frame is still materialized
-    // once and shared by mm/binned/bases, but it now computes INSIDE
-    // the consumer's job instead of serially at plan-construction time
-    // — operators that build several percentRank tables (spearman's
-    // two, a battery's many) overlap those builds instead of paying
-    // them back-to-back before the job starts. The frame is
+    // once and shared by the prefix sum's branches, but it computes
+    // INSIDE the consumer's job instead of serially at plan-construction
+    // time — operators that build several percentRank tables
+    // (spearman's two, a battery's many) overlap those builds instead
+    // of paying them back-to-back before the job starts. The frame is
     // deterministic (hash aggregate of exact counts), so a racy
     // partition recompute is benign.
     val counts = df.filter(col(valCol).isNotNull)
       .groupBy(keys :+ col(valCol).cast("double").as("s"): _*)
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(eager = false)
-    val mm = counts.groupBy(keys: _*)
-      .agg(min(col("s")).as("lo"), max(col("s")).as("hi"),
-        sum(col("c")).as("n"))
-    val binned = counts.join(broadcast(mm), keyCols)
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys :+ col("bin"): _*).orderBy(col("s"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val within = binned.withColumn("localc",
-      coalesce(sum(col("c")).over(wIn), lit(0L)))
-    val bases = binned.groupBy(keys :+ col("bin"): _*)
-      .agg(sum(col("c")).as("bc"))
-      .groupBy(keys: _*)
-      .agg(array_sort(collect_list(struct(col("bin"), col("bc")))).as("a"))
-      .select(keys :+ explode(transform(col("a"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("a"), lit(1), i), lit(0L),
-            (acc, b) => acc + b.getField("bc")).as("base")))).as("b"): _*)
-      .select(keys :+ col("b.bin").as("bin") :+ col("b.base").as("base"): _*)
-    within.join(bases, keyCols :+ "bin")
-      .withColumn("n_below", col("base") + col("localc"))
-      .withColumn("pct", when(col("n") > 1,
-        col("n_below").cast("double") / (col("n") - 1).cast("double")))
+    Prefix.below(counts, keyCols, "s", Seq("c"))
+      .withColumn("pct", when(col("tot_c") > 1,
+        col("below_c").cast("double") / (col("tot_c") - 1).cast("double")))
       .select(keys :+ col("s") :+ col("c").as("cnt") :+
-        col("n_below") :+ col("pct"): _*)
+        col("below_c").as("n_below") :+ col("pct"): _*)
   }
 
   /** Exact equi-depth quantile binning (feature discretization for
@@ -798,15 +768,15 @@ object Profile {
     * rank-based definition, so TIED VALUES ALWAYS SHARE A BIN (unlike
     * SQL NTILE, which splits ties by arbitrary row order and is
     * therefore not reproducible across partitionings). Pure integer
-    * arithmetic on [[percentRank]]'s two-phase binned prefix sums — no
-    * global window, no float contract at all.
+    * arithmetic on [[percentRank]]'s exact ranks ([[Prefix.below]]) —
+    * no global window, no float contract at all.
     *
     * @return one row per distinct (keys, value): (keys…, s, cnt,
     *         n_below, bin) — join back on (keys, value) to tag rows */
   def equiDepthBins(df: DataFrame, keyCols: Seq[String], valCol: String,
-      bins: Int, nBinsInternal: Int = 1024): DataFrame = {
+      bins: Int): DataFrame = {
     require(bins >= 1, s"bins must be >= 1, got $bins")
-    val pr = percentRank(df, keyCols, valCol, nBinsInternal)
+    val pr = percentRank(df, keyCols, valCol)
     // group sizes recovered from the distinct-value frame itself (the
     // largest n_below + its count IS the group total) — no second scan
     val totals = pr.groupBy(keyCols.map(col): _*)
@@ -840,10 +810,10 @@ object Profile {
     * @return one row per distinct cur value: (value, cnt, n_below,
     *         bin, ref_value) — join back on value to tag rows */
   def quantileNormalize(cur: DataFrame, ref: DataFrame, valCol: String,
-      bins: Int, nBinsInternal: Int = 1024): DataFrame = {
+      bins: Int): DataFrame = {
     def binned(df: DataFrame) = equiDepthBins(
       df.select(col(valCol)).withColumn("__all", lit(1)),
-      Seq("__all"), valCol, bins, nBinsInternal)
+      Seq("__all"), valCol, bins)
     val rep = binned(ref).groupBy(col("bin"))
       .agg(min(col("s")).as("ref_value"))
     binned(cur)
@@ -874,6 +844,22 @@ object Profile {
         col("n"))
   }
 
+  /** Per-bin count (as `out`) of `df`'s non-null `x` on the
+    * reference frame `mm` = (lo, hi): `bins` equi-width bins, values
+    * outside [lo, hi] clamped into the edge bins — the binning
+    * [[psi]], [[binnedDrift]] and [[distanceBattery]] share. */
+  private def refBinCounts(df: DataFrame, x: Column, mm: DataFrame,
+      bins: Int, out: String): DataFrame =
+    df.where(x.isNotNull).select(x.as("x"))
+      .crossJoin(broadcast(mm))
+      .withColumn("bin",
+        when(col("hi") === col("lo"), lit(0L))
+          .otherwise(least(lit((bins - 1).toLong),
+            greatest(lit(0L),
+              floor((col("x") - col("lo"))
+                / ((col("hi") - col("lo")) / bins)).cast("long")))))
+      .groupBy(col("bin")).agg(count(lit(1)).as(out))
+
   /** Population Stability Index between a reference and a current
     * frame — the standard drift monitor for a feature/score column
     * ("is live data still shaped like what the model was trained
@@ -891,18 +877,8 @@ object Profile {
     import graft.queries.Q
     val x = col(colName).cast("double")
     val mm = ref.where(x.isNotNull).agg(min(x).as("lo"), max(x).as("hi"))
-    def binCounts(df: DataFrame, out: String) =
-      df.where(x.isNotNull).select(x.as("x"))
-        .crossJoin(broadcast(mm))
-        .withColumn("bin",
-          when(col("hi") === col("lo"), lit(0L))
-            .otherwise(least(lit((bins - 1).toLong),
-              greatest(lit(0L),
-                floor((col("x") - col("lo"))
-                  / ((col("hi") - col("lo")) / bins)).cast("long")))))
-        .groupBy(col("bin")).agg(count(lit(1)).as(out))
-    val r = binCounts(ref, "ref_n")
-    val c = binCounts(cur, "cur_n")
+    val r = refBinCounts(ref, x, mm, bins, "ref_n")
+    val c = refBinCounts(cur, x, mm, bins, "cur_n")
     val joined = r.join(c, Seq("bin"), "full_outer")
       .select(col("bin"),
         coalesce(col("ref_n"), lit(0L)).as("ref_n"),
@@ -963,18 +939,8 @@ object Profile {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val x = col(valCol).cast("double")
     val mm = ref.where(x.isNotNull).agg(min(x).as("lo"), max(x).as("hi"))
-    def binCounts(df: DataFrame, out: String) =
-      df.where(x.isNotNull).select(x.as("x"))
-        .crossJoin(broadcast(mm))
-        .withColumn("bin",
-          when(col("hi") === col("lo"), lit(0L))
-            .otherwise(least(lit((bins - 1).toLong),
-              greatest(lit(0L),
-                floor((col("x") - col("lo"))
-                  / ((col("hi") - col("lo")) / bins)).cast("long")))))
-        .groupBy(col("bin")).agg(count(lit(1)).as(out))
-    val joined = binCounts(ref, "rn")
-      .join(binCounts(cur, "cn"), Seq("bin"), "full_outer")
+    val joined = refBinCounts(ref, x, mm, bins, "rn")
+      .join(refBinCounts(cur, x, mm, bins, "cn"), Seq("bin"), "full_outer")
       .select(col("bin"),
         coalesce(col("rn"), lit(0L)).as("rn"),
         coalesce(col("cn"), lit(0L)).as("cn"))
@@ -1075,18 +1041,8 @@ object Profile {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val x = col(valCol).cast("double")
     val mm = ref.where(x.isNotNull).agg(min(x).as("lo"), max(x).as("hi"))
-    def binCounts(df: DataFrame, out: String) =
-      df.where(x.isNotNull).select(x.as("x"))
-        .crossJoin(broadcast(mm))
-        .withColumn("bin",
-          when(col("hi") === col("lo"), lit(0L))
-            .otherwise(least(lit((bins - 1).toLong),
-              greatest(lit(0L),
-                floor((col("x") - col("lo"))
-                  / ((col("hi") - col("lo")) / bins)).cast("long")))))
-        .groupBy(col("bin")).agg(count(lit(1)).as(out))
-    val joined = binCounts(ref, "rn")
-      .join(binCounts(cur, "cn"), Seq("bin"), "full_outer")
+    val joined = refBinCounts(ref, x, mm, bins, "rn")
+      .join(refBinCounts(cur, x, mm, bins, "cn"), Seq("bin"), "full_outer")
       .select(col("bin"),
         coalesce(col("rn"), lit(0L)).as("rn"),
         coalesce(col("cn"), lit(0L)).as("cn"))
@@ -1143,68 +1099,44 @@ object Profile {
             lit(1.0) - col("bc_raw"))))).as("hellinger"))
   }
 
+  /** Distinct pooled values of two samples, each with its count per
+    * side: (s, ac, bc), checkpointed — the prefix sum and the caller
+    * both read it. */
+  private def twoSampleCounts(a: DataFrame, b: DataFrame,
+      valCol: String): DataFrame = {
+    def side(df: DataFrame, ac: Long) =
+      df.select(col(valCol).cast("double").as("s"))
+        .where(col("s").isNotNull)
+        .select(col("s"), lit(ac).as("ac"), lit(1L - ac).as("bc"))
+    side(a, 1L).unionAll(side(b, 0L)).groupBy(col("s"))
+      .agg(sum(col("ac")).as("ac"), sum(col("bc")).as("bc"))
+      .localCheckpoint()
+  }
+
   /** Exact two-sample Kolmogorov–Smirnov distance — the
     * distribution-shape drift monitor next to [[psi]] (KS is binning-
     * free and catches shifts PSI's ten fixed bins smear out):
     * D = max over observed values v of |F_a(v) − F_b(v)|, both CDFs
     * evaluated inclusively at v.
     *
-    * Plan (the AUC/percentRank two-phase binned prefix sum — no
-    * global-order window at any size): both sides collapse to distinct
-    * (value, a_cnt, b_cnt) counts; values equi-width bin over the
-    * union range; INCLUSIVE running counts per bin run on bounded
-    * partitions and cross-bin bases fold inside one O(nBins) array.
-    * The maximized statistic is the INTEGER numerator
-    * |cum_a·n_b − cum_b·n_a| (DECIMAL(38,0) — products overflow Long
-    * at ~10^12 rows), so the argmax is exact; the single final
-    * division is sig9'd. `ks_at` is the SMALLEST value attaining the
-    * max (deterministic under ties).
+    * Plan: both sides collapse to distinct (value, a_cnt, b_cnt)
+    * counts; [[Prefix.below]] plus the value's own counts gives the
+    * INCLUSIVE CDF counts. The maximized statistic is the INTEGER
+    * numerator |cum_a·n_b − cum_b·n_a| (DECIMAL(38,0) — products
+    * overflow Long at ~10^12 rows), so the argmax is exact; the single
+    * final division is sig9'd. `ks_at` is the SMALLEST value attaining
+    * the max (deterministic under ties).
     *
     * @return one row: (ks, ks_at, n_a, n_b) — ks NULL when either
     *         side is empty */
-  def ksDistance(a: DataFrame, b: DataFrame, valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def ksDistance(a: DataFrame, b: DataFrame, valCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val tagged = a.select(col(valCol).cast("double").as("s"))
-      .where(col("s").isNotNull)
-      .select(col("s"), lit(1L).as("ac"), lit(0L).as("bc"))
-      .unionAll(b.select(col(valCol).cast("double").as("s"))
-        .where(col("s").isNotNull)
-        .select(col("s"), lit(0L).as("ac"), lit(1L).as("bc")))
-    val counts = tagged.groupBy(col("s"))
-      .agg(sum(col("ac")).as("ac"), sum(col("bc")).as("bc"))
-      .localCheckpoint()
-    val mm = counts.agg(min(col("s")).as("lo"), max(col("s")).as("hi"),
-      sum(col("ac")).as("na"), sum(col("bc")).as("nb"))
-    val binned = counts.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bin")).orderBy(col("s"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, 0) // INCLUSIVE: CDF at v counts v itself
-    val within = binned
-      .withColumn("la", sum(col("ac")).over(wIn))
-      .withColumn("lb", sum(col("bc")).over(wIn))
-    val bases = binned.groupBy(col("bin"))
-      .agg(sum(col("ac")).as("ba"), sum(col("bc")).as("bb"))
-      .agg(array_sort(collect_list(struct(col("bin"), col("ba"),
-        col("bb")))).as("arr"))
-      .select(explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("ba")).as("basea"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("bb")).as("baseb")))).as("x"))
-      .select(col("x.bin").as("bin"), col("x.basea").as("basea"),
-        col("x.baseb").as("baseb"))
-    val cum = within.join(bases, Seq("bin"))
+    val cum = Prefix.below(twoSampleCounts(a, b, valCol), Nil, "s",
+        Seq("ac", "bc"))
+      .withColumnRenamed("tot_ac", "na").withColumnRenamed("tot_bc", "nb")
       .withColumn("num", abs(
-        (col("basea") + col("la")).cast(dec) * col("nb").cast(dec) -
-          (col("baseb") + col("lb")).cast(dec) * col("na").cast(dec)))
+        (col("below_ac") + col("ac")).cast(dec) * col("nb").cast(dec) -
+          (col("below_bc") + col("bc")).cast(dec) * col("na").cast(dec)))
     val mx = cum.agg(max(col("num")).as("mxnum"))
     cum.crossJoin(broadcast(mx))
       .where(col("num") === col("mxnum"))
@@ -1228,8 +1160,8 @@ object Profile {
     * distributional drift that never produces one large deviation
     * still registers.
     *
-    * Same machinery as KS: distinct-value collapse, two-phase binned
-    * prefix sums (no global window), exact inclusive CDF counts. Each
+    * Plan: the [[ksDistance]] inclusive CDF counts from
+    * [[Prefix.below]] (no global window). Each
     * gap d_k = (cumA·n_b − cumB·n_a) is an exact DECIMAL(38,0)
     * integer; the normalized gap and each weighted square are sig9'd
     * (the KS cast precedent), terms sum via dsumStable(6) (the
@@ -1237,50 +1169,16 @@ object Profile {
     *
     * @return one row: (cvm, sum_wd2, n_a, n_b) — NULL when a side is
     *         empty */
-  def cvmDistance(a: DataFrame, b: DataFrame, valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def cvmDistance(a: DataFrame, b: DataFrame,
+      valCol: String): DataFrame = {
     import graft.queries.Q
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val tagged = a.select(col(valCol).cast("double").as("s"))
-      .where(col("s").isNotNull)
-      .select(col("s"), lit(1L).as("ac"), lit(0L).as("bc"))
-      .unionAll(b.select(col(valCol).cast("double").as("s"))
-        .where(col("s").isNotNull)
-        .select(col("s"), lit(0L).as("ac"), lit(1L).as("bc")))
-    val counts = tagged.groupBy(col("s"))
-      .agg(sum(col("ac")).as("ac"), sum(col("bc")).as("bc"))
-      .localCheckpoint()
-    val mm = counts.agg(min(col("s")).as("lo"), max(col("s")).as("hi"),
-      sum(col("ac")).as("na"), sum(col("bc")).as("nb"))
-    val binned = counts.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bin")).orderBy(col("s"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, 0) // inclusive CDF
-    val within = binned
-      .withColumn("la", sum(col("ac")).over(wIn))
-      .withColumn("lb", sum(col("bc")).over(wIn))
-    val bases = binned.groupBy(col("bin"))
-      .agg(sum(col("ac")).as("ba"), sum(col("bc")).as("bb"))
-      .agg(array_sort(collect_list(struct(col("bin"), col("ba"),
-        col("bb")))).as("arr"))
-      .select(explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("ba")).as("basea"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("bb")).as("baseb")))).as("x"))
-      .select(col("x.bin").as("bin"), col("x.basea").as("basea"),
-        col("x.baseb").as("baseb"))
-    val cum = within.join(bases, Seq("bin"))
+    val cum = Prefix.below(twoSampleCounts(a, b, valCol), Nil, "s",
+        Seq("ac", "bc"))
+      .withColumnRenamed("tot_ac", "na").withColumnRenamed("tot_bc", "nb")
       .withColumn("num",
-        (col("basea") + col("la")).cast(dec) * col("nb").cast(dec) -
-          (col("baseb") + col("lb")).cast(dec) * col("na").cast(dec))
+        (col("below_ac") + col("ac")).cast(dec) * col("nb").cast(dec) -
+          (col("below_bc") + col("bc")).cast(dec) * col("na").cast(dec))
     // the divisor guard lives IN the projection: ANSI division throws
     // and the final when() cannot save a per-row expression (the
     // theilSen pushdown lesson)
@@ -1366,9 +1264,8 @@ object Profile {
     * statistic is a pure rank computation, robust to the heavy tails
     * that break mean-based tests).
     *
-    * Plan: the [[ksDistance]] two-phase binned prefix sum over the
-    * distinct-value counts frame — no global-order window at any
-    * size. Per distinct value v: 2·U accumulates
+    * Plan: [[Prefix.below]] over the distinct-value counts frame (no
+    * global-order window). Per distinct value v: 2·U accumulates
     * ac(v) · (2·B_below(v) + bc(v)) (each b strictly below counts 2,
     * each tied b counts 1 — the midrank convention doubled into exact
     * integers), and the tie term accumulates t³−t for t = ac+bc.
@@ -1381,49 +1278,18 @@ object Profile {
     * @return one row: (u2, z, tie_t, n_a, n_b) — u2 = exact 2·U_a
     *         sig9'd; z NULL when either side is empty or all values
     *         tie (σ = 0) */
-  def mannWhitney(a: DataFrame, b: DataFrame, valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def mannWhitney(a: DataFrame, b: DataFrame,
+      valCol: String): DataFrame = {
     import graft.queries.Q
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val tagged = a.select(col(valCol).cast("double").as("s"))
-      .where(col("s").isNotNull)
-      .select(col("s"), lit(1L).as("ac"), lit(0L).as("bc"))
-      .unionAll(b.select(col(valCol).cast("double").as("s"))
-        .where(col("s").isNotNull)
-        .select(col("s"), lit(0L).as("ac"), lit(1L).as("bc")))
-    val counts = tagged.groupBy(col("s"))
-      .agg(sum(col("ac")).as("ac"), sum(col("bc")).as("bc"))
-      .localCheckpoint()
-    val mm = counts.agg(min(col("s")).as("lo"), max(col("s")).as("hi"),
-      sum(col("ac")).as("na"), sum(col("bc")).as("nb"))
-    val binned = counts.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bin")).orderBy(col("s"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1) // EXCLUSIVE: b strictly below v
-    val within = binned
-      .withColumn("lb", coalesce(sum(col("bc")).over(wIn), lit(0L)))
-    val bases = binned.groupBy(col("bin"))
-      .agg(sum(col("bc")).as("bb"))
-      .agg(array_sort(collect_list(struct(col("bin"), col("bb"))))
-        .as("arr"))
-      .select(explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("bb")).as("baseb")))).as("x"))
-      .select(col("x.bin").as("bin"), col("x.baseb").as("baseb"))
     val t = (col("ac") + col("bc")).cast(dec)
     // inner terms stay in exact long arithmetic (≤ ~3n, far under
     // 2^63); the single decimal cast guards the ac· product and sum
-    val terms = within.join(bases, Seq("bin"))
-      .select(col("na"), col("nb"),
+    val terms = Prefix.below(twoSampleCounts(a, b, valCol), Nil, "s",
+        Seq("ac", "bc"))
+      .select(col("tot_ac").as("na"), col("tot_bc").as("nb"),
         (col("ac").cast(dec) *
-          (lit(2L) * (col("baseb") + col("lb")) + col("bc")).cast(dec))
+          (lit(2L) * col("below_bc") + col("bc")).cast(dec))
           .as("u2term"),
         (t * t * t - t).as("tterm"))
     val nad = col("na").cast("double")
@@ -1467,10 +1333,10 @@ object Profile {
     *         cohens_d, hedges_g, cliffs_delta) — d/g NULL when the
     *         pooled sd degenerates (all values equal or n ≤ 2), δ
     *         NULL when either side is empty */
-  def effectSizes(a: DataFrame, b: DataFrame, valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def effectSizes(a: DataFrame, b: DataFrame,
+      valCol: String): DataFrame = {
     import graft.queries.Q
-    val mw = mannWhitney(a, b, valCol, nBins)
+    val mw = mannWhitney(a, b, valCol)
       .select(col("u2"), col("n_a"), col("n_b"))
     def mom(df: DataFrame, tag: String) = {
       val x = col(valCol).cast("double")
@@ -1521,61 +1387,27 @@ object Profile {
     * integers and the coefficient is ONE sig9'd division — no float
     * accumulates anywhere (the ksDistance convention).
     *
-    * Plan: the [[percentRank]] two-phase binned prefix sum with a
-    * second (value-weighted) accumulator — distinct-value collapse,
-    * equi-width bins, within-bin running sums on bounded (group, bin)
-    * partitions, cross-bin bases folded in one O(nBins) array per
-    * group. No per-group global-order window at any size.
+    * Plan: [[Prefix.below]] over the distinct (group, value) counts
+    * with a second, value-weighted sum (DECIMAL(38,0)). No per-group
+    * global-order window at any size.
     *
     * @return per group: (keys..., n, total, gini) — gini NULL when
     *         total = 0 (all-zero group) or n = 0 */
-  def gini(df: DataFrame, keyCols: Seq[String], valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def gini(df: DataFrame, keyCols: Seq[String],
+      valCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val keys = keyCols.map(col)
     val counts = df.filter(col(valCol).isNotNull)
       .groupBy(keys :+ col(valCol).cast("long").as("s"): _*)
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    val mm = counts.groupBy(keys: _*)
-      .agg(min(col("s")).as("lo"), max(col("s")).as("hi"),
-        sum(col("c")).as("n"),
-        sum(col("s").cast(dec) * col("c").cast(dec)).as("tot"))
-    val binned = counts.join(broadcast(mm), keyCols)
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo")).cast("double")
-              / ((col("hi") - col("lo")).cast("double") / nBins))
-              .cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys :+ col("bin"): _*).orderBy(col("s"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1) // EXCLUSIVE: strictly below v
-    val sc = col("s").cast(dec) * col("c").cast(dec)
-    val within = binned
-      .withColumn("lc", coalesce(sum(col("c")).over(wIn), lit(0L)))
-      .withColumn("ls", coalesce(sum(sc).over(wIn), lit(0L).cast(dec)))
-    val bases = binned.groupBy(keys :+ col("bin"): _*)
-      .agg(sum(col("c")).as("bc"), sum(sc).as("bs"))
-      .groupBy(keys: _*)
-      .agg(array_sort(collect_list(struct(col("bin"), col("bc"),
-        col("bs")))).as("arr"))
-      .select(keys :+ explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("bc")).as("basec"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L).cast(dec),
-            (acc, e) => acc + e.getField("bs")).as("bases")))).as("x"): _*)
-      .select(keys :+ col("x.bin").as("bin") :+ col("x.basec").as("basec") :+
-        col("x.bases").as("bases"): _*)
-    within.join(bases, keyCols :+ "bin")
+      .withColumn("sc", col("s").cast(dec) * col("c").cast(dec))
+    Prefix.below(counts, keyCols, "s", Seq("c", "sc"))
       .withColumn("term", col("c").cast(dec) *
-        (col("s").cast(dec) * (col("basec") + col("lc")).cast(dec) -
-          (col("bases") + col("ls"))))
+        (col("s").cast(dec) * col("below_c").cast(dec) - col("below_sc")))
       .groupBy(keys: _*)
-      .agg(first(col("n")).cast("long").as("n"),
-        first(col("tot")).as("totd"), sum(col("term")).as("t"))
+      .agg(first(col("tot_c")).cast("long").as("n"),
+        first(col("tot_sc")).as("totd"), sum(col("term")).as("t"))
       .select(keys :+ col("n") :+ col("totd").cast("long").as("total") :+
         when(col("n") > 0 && col("totd") > 0, graft.queries.Q.sig9(
           col("t").cast("double") /
@@ -1664,15 +1496,14 @@ object Profile {
     * n·Σrxry < 10³⁸, i.e. n ≲ 10⁹ rows — document-scale corpora;
     * beyond that pre-aggregate or sample.
     *
-    * Plan: two [[percentRank]] two-phase binned prefix sums (one per
-    * column, no global-order window), two distinct-value equi-joins
+    * Plan: one [[percentRank]] rank table for both columns (no
+    * global-order window), two distinct-value equi-joins
     * back to the row frame, one aggregate. Rows with a NULL on either
     * side are excluded BEFORE ranking (pairwise-complete semantics).
     *
     * @return one row: (rho, n) — rho NULL when n < 2 or either
     *         column is constant */
-  def spearman(df: DataFrame, xCol: String, yCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     import graft.queries.Q
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val rows = df.select(col(xCol).cast("double").as("x"),
@@ -1689,7 +1520,7 @@ object Profile {
         struct(lit(0).as("__w"), col("x").as("v")),
         struct(lit(1).as("__w"), col("y").as("v")))).as("e"))
       .select(col("e.__w").as("__w"), col("e.v").as("v"))
-    val pr = percentRank(unpiv, Seq("__w"), "v", nBins)
+    val pr = percentRank(unpiv, Seq("__w"), "v")
       .select(col("__w"), col("s"),
         (lit(2L) * col("n_below") + col("cnt") + lit(1L)).as("r2"))
       .localCheckpoint(eager = false)
@@ -1740,15 +1571,15 @@ object Profile {
     *
     * @return one row: (h, dof, n, k, tie_t) — h NULL when k < 2 or
     *         all values tie (the correction denominator hits 0) */
-  def kruskalWallis(df: DataFrame, groupCol: String, valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def kruskalWallis(df: DataFrame, groupCol: String,
+      valCol: String): DataFrame = {
     import graft.queries.Q
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val rows = df.select(col(groupCol).cast("string").as("g"),
         col(valCol).cast("double").as("v"))
       .where(col("g").isNotNull && col("v").isNotNull)
       .withColumn("__one", lit(0L))
-    val pr = percentRank(rows, Seq("__one"), "v", nBins)
+    val pr = percentRank(rows, Seq("__one"), "v")
       .select(col("s"),
         (lit(2L) * col("n_below") + col("cnt") + lit(1L)).as("r2"),
         col("cnt"))
@@ -1859,12 +1690,12 @@ object Profile {
     * floats.
     *
     * @return [[oneWayAnova]]'s row over the doubled deviations */
-  def brownForsythe(df: DataFrame, groupCol: String, valCol: String,
-      nBins: Int = 1024): DataFrame = {
+  def brownForsythe(df: DataFrame, groupCol: String,
+      valCol: String): DataFrame = {
     val rows = df.select(col(groupCol).cast("string").as("g"),
         col(valCol).cast("long").as("v"))
       .where(col("g").isNotNull && col("v").isNotNull)
-    val pr = percentRank(rows, Seq("g"), "v", nBins)
+    val pr = percentRank(rows, Seq("g"), "v")
     val tot = pr.groupBy(col("g"))
       .agg(max(col("n_below") + col("cnt")).as("nj"))
     val withN = pr.join(broadcast(tot), Seq("g"))
@@ -2297,7 +2128,7 @@ object Profile {
     * before a mean-based cap mis-sizes it. The threshold variant is
     * chosen over classic rank-k Hill because it needs NO per-key
     * order statistics beyond one quantile — everything stays in
-    * [[percentRank]]'s windowless two-phase binned prefix sums.
+    * [[percentRank]]'s windowless ranks ([[Prefix.below]]).
     *
     * Scale shape: percentRank's collapse, one per-key total, one
     * per-key threshold min-aggregate, one weighted term fold over the
@@ -2312,12 +2143,12 @@ object Profile {
     * @return per key: (keys…, n, u, k_tail, hill_alpha) — α NULL
     *         when the tail is empty or u ≤ 0 */
   def tailIndex(df: DataFrame, keyCols: Seq[String], valCol: String,
-      quantilePerMille: Int = 900, nBins: Int = 1024): DataFrame = {
+      quantilePerMille: Int = 900): DataFrame = {
     import graft.queries.Q
     require(quantilePerMille >= 500 && quantilePerMille < 1000,
       s"quantilePerMille must be in [500, 1000), got $quantilePerMille")
     val keys = keyCols.map(col)
-    val pr = percentRank(df, keyCols, valCol, nBins)
+    val pr = percentRank(df, keyCols, valCol)
       .localCheckpoint() // totals, threshold and tail fold reuse it
     val totals = pr.groupBy(keys: _*)
       .agg(max(col("n_below") + col("cnt")).as("n"))
@@ -2581,17 +2412,15 @@ object Profile {
     * correction a drift monitor fanning over hundreds of
     * features × segments actually needs.
     *
-    * Scale shape: one (segment, value) count collapse, then the
-    * [[ksDistance]] two-phase binned prefix sum PER SEGMENT — the
-    * within-bin window partitions on (segment, bin) (bounded), the
-    * cross-bin bases fold in one O(nBins) array per segment, and the
-    * complement CDF is cum_all − cum_g (the G2 complement-aggregate
-    * trick: ONE global grid, no per-segment rescan). The segment ×
-    * distinct-value grid costs G·V rows — G is the battery width
-    * (segments/features under test, bounded by design: a battery IS
-    * an enumerated set); V distinct values shuffle once. The BH fold
-    * packs the G per-segment rows into ONE array row (bases idiom,
-    * O(G²) work in a single task).
+    * Scale shape: one (segment, value) count collapse, then
+    * [[Prefix.below]] PER SEGMENT over the segment × distinct-value
+    * grid (each segment's inclusive CDF), and the complement CDF is
+    * cum_all − cum_g (the G2 complement-aggregate trick: ONE global
+    * grid, no per-segment rescan). The grid costs G·V rows — G is the
+    * battery width (segments/features under test, bounded by design: a
+    * battery IS an enumerated set); V distinct values shuffle once. The
+    * BH fold packs the G per-segment rows into ONE array row (bases
+    * idiom, O(G²) work in a single task).
     *
     * Determinism: every cumulative count and KS numerator is exact
     * (DECIMAL(38,0) cross-products); D, n_eff, p and each BH term are
@@ -2601,9 +2430,8 @@ object Profile {
     * @return per segment: (segment, n, ks, ks_p, bh_rank, q_value,
     *         significant) — significant = q_value ≤ alpha */
   def ksDriftBattery(df: DataFrame, grpCol: String, valCol: String,
-      alpha: Double = 0.05, nBins: Int = 1024): DataFrame = {
+      alpha: Double = 0.05): DataFrame = {
     import graft.queries.Q
-    import org.apache.spark.sql.expressions.Window
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val cnt = df
       .select(col(grpCol).cast("string").as("g"),
@@ -2615,35 +2443,14 @@ object Profile {
       .crossJoin(cnt.select(col("s")).distinct()) // G×V, G bounded
       .join(cnt, Seq("g", "s"), "left_outer")
       .select(col("g"), col("s"), coalesce(col("c"), lit(0L)).as("c"))
-    val mm = cnt.agg(min(col("s")).as("lo"), max(col("s")).as("hi"),
-      sum(col("c")).cast("long").as("n"))
-    val binned = grid.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("s") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-    val wIn = Window.partitionBy(col("g"), col("bin")).orderBy(col("s"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val within = binned.withColumn("lg", sum(col("c")).over(wIn))
-    val bases = binned.groupBy(col("g"), col("bin"))
-      .agg(sum(col("c")).as("bc"))
-      .groupBy(col("g"))
-      .agg(array_sort(collect_list(struct(col("bin"), col("bc"))))
-        .as("arr"))
-      .select(col("g"), explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("bc")).as("base")))).as("x"))
-      .select(col("g"), col("x.bin").as("bin"), col("x.base").as("base"))
-    val cumg = within.join(bases, Seq("g", "bin"))
-      .select(col("g"), col("s"), col("n"),
-        (col("base") + col("lg")).as("cumg"))
+    val n = cnt.agg(sum(col("c")).cast("long").as("n"))
+    val cumg = Prefix.below(grid, Seq("g"), "s", Seq("c"))
+      .crossJoin(broadcast(n))
+      .select(col("g"), col("s"), col("n"), col("tot_c").as("n_g"),
+        (col("below_c") + col("c")).as("cumg"))
     val cumAll = cumg.groupBy(col("s"))
       .agg(sum(col("cumg")).as("cumall")) // Σ_g cum_g(v) = cum_all(v)
-    val ng = cnt.groupBy(col("g"))
-      .agg(sum(col("c")).cast("long").as("n_g"))
-    val perSeg = cumg.join(cumAll, Seq("s")).join(ng, Seq("g"))
+    val perSeg = cumg.join(cumAll, Seq("s"))
       .where(col("n_g") > 0 && col("n_g") < col("n"))
       .withColumn("num", abs(
         col("cumg").cast(dec) * (col("n") - col("n_g")).cast(dec) -

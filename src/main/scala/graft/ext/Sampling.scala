@@ -342,7 +342,7 @@ object Sampling {
     * obvious `row_number() OVER (ORDER BY hash)` is a GLOBAL sort — a
     * single-reducer rank that dies at corpus scale.
     *
-    * Scale shape — the Packing/Curriculum two-phase prefix sum, with a
+    * Scale shape — the Packing / [[Prefix]] two-phase prefix sum, with a
     * twist that makes it immune to the id-range caveat documented on
     * [[Packing.packSequences]]: the bucket is the hash value's own
     * high bits (`h div 2^60/nBuckets`), which is monotone in the rank
@@ -376,18 +376,18 @@ object Sampling {
     * reproducibly.
     *
     * Plan: one group-by collapses the corpus to distinct-score token
-    * totals; the cross-group cumulative runs as the AUC/percentRank
-    * two-phase binned prefix sum on the NEGATED score (descending
-    * order, no global window at any size); full-group selection is a
-    * semi-join of the corpus against the fitting scores; only the
-    * boundary GROUP — one score value — sees a per-id running window,
+    * totals; the cross-group cumulative is [[Prefix.below]] on the
+    * NEGATED score (descending order, no global window at any size);
+    * full-group selection is a semi-join of the corpus against the
+    * fitting scores; only the boundary GROUP — one score value — sees
+    * a per-id running window,
     * sized by that group alone (documented boundary cost, same family
     * as the post-aggregate O(groups) windows). Integer token sums
     * throughout — no float contract beyond the scores' own values.
     *
     * @return selected docs: (idCol, score, tokens, boundary) */
   def budgetSelect(docs: DataFrame, idCol: String, scoreCol: String,
-      tokensCol: String, budget: Long, nBins: Int = 1024): DataFrame = {
+      tokensCol: String, budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     val d = docs.select(col(idCol), col(scoreCol).cast("double").as("s"),
         col(tokensCol).cast("long").as("tk"))
@@ -395,30 +395,8 @@ object Sampling {
     val g = d.groupBy(col("s")).agg(sum(col("tk")).as("gtk"))
       .withColumn("o", -col("s")) // ascending o == descending score
       .localCheckpoint()
-    val mm = g.agg(min(col("o")).as("lo"), max(col("o")).as("hi"))
-    val binned = g.crossJoin(broadcast(mm))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(lit(nBins - 1L),
-            floor((col("o") - col("lo"))
-              / ((col("hi") - col("lo")) / nBins)).cast("long"))))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bin")).orderBy(col("o"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, -1)
-    val within = binned.withColumn("ltk",
-      coalesce(sum(col("gtk")).over(wIn), lit(0L)))
-    val bases = binned.groupBy(col("bin")).agg(sum(col("gtk")).as("btk"))
-      .agg(array_sort(collect_list(struct(col("bin"), col("btk"))))
-        .as("arr"))
-      .select(explode(transform(col("arr"), (x, i) =>
-        struct(x.getField("bin").as("bin"),
-          aggregate(slice(col("arr"), lit(1), i), lit(0L),
-            (acc, e) => acc + e.getField("btk")).as("base")))).as("x"))
-      .select(col("x.bin").as("bin"), col("x.base").as("base"))
-    val cum = within.join(bases, Seq("bin"))
-      .withColumn("before", col("base") + col("ltk"))
-      .select(col("s"), col("gtk"), col("before"))
+    val cum = Prefix.below(g, Nil, "o", Seq("gtk"))
+      .select(col("s"), col("gtk"), col("below_gtk").as("before"))
     val fullScores = cum.where(col("before") + col("gtk") <= budget)
       .select(col("s"))
     val boundary = cum

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,7 +43,20 @@ object SparkSpec {
     // the working directory; as a system property it reaches every
     // context this JVM starts
     sys.props.getOrElseUpdate("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      tempDir("graft-wh").toString)
     graft.core.Session("graft-test", cpus = 2)
+  }
+
+  private val made =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+  sys.addShutdownHook(made.forEach(FileUtils.deleteQuietly(_)))
+
+  /** A new temp dir, deleted with everything in it when the JVM ends:
+    * a suite's files outlive its tests, which may read them back, but
+    * not the test run. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.add(d.toFile)
+    d
   }
 }

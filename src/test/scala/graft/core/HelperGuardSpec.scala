@@ -11,7 +11,10 @@ import scala.jdk.CollectionConverters._
   *  - a bare `read.parquet(` submits a schema-inference job; every read
   *    either gives its schema or goes through [[Parquet.read]];
   *  - a `SparkSession.builder` starts a session with its own settings;
-  *    every session comes from [[Session]]. */
+  *    every session comes from [[Session]];
+  *  - a window partitioned on `"bin"` is a hand-copied binned prefix
+  *    sum; every exact running rank or CDF comes from
+  *    [[graft.ext.Prefix.below]]. */
 class HelperGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -45,5 +48,17 @@ class HelperGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "a hand-built session drifts from the one session policy; use " +
         "graft.core.Session:\n  " + hits.mkString("\n  "))
+  }
+
+  test("no window partitioned on \"bin\" in src/main/scala outside " +
+      "Prefix.below") {
+    // partitionBy( … "bin" …) with at most one level of nested parens
+    // before it: col("bin"), $"bin", keys :+ col("bin"), col("g"), …
+    val hits = outside(
+      """\bpartitionBy\s*\((?:[^()]|\([^()]*\))*?\(?\s*"bin"""",
+      root.resolve("graft/ext/Prefix.scala"))
+    assert(hits.isEmpty,
+      "a window partitioned on \"bin\" re-copies the binned prefix " +
+        "sum; use graft.ext.Prefix.below:\n  " + hits.mkString("\n  "))
   }
 }

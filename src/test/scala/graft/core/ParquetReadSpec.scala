@@ -21,7 +21,7 @@ class ParquetReadSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    SparkSpec.tempDir(prefix).toString
 
   /** `body`'s result and the jobs this thread submitted while it ran. */
   private def jobsWhile[T](body: => T): (T, Int) = {

@@ -15,7 +15,7 @@ class SharedSpec extends SparkSpec {
 
   /** A copy of the sf0.001 fixtures under a dir no entry is keyed by. */
   private def freshDir(): String = {
-    val to = Files.createTempDirectory("graft-shared")
+    val to = SparkSpec.tempDir("graft-shared")
     Files.walk(sf).forEach { (p: Path) =>
       val t = to.resolve(sf.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(t)

@@ -102,7 +102,7 @@ class TablesSpec extends SparkSpec {
     Tables.preflight(spark, sf) // current fixtures: clean
     // synthetic drifted dir: events retyped AND part missing a column;
     // remaining tables absent entirely — all reported together
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val dir = SparkSpec.tempDir("graft-drift").toString
     Tables.events(spark, sf).withColumn("value", col("value").cast("float"))
       .write.parquet(s"$dir/events.parquet")
     Tables.part(spark, sf).drop("p_retailprice")
@@ -117,7 +117,7 @@ class TablesSpec extends SparkSpec {
   test("events loader nanos-Long vintage still normalizes (synthetic old fixture)") {
     // Rebuild the pre-2026-08-13 fixture shape: ts as a nanos Long column.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nanos-vintage").toString
+    val dir = SparkSpec.tempDir("graft-nanos-vintage").toString
     Tables.events(spark, sf)
       .withColumn("ts", (unix_micros(col("ts")) * 1000L))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

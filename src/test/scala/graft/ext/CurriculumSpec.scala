@@ -54,7 +54,7 @@ class CurriculumSpec extends SparkSpec {
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }
       .toDF("id", "score")
     for (nb <- Seq(2, 3, 4, 7)) {
-      val got = Curriculum.exactBoundaries(df, "score", nb, nBins = 4)
+      val got = Curriculum.exactBoundaries(df, "score", nb)
         .as[Seq[Double]].head()
       assert(got == percentileRef(df, nb), s"nBuckets=$nb")
     }

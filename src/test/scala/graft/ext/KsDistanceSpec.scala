@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 class KsDistanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(a: Seq[Double], b: Seq[Double], nBins: Int = 1024) =
-    Profile.ksDistance(a.toDF("v"), b.toDF("v"), "v", nBins).head()
+  private def run(a: Seq[Double], b: Seq[Double]) =
+    Profile.ksDistance(a.toDF("v"), b.toDF("v"), "v").head()
 
   /** Brute-force KS on sorted distinct values, inclusive CDFs. */
   private def ref(a: Seq[Double], b: Seq[Double]): (Double, Double) = {
@@ -46,13 +46,17 @@ class KsDistanceSpec extends SparkSpec {
       "and partitionings") {
     val a = (1 to 400).map(i => ((i * 7919) % 1000).toDouble / 100.0)
     val b = (1 to 300).map(i => ((i * 104729) % 1100).toDouble / 100.0)
-    val (ks, at) = ref(a, b)
-    for (bins <- Seq(4, 64, 1024)) {
+    // one far value in b stretches the range over the fixed bins, so
+    // the other values share about 4, then 64 occupied bins; at 11.0
+    // they spread over nearly all of them
+    for (far <- Seq(2800.0, 176.0, 11.0)) {
+      val bf = b :+ far
+      val (ks, at) = ref(a, bf)
       val got = Profile.ksDistance(
-        a.toDF("v").repartition(5), b.toDF("v").repartition(3), "v", bins)
+        a.toDF("v").repartition(5), bf.toDF("v").repartition(3), "v")
         .head()
-      assert(got.getAs[Double]("ks") == ks, s"bins=$bins")
-      assert(got.getAs[Double]("ks_at") == at, s"bins=$bins")
+      assert(got.getAs[Double]("ks") == ks, s"far=$far")
+      assert(got.getAs[Double]("ks_at") == at, s"far=$far")
     }
   }
 

@@ -34,9 +34,9 @@ class MannWhitneySpec extends SparkSpec {
     (u2d, z, td)
   }
 
-  private def run(a: Seq[Double], b: Seq[Double], nBins: Int = 1024) =
+  private def run(a: Seq[Double], b: Seq[Double]) =
     Profile.mannWhitney(a.toDF("v").repartition(3),
-      b.toDF("v").repartition(2), "v", nBins).head()
+      b.toDF("v").repartition(2), "v").head()
 
   test("no-tie textbook case: exact 2U, z matches the rank-sum formula") {
     val a = Seq(1.0, 3.0, 5.0, 7.0)
@@ -65,12 +65,16 @@ class MannWhitneySpec extends SparkSpec {
   test("pseudo-random samples: engine == reference across bin counts") {
     val a = (1 to 311).map(i => ((i * 7919) % 97).toDouble)
     val b = (1 to 253).map(i => ((i * 104729) % 101).toDouble)
-    val (u2, z, td) = ref(a, b)
-    for (bins <- Seq(4, 64, 1024)) {
-      val got = run(a, b, bins)
-      assert(got.getAs[Double]("u2") == u2, s"bins=$bins")
-      assert(Option(got.getAs[Double]("z")) == z, s"bins=$bins")
-      assert(got.getAs[Double]("tie_t") == td, s"bins=$bins")
+    // one far value in b stretches the range over the fixed bins, so
+    // the other values share about 4, then 64 occupied bins; at 101
+    // each distinct value has a bin of its own
+    for (far <- Seq(25000.0, 1600.0, 101.0)) {
+      val bf = b :+ far
+      val (u2, z, td) = ref(a, bf)
+      val got = run(a, bf)
+      assert(got.getAs[Double]("u2") == u2, s"far=$far")
+      assert(Option(got.getAs[Double]("z")) == z, s"far=$far")
+      assert(got.getAs[Double]("tie_t") == td, s"far=$far")
     }
   }
 

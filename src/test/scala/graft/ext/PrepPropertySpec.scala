@@ -40,7 +40,7 @@ class PrepPropertySpec extends SparkSpec {
           percentile(col("score"), array(probs: _*)),
           b => graft.queries.Q.sig9(b)).as("p"))
         .as[Seq[Double]].head()
-      val got = Curriculum.exactBoundaries(df, "score", nb, nBins = 16)
+      val got = Curriculum.exactBoundaries(df, "score", nb)
         .as[Seq[Double]].head()
       assert(got == exp, s"seed $i n=$n nBuckets=$nb")
     }

@@ -145,7 +145,7 @@ class ProfileSpec extends SparkSpec {
     val rows = (1 to 400).map(i =>
       (s"g${i % 3}", ((i * 37) % 23).toDouble / 7.0))
     val df = rows.toDF("g", "v")
-    val got = Profile.percentRank(df, Seq("g"), "v", nBins = 8)
+    val got = Profile.percentRank(df, Seq("g"), "v")
       .select("g", "s", "pct")
       .collect().map(r => (r.getString(0), r.getDouble(1)) ->
         r.getDouble(2)).toMap
@@ -221,7 +221,7 @@ class ProfileSpec extends SparkSpec {
       "c" -> Seq(0L, 0L, 12L)) // one row holds everything -> 2/3
     val df = xs.toSeq.flatMap { case (g, vs) => vs.map(g -> _) }
       .toDF("g", "x").repartition(4)
-    val got = Profile.gini(df, Seq("g"), "x", nBins = 4)
+    val got = Profile.gini(df, Seq("g"), "x")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2),
           Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap

@@ -67,11 +67,15 @@ class StatsSuiteSpec extends SparkSpec {
   test("spearman: pseudo-random pairs == reference across bin counts") {
     val ps = (1 to 347).map(i =>
       (((i * 7919) % 83).toDouble, ((i * 104729) % 89).toDouble))
-    val want = refSpearman(ps.map(_._1), ps.map(_._2))
-    for (bins <- Seq(4, 64, 1024)) {
-      val got = Profile.spearman(ps.toDF("x", "y").repartition(5),
-        "x", "y", bins).head()
-      assert(Option(got.getAs[Double]("rho")) == want, s"bins=$bins")
+    // one far pair stretches both ranges over the fixed bins, so the
+    // other values share about 4, then 64 occupied bins; at 90.0 each
+    // distinct value has a bin of its own
+    for (far <- Seq(21000.0, 1400.0, 90.0)) {
+      val pf = ps :+ (far -> far)
+      val want = refSpearman(pf.map(_._1), pf.map(_._2))
+      val got = Profile.spearman(pf.toDF("x", "y").repartition(5),
+        "x", "y").head()
+      assert(Option(got.getAs[Double]("rho")) == want, s"far=$far")
     }
   }
 

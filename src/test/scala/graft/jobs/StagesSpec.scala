@@ -14,8 +14,7 @@ class StagesSpec extends SparkSpec {
 
   test("staged mains run the reference chain end-to-end and match the " +
       "in-process DailyChain on every output table") {
-    val lake = java.nio.file.Files.createTempDirectory("graft-lake")
-      .toString
+    val lake = SparkSpec.tempDir("graft-lake").toString
     // the reference DAG order: 000 -> 001 -> 011 -> 012 -> 013 -> 021
     // -> 041 -> 050 -> 060 (parallel branches run fine sequentially)
     Stage000LandTables.main(Array(fixture, lake))

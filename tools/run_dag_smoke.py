@@ -22,8 +22,11 @@ The sandbox has no Airflow scheduler, so this smoke does what
 
 Usage: python3 tools/run_dag_smoke.py [fixture_dir] [lake_dir]
 Defaults: /root/testdata/sf0.001 and a fresh temp dir. Exit 0 = PASS.
+A lake made here is deleted after PASS and kept (its path printed) on
+FAIL; a lake given as an argument is always kept.
 """
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -179,7 +182,18 @@ def run_java(main_class, args, cpus="8"):
 
 def main():
     fixture = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    lake = sys.argv[2] if len(sys.argv) > 2 else tempfile.mkdtemp("graft-lake")
+    own_lake = len(sys.argv) <= 2
+    lake = tempfile.mkdtemp("graft-lake") if own_lake else sys.argv[2]
+    try:
+        smoke(fixture, lake)
+    except BaseException:
+        print(f"[dag-smoke] lake kept for inspection: {lake}")
+        raise
+    if own_lake:
+        shutil.rmtree(lake)
+
+
+def smoke(fixture, lake):
     tasks, edges, _ = load_dag(fixture, lake)
     print(f"[dag-smoke] parsed {DAG_FILE}: {len(tasks)} tasks, "
           f"{len(edges)} edges")
