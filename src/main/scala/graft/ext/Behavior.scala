@@ -16,6 +16,14 @@ import org.apache.spark.sql.functions._
   * cohort, nothing global, so the shapes survive arbitrary user counts
   * (the 100 TB axis for an event log is users × time, and both
   * operators are linear scans over it).
+  *
+  * The survival family — [[Behavior.survivalTable]] (with
+  * [[Behavior.kaplanMeier]] and [[Behavior.nelsonAalen]] as its column
+  * selections), [[Behavior.logRank]] and [[Behavior.competingRisks]] —
+  * shares one grid: `survivalGrid` collapses users to time-to-first
+  * target (censored at last activity) and packs the bounded
+  * per-duration counts into one duration-sorted array row, and
+  * `gridFold` is the one exclusive/inclusive prefix fold over it.
   */
 object Behavior {
 
@@ -315,6 +323,95 @@ object Behavior {
           .cast(LongType).as("rfm_code"))
   }
 
+  // ===== the survival grid ============================================
+
+  /** The survival family's one duration collapse ([[kaplanMeier]],
+    * [[nelsonAalen]], [[survivalTable]], [[logRank]] and
+    * [[competingRisks]] all start here). Per user: t0 = first activity;
+    * the spell ends at the first event whose type is in `targets`, and
+    * `cause` k (1-based) names that target — an exact tie goes to the
+    * earlier target in the list; a user with none is right-censored
+    * at their last activity (cause 0). dur = calendar days from t0 to
+    * the end of the spell. Users then collapse to the BOUNDED
+    * per-duration grid (|distinct durations| ≤ the day span of the
+    * log), and the grid to ONE row:
+    *   - `arr`: the duration-sorted array of (dur, d1 … dK, c), the
+    *     exact BIGINT event counts per cause and the censored count;
+    *   - `n`: the number of users.
+    * With `arm` (a per-user column; its smallest value is arm A, the
+    * welchZ convention), every count splits into `_a` (arm A) and
+    * `_b` (any other value; a NULL arm counts in neither), and the row
+    * also carries the two arm values `ga` and `gb`.
+    *
+    * Scale shape: ONE user-keyed aggregate collapses the stream and
+    * one duration-keyed aggregate collapses the users; every later
+    * recursion folds inside the single O(B²)-work array row
+    * ([[gridFold]]) — no unpartitioned window over anything
+    * unbounded. */
+  private def survivalGrid(events: DataFrame, userCol: String,
+      tsCol: String, typeCol: String, targets: Seq[String],
+      arm: Option[String] = None): DataFrame = {
+    import org.apache.spark.sql.types.LongType
+    val ts = col(tsCol)
+    val firsts = targets.indices.map(k => col(s"t${k + 1}"))
+    val perUser = events.groupBy(col(userCol).as("user"))
+      .agg(min(ts).as("t0"), targets.zipWithIndex.map { case (t, k) =>
+          min(when(col(typeCol) === t, ts)).as(s"t${k + 1}") } ++
+        Seq(max(ts).as("tl")) ++ arm.map(a => min(col(a)).as("g")): _*)
+    val first = if (firsts.size == 1) firsts.head else least(firsts: _*)
+    val cause = firsts.zipWithIndex.foldRight(lit(0)) {
+      case ((t, k), later) => when(t === first, lit(k + 1)).otherwise(later)
+    }
+    val spells = perUser.select(Seq(
+      datediff(to_date(coalesce(first, col("tl"))), to_date(col("t0")))
+        .cast(LongType).as("dur"),
+      cause.as("cause")) ++ arm.map(_ => col("g")): _*)
+    val arms = arm.map(_ =>
+      spells.agg(min(col("g")).as("ga"), max(col("g")).as("gb")))
+    val sides = if (arm.isEmpty) Seq("" -> lit(true)) else Seq(
+      "_a" -> (col("g") === col("ga")), "_b" -> (col("g") =!= col("ga")))
+    val outcomes = (1 to targets.size).map(k => s"d$k" -> k) :+ ("c" -> 0)
+    val cells = for ((o, k) <- outcomes; (s, side) <- sides) yield
+      (o + s) -> (col("cause") === k && side)
+    val counts = cells.map { case (f, hit) =>
+      sum(when(hit, 1L).otherwise(0L)).as(f) }
+    val byDur = arms.fold(spells)(a => spells.crossJoin(broadcast(a)))
+      .groupBy(col("dur")).agg(counts.head, counts.tail: _*)
+    val fields = cells.map { case (f, _) => col(f) }
+    val packed = byDur.agg(
+      array_sort(collect_list(struct(col("dur") +: fields: _*))).as("arr"),
+      sum(fields.reduce(_ + _)).as("n"))
+    arms.fold(packed)(a => packed.crossJoin(broadcast(a)))
+  }
+
+  /** The survival family's one prefix fold over a [[survivalGrid]]
+    * array: sums `fields` over the elements before 0-based element `i`
+    * (the durations strictly earlier — at-risk sets, S(t−)), or,
+    * `inclusive`, up to and including it (running sums at t). BIGINT
+    * counts add exactly. `dec` terms (sig9'd doubles) accumulate in
+    * DECIMAL(25,15): (25,15) + (25,15) -> (26,15), so precision grows
+    * but the SCALE survives (at (38,15) Spark would cap precision and
+    * shave the 15th decimal, silently diverging from DuckDB's exact
+    * window sum); the cast back to (25,15) is exact for these
+    * magnitudes (a running sum is bounded by B·|term|max ≪ 10^10). */
+  private def gridFold(arr: Column, i: Column, fields: Seq[String],
+      inclusive: Boolean, dec: Boolean = false): Column = {
+    import org.apache.spark.sql.types.DecimalType
+    val acc: Column => Column =
+      if (dec) _.cast(DecimalType(25, 15)) else identity
+    aggregate(slice(arr, lit(1), if (inclusive) i + 1 else i),
+      acc(lit(0L)),
+      (a, e) => acc(fields.foldLeft(a)((s, f) => s + acc(e.getField(f)))))
+  }
+
+  /** Product-limit survival from a grid fold: 0.0 once any factor hit
+    * exactly zero (`zeros` > 0; the log path would be -Inf), else
+    * exp of the surfaced DECIMAL log-sum, sig9'd. */
+  private def productLimit(zeros: Column, cumLog: Column): Column = {
+    import graft.queries.Q
+    when(zeros > 0, lit(0.0)).otherwise(Q.sig9(exp(Q.decOut(cumLog, 12))))
+  }
+
   /** Kaplan-Meier survival curve of time-to-first-`targetType` — the
     * censoring-aware "how long until a user converts" estimator that
     * plain conversion rates get wrong (users who have not converted
@@ -324,16 +421,13 @@ object Behavior {
     * duration t with d_t observed events and n_t at risk,
     * S(t) = ∏_{t' ≤ t} (1 − d_{t'}/n_{t'}).
     *
-    * Scale shape: ONE user-keyed aggregate collapses the stream, one
-    * duration-keyed aggregate collapses users to the BOUNDED
-    * per-duration table (|distinct durations| ≤ the day span of the
-    * log), and the risk/product recursion folds inside a single
-    * O(B²)-work array row (the ksDistance bases idiom) — no
-    * unpartitioned window over anything unbounded.
+    * Plan: the KM columns of [[survivalTable]] — the grid is
+    * [[survivalGrid]]'s, and the risk/product recursion folds inside
+    * its single bounded array row ([[gridFold]]).
     *
     * Determinism: n/d/c are exact BIGINTs; each factor is one IEEE
     * division of exact-cast integers, its log sig9'd, the running sum
-    * kept in DECIMAL(38,15) (order-free), and the final
+    * kept in DECIMAL(25,15) (order-free), and the final
     * exp(round-cast) sig9'd — the cusum/decay numeric contract. A
     * factor hitting exactly zero (n_t = d_t) pins survival to 0.0
     * from that duration on (the log path would be -Inf); the flag
@@ -342,64 +436,9 @@ object Behavior {
     * @return one row per distinct duration: (dur_days, n_risk,
     *         n_events, n_censored, survival) */
   def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
-      eventTypeCol: String, targetType: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-    import graft.queries.Q
-    val decAcc = DecimalType(25, 15)
-    val perUser = events.groupBy(col(userCol).as("user"))
-      .agg(min(col(tsCol)).as("t0"),
-        min(when(col(eventTypeCol) === targetType, col(tsCol))).as("tp"),
-        max(col(tsCol)).as("tl"))
-      .select(
-        when(col("tp").isNotNull,
-          datediff(to_date(col("tp")), to_date(col("t0"))))
-          .otherwise(datediff(to_date(col("tl")), to_date(col("t0"))))
-          .cast(LongType).as("dur"),
-        col("tp").isNotNull.as("obs"))
-    val byDur = perUser.groupBy(col("dur"))
-      .agg(sum(when(col("obs"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("obs"), 0L).otherwise(1L)).as("c"))
-    val packed = byDur.agg(
-      array_sort(collect_list(struct(col("dur"), col("d"), col("c"))))
-        .as("arr"),
-      sum(col("d") + col("c")).as("n"))
-    // pass 1: at-risk counts (exclusive prefix) + per-duration log term
-    val withRisk = packed.select(
-      transform(col("arr"), (x, i) => {
-        val removed = aggregate(slice(col("arr"), lit(1), i), lit(0L),
-          (acc, e) => acc + e.getField("d") + e.getField("c"))
-        val nRisk = col("n") - removed
-        val d = x.getField("d")
-        struct(x.getField("dur").as("dur"), d.as("d"),
-          x.getField("c").as("c"), nRisk.as("n_risk"),
-          when(d > 0 && nRisk > d, Q.sig9(log(
-            (nRisk - d).cast(DoubleType) / nRisk.cast(DoubleType))))
-            .otherwise(lit(0.0)).as("term"),
-          (d > 0 && nRisk === d).as("hit_zero"))
-      }).as("arr2"))
-    // pass 2: inclusive running log-sum in exact decimal + zero flag
-    withRisk.select(explode(transform(col("arr2"), (x, i) =>
-      struct(x.getField("dur").as("dur"), x.getField("d").as("d"),
-        x.getField("c").as("c"), x.getField("n_risk").as("n_risk"),
-        aggregate(slice(col("arr2"), lit(1), i + 1),
-          lit(0L).cast(decAcc),
-          // (25,15) + (25,15) -> (26,15): precision grows but the
-          // SCALE survives (at (38,15) Spark would cap precision and
-          // shave the 15th decimal, silently diverging from DuckDB's
-          // exact window sum); the cast back to (25,15) is exact for
-          // these magnitudes (|cumlog| bounded by B·|ln f|max ≪ 10^10)
-          (acc, e) => (acc + e.getField("term").cast(decAcc)).cast(decAcc))
-          .as("cumlog"),
-        aggregate(slice(col("arr2"), lit(1), i + 1), lit(false),
-          (acc, e) => acc || e.getField("hit_zero")).as("zero"))))
-      .as("r"))
-      .select(col("r.dur").as("dur_days"),
-        col("r.n_risk").cast(LongType).as("n_risk"),
-        col("r.d").as("n_events"), col("r.c").as("n_censored"),
-        when(col("r.zero"), lit(0.0))
-          .otherwise(Q.sig9(exp(Q.decOut(col("r.cumlog"), 12))))
-          .as("survival"))
-  }
+      eventTypeCol: String, targetType: String): DataFrame =
+    survivalTable(events, userCol, tsCol, eventTypeCol, targetType)
+      .select("dur_days", "n_risk", "n_events", "n_censored", "survival")
 
   /** Restricted mean survival time (Royston & Parmar 2013; Uno et al.
     * 2014): RMST(τ) = ∫_0^τ S(t) dt over a [[kaplanMeier]] curve — the
@@ -570,145 +609,80 @@ object Behavior {
     * everyone at risk converts adds a finite hazard increment of 1
     * where KM's product pins to 0).
     *
-    * Scale shape: identical to KM — one user-keyed collapse, one
-    * duration-keyed collapse to the bounded grid, and both running
-    * sums fold inside a single O(B²)-work array row; no unpartitioned
-    * window.
+    * Plan: the Nelson–Aalen columns of [[survivalTable]] — the
+    * [[survivalGrid]] collapse, and both running sums folded by
+    * [[gridFold]] inside its single bounded array row.
     *
     * Determinism: d/n and d/n² are IEEE divisions of exact-cast
     * BIGINTs, each sig9'd; running sums accumulate in DECIMAL(25,15)
-    * (the KM accumulator rule — (38,15) addition would cap precision
-    * and shave the 15th decimal) and surface via decOut(·,12); the FH
+    * ([[gridFold]]'s accumulator) and surface via decOut(·,12); the FH
     * survival is one sig9'd exp over the surfaced cumulative hazard.
     *
     * @return one row per distinct duration: (dur_days, n_risk,
     *         n_events, n_censored, hazard, cum_hazard, cum_var,
     *         fh_survival) */
   def nelsonAalen(events: DataFrame, userCol: String, tsCol: String,
-      eventTypeCol: String, targetType: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-    import graft.queries.Q
-    val decAcc = DecimalType(25, 15)
-    val perUser = events.groupBy(col(userCol).as("user"))
-      .agg(min(col(tsCol)).as("t0"),
-        min(when(col(eventTypeCol) === targetType, col(tsCol))).as("tp"),
-        max(col(tsCol)).as("tl"))
-      .select(
-        when(col("tp").isNotNull,
-          datediff(to_date(col("tp")), to_date(col("t0"))))
-          .otherwise(datediff(to_date(col("tl")), to_date(col("t0"))))
-          .cast(LongType).as("dur"),
-        col("tp").isNotNull.as("obs"))
-    val byDur = perUser.groupBy(col("dur"))
-      .agg(sum(when(col("obs"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("obs"), 0L).otherwise(1L)).as("c"))
-    val packed = byDur.agg(
-      array_sort(collect_list(struct(col("dur"), col("d"), col("c"))))
-        .as("arr"),
-      sum(col("d") + col("c")).as("n"))
-    // pass 1: at-risk counts (exclusive prefix) + per-duration terms
-    val withRisk = packed.select(
-      transform(col("arr"), (x, i) => {
-        val removed = aggregate(slice(col("arr"), lit(1), i), lit(0L),
-          (acc, e) => acc + e.getField("d") + e.getField("c"))
-        val nRisk = col("n") - removed
-        val d = x.getField("d")
-        val nd = nRisk.cast(DoubleType)
-        struct(x.getField("dur").as("dur"), d.as("d"),
-          x.getField("c").as("c"), nRisk.as("n_risk"),
-          when(d > 0, Q.sig9(d.cast(DoubleType) / nd))
-            .otherwise(lit(0.0)).as("h"),
-          when(d > 0, Q.sig9(d.cast(DoubleType) / (nd * nd)))
-            .otherwise(lit(0.0)).as("v"))
-      }).as("arr2"))
-    // pass 2: inclusive running sums in exact decimal
-    def runSum(field: String, i: Column) =
-      aggregate(slice(col("arr2"), lit(1), i + 1), lit(0L).cast(decAcc),
-        (acc, e) => (acc + e.getField(field).cast(decAcc)).cast(decAcc))
-    withRisk.select(explode(transform(col("arr2"), (x, i) =>
-      struct(x.getField("dur").as("dur"), x.getField("d").as("d"),
-        x.getField("c").as("c"), x.getField("n_risk").as("n_risk"),
-        x.getField("h").as("h"),
-        runSum("h", i).as("ch"), runSum("v", i).as("cv"))))
-      .as("r"))
-      .select(col("r.dur").as("dur_days"),
-        col("r.n_risk").cast(LongType).as("n_risk"),
-        col("r.d").as("n_events"), col("r.c").as("n_censored"),
-        col("r.h").as("hazard"),
-        Q.decOut(col("r.ch"), 12).as("cum_hazard"),
-        Q.decOut(col("r.cv"), 12).as("cum_var"),
-        Q.sig9(exp(-Q.decOut(col("r.ch"), 12))).as("fh_survival"))
-  }
+      eventTypeCol: String, targetType: String): DataFrame =
+    survivalTable(events, userCol, tsCol, eventTypeCol, targetType)
+      .select("dur_days", "n_risk", "n_events", "n_censored", "hazard",
+        "cum_hazard", "cum_var", "fh_survival")
 
-  /** One-plan survival table — [[kaplanMeier]] AND [[nelsonAalen]]
-    * fused over a SINGLE duration-grid scan: at 100 TB the per-user
-    * collapse dominates both operators, so the dashboard that wants
-    * the KM curve next to the cumulative hazard should pay it once,
-    * not twice. Both running folds ride the same packed array row;
-    * every column is bit-identical to its standalone operator (the
-    * pipeline contract, pinned by `SurvivalSuiteSpec`).
+  /** One-plan survival table — the [[kaplanMeier]] curve AND the
+    * [[nelsonAalen]] hazard over a SINGLE duration-grid scan: at
+    * 100 TB the per-user collapse dominates both estimators, so the
+    * dashboard that wants the KM curve next to the cumulative hazard
+    * pays it once. The two standalone operators are column selections
+    * of this table; `BehaviorSpec` pins their values against
+    * hand-computed chains.
+    *
+    * Plan: [[survivalGrid]] with one target, then two passes over its
+    * array row — at-risk counts from the exclusive [[gridFold]] plus
+    * the per-duration terms, then the inclusive running sums.
     *
     * @return one row per distinct duration: (dur_days, n_risk,
     *         n_events, n_censored, survival, hazard, cum_hazard,
     *         cum_var, fh_survival) */
   def survivalTable(events: DataFrame, userCol: String, tsCol: String,
       eventTypeCol: String, targetType: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+    import org.apache.spark.sql.types.{DoubleType, LongType}
     import graft.queries.Q
-    val decAcc = DecimalType(25, 15)
-    val perUser = events.groupBy(col(userCol).as("user"))
-      .agg(min(col(tsCol)).as("t0"),
-        min(when(col(eventTypeCol) === targetType, col(tsCol))).as("tp"),
-        max(col(tsCol)).as("tl"))
-      .select(
-        when(col("tp").isNotNull,
-          datediff(to_date(col("tp")), to_date(col("t0"))))
-          .otherwise(datediff(to_date(col("tl")), to_date(col("t0"))))
-          .cast(LongType).as("dur"),
-        col("tp").isNotNull.as("obs"))
-    val byDur = perUser.groupBy(col("dur"))
-      .agg(sum(when(col("obs"), 1L).otherwise(0L)).as("d"),
-        sum(when(col("obs"), 0L).otherwise(1L)).as("c"))
-    val packed = byDur.agg(
-      array_sort(collect_list(struct(col("dur"), col("d"), col("c"))))
-        .as("arr"),
-      sum(col("d") + col("c")).as("n"))
+    val packed = survivalGrid(events, userCol, tsCol, eventTypeCol,
+      Seq(targetType))
+    // pass 1: at-risk counts (exclusive prefix) + per-duration terms
     val withRisk = packed.select(
       transform(col("arr"), (x, i) => {
-        val removed = aggregate(slice(col("arr"), lit(1), i), lit(0L),
-          (acc, e) => acc + e.getField("d") + e.getField("c"))
-        val nRisk = col("n") - removed
-        val d = x.getField("d")
+        val nRisk = col("n") -
+          gridFold(col("arr"), i, Seq("d1", "c"), inclusive = false)
+        val d = x.getField("d1")
         val nd = nRisk.cast(DoubleType)
         struct(x.getField("dur").as("dur"), d.as("d"),
           x.getField("c").as("c"), nRisk.as("n_risk"),
           when(d > 0 && nRisk > d, Q.sig9(log(
             (nRisk - d).cast(DoubleType) / nd)))
             .otherwise(lit(0.0)).as("term"),
-          (d > 0 && nRisk === d).as("hit_zero"),
+          when(d > 0 && nRisk === d, 1L).otherwise(0L).as("hz"),
           when(d > 0, Q.sig9(d.cast(DoubleType) / nd))
             .otherwise(lit(0.0)).as("h"),
           when(d > 0, Q.sig9(d.cast(DoubleType) / (nd * nd)))
             .otherwise(lit(0.0)).as("v"))
       }).as("arr2"))
-    def runSum(field: String, i: Column) =
-      aggregate(slice(col("arr2"), lit(1), i + 1), lit(0L).cast(decAcc),
-        (acc, e) => (acc + e.getField(field).cast(decAcc)).cast(decAcc))
-    withRisk.select(explode(transform(col("arr2"), (x, i) =>
+    // pass 2: inclusive running sums in exact decimal + zero flags
+    val arr2 = col("arr2")
+    def upTo(i: Column, f: String, dec: Boolean) =
+      gridFold(arr2, i, Seq(f), inclusive = true, dec = dec)
+    withRisk.select(explode(transform(arr2, (x, i) =>
       struct(x.getField("dur").as("dur"), x.getField("d").as("d"),
         x.getField("c").as("c"), x.getField("n_risk").as("n_risk"),
         x.getField("h").as("h"),
-        runSum("term", i).as("cumlog"),
-        aggregate(slice(col("arr2"), lit(1), i + 1), lit(false),
-          (acc, e) => acc || e.getField("hit_zero")).as("zero"),
-        runSum("h", i).as("ch"), runSum("v", i).as("cv"))))
+        upTo(i, "term", dec = true).as("cumlog"),
+        upTo(i, "hz", dec = false).as("zeros"),
+        upTo(i, "h", dec = true).as("ch"),
+        upTo(i, "v", dec = true).as("cv"))))
       .as("r"))
       .select(col("r.dur").as("dur_days"),
         col("r.n_risk").cast(LongType).as("n_risk"),
         col("r.d").as("n_events"), col("r.c").as("n_censored"),
-        when(col("r.zero"), lit(0.0))
-          .otherwise(Q.sig9(exp(Q.decOut(col("r.cumlog"), 12))))
-          .as("survival"),
+        productLimit(col("r.zeros"), col("r.cumlog")).as("survival"),
         col("r.h").as("hazard"),
         Q.decOut(col("r.ch"), 12).as("cum_hazard"),
         Q.decOut(col("r.cv"), 12).as("cum_var"),
@@ -773,12 +747,15 @@ object Behavior {
     * hypergeometric variance d·n_A·n_B·(n−d) / (n²(n−1)).
     * z = (O_a − E_a)/√V.
     *
+    * Plan: [[survivalGrid]] with the arm column, so every count is
+    * split by arm; the per-arm at-risk sets are exclusive
+    * [[gridFold]]s inside its one bounded array row.
+    *
     * Exactness: user collapses and per-duration counts are exact
-    * BIGINTs; at-risk sets come from exclusive prefix sums inside ONE
-    * duration-sorted bounded array (the KM convention — durations are
-    * calendar-bounded); each E/V term computes its integer products
-    * in DECIMAL(38,0) (exact below ~10⁹ at-risk users), is sig9'd
-    * once, and folds left-to-right; z is one final sig9'd IEEE chain.
+    * BIGINTs; at-risk sets are exact; each E/V term computes its
+    * integer products in DECIMAL(38,0) (exact below ~10⁹ at-risk
+    * users), is sig9'd once, and folds left-to-right; z is one final
+    * sig9'd IEEE chain.
     *
     * @param groupCol two-valued arm column (smallest value = group A,
     *        the welchZ convention); must be constant per user
@@ -787,50 +764,24 @@ object Behavior {
   def logRank(events: DataFrame, userCol: String, tsCol: String,
       eventTypeCol: String, targetType: String, groupCol: String)
       : DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, LongType}
+    import org.apache.spark.sql.types.DecimalType
     import graft.queries.Q
     val dec = DecimalType(38, 0)
-    val perUser = events.groupBy(col(userCol).as("user"))
-      .agg(min(col(tsCol)).as("t0"),
-        min(when(col(eventTypeCol) === targetType, col(tsCol))).as("tp"),
-        max(col(tsCol)).as("tl"),
-        min(col(groupCol)).as("g"))
-      .select(
-        when(col("tp").isNotNull,
-          datediff(to_date(col("tp")), to_date(col("t0"))))
-          .otherwise(datediff(to_date(col("tl")), to_date(col("t0"))))
-          .cast(LongType).as("dur"),
-        col("tp").isNotNull.as("obs"), col("g"))
-    val arms = perUser.agg(min(col("g")).as("ga"), max(col("g")).as("gb"))
-    val byDur = perUser.crossJoin(broadcast(arms))
-      .groupBy(col("dur"))
-      .agg(
-        sum(when(col("obs") && col("g") === col("ga"), 1L)
-          .otherwise(0L)).as("da"),
-        sum(when(col("obs") && col("g") =!= col("ga"), 1L)
-          .otherwise(0L)).as("db"),
-        sum(when(!col("obs") && col("g") === col("ga"), 1L)
-          .otherwise(0L)).as("ca"),
-        sum(when(!col("obs") && col("g") =!= col("ga"), 1L)
-          .otherwise(0L)).as("cb"))
-    val packed = byDur
-      .agg(array_sort(collect_list(struct(col("dur"), col("da"),
-        col("db"), col("ca"), col("cb")))).as("arr"))
-      .select(col("arr"),
-        aggregate(col("arr"), lit(0L),
-          (a, x) => a + x.getField("da") + x.getField("ca")).as("ta"),
-        aggregate(col("arr"), lit(0L),
-          (a, x) => a + x.getField("db") + x.getField("cb")).as("tb"))
-    def prefix(f1: String, f2: String, i: Column) =
-      aggregate(slice(col("arr"), lit(1), i), lit(0L),
-        (a, x) => a + x.getField(f1) + x.getField(f2))
+    val armA = Seq("d1_a", "c_a")
+    val armB = Seq("d1_b", "c_b")
+    def users(fields: Seq[String]) = aggregate(col("arr"), lit(0L),
+      (a, x) => fields.foldLeft(a)((s, f) => s + x.getField(f)))
+    val packed = survivalGrid(events, userCol, tsCol, eventTypeCol,
+        Seq(targetType), arm = Some(groupCol))
+      .select(col("ga"), col("gb"), col("arr"), users(armA).as("ta"),
+        users(armB).as("tb"))
     val terms = transform(col("arr"), (x, i) => {
-      val na = col("ta") - prefix("da", "ca", i)
-      val nb = col("tb") - prefix("db", "cb", i)
+      val na = col("ta") - gridFold(col("arr"), i, armA, inclusive = false)
+      val nb = col("tb") - gridFold(col("arr"), i, armB, inclusive = false)
       val n = na + nb
-      val d = x.getField("da") + x.getField("db")
+      val d = x.getField("d1_a") + x.getField("d1_b")
       struct(
-        x.getField("da").as("oa"),
+        x.getField("d1_a").as("oa"),
         when(d > 0 && n > 0, Q.sig9(
           (d.cast(dec) * na.cast(dec)).cast("double") /
             n.cast("double"))).otherwise(lit(0.0)).as("e"),
@@ -840,7 +791,7 @@ object Behavior {
             (n.cast(dec) * n.cast(dec) * (n - 1).cast(dec))
               .cast("double"))).otherwise(lit(0.0)).as("v"))
     })
-    val withTerms = packed.crossJoin(broadcast(arms))
+    val withTerms = packed
       .select(col("ga"), col("gb"), col("ta"), col("tb"),
         aggregate(terms, lit(0L), (a, t) => a + t.getField("oa"))
           .as("o_a"),
@@ -1063,17 +1014,17 @@ object Behavior {
     * Grid semantics ([[kaplanMeier]]'s): per user t0 = first
     * activity, the FIRST of (first `typeA`, first `typeB`) wins
     * (exact-tie → A, deterministic and documented), right-censored
-    * at last activity when neither occurs.
+    * at last activity when neither occurs. With a `typeB` that never
+    * occurs, n_risk, n_a and survival equal [[kaplanMeier]]'s bit for
+    * bit (`SurvivalSuiteSpec` pins it).
     *
-    * Scale shape: identical to KM — one user-keyed collapse, one
-    * duration-keyed collapse to the bounded grid; risk sets, the
-    * combined log-survival recursion, per-cause hazards and both
-    * incidence folds all run inside O(B²) array passes on a single
-    * row. No unpartitioned window.
+    * Plan: [[survivalGrid]] with two targets; risk sets, the combined
+    * log-survival recursion, per-cause hazards and both incidence
+    * folds are [[gridFold]]s inside its one bounded array row.
     *
     * Determinism: exact integer risk sets; each log factor / hazard
     * / S(t−)·h product is one sig9 point; running sums accumulate in
-    * DECIMAL(25,15) (the KM accumulator rule) and surface via
+    * DECIMAL(25,15) ([[gridFold]]'s accumulator) and surface via
     * decOut(·,12); an everyone-exits duration pins S (and all later
     * S(t−) terms) to exactly 0.0 on both engines.
     *
@@ -1081,50 +1032,24 @@ object Behavior {
     *         n_b, n_censored, s_minus, survival, cif_a, cif_b) */
   def competingRisks(events: DataFrame, userCol: String, tsCol: String,
       eventTypeCol: String, typeA: String, typeB: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+    import org.apache.spark.sql.types.{DoubleType, LongType}
     import graft.queries.Q
-    val decAcc = DecimalType(25, 15)
-    val perUser = events.groupBy(col(userCol).as("user"))
-      .agg(min(col(tsCol)).as("t0"),
-        min(when(col(eventTypeCol) === typeA, col(tsCol))).as("ta"),
-        min(when(col(eventTypeCol) === typeB, col(tsCol))).as("tb"),
-        max(col(tsCol)).as("tl"))
-      .select(
-        when(col("ta").isNull && col("tb").isNull,
-          datediff(to_date(col("tl")), to_date(col("t0"))))
-          .otherwise(when(col("tb").isNull ||
-              (col("ta").isNotNull && col("ta") <= col("tb")),
-            datediff(to_date(col("ta")), to_date(col("t0"))))
-            .otherwise(datediff(to_date(col("tb")), to_date(col("t0")))))
-          .cast(LongType).as("dur"),
-        when(col("ta").isNull && col("tb").isNull, lit("c"))
-          .otherwise(when(col("tb").isNull ||
-              (col("ta").isNotNull && col("ta") <= col("tb")),
-            lit("a")).otherwise(lit("b"))).as("kind"))
-    val byDur = perUser.groupBy(col("dur"))
-      .agg(sum(when(col("kind") === "a", 1L).otherwise(0L)).as("da"),
-        sum(when(col("kind") === "b", 1L).otherwise(0L)).as("db"),
-        sum(when(col("kind") === "c", 1L).otherwise(0L)).as("c"))
-    val packed = byDur.agg(
-      array_sort(collect_list(struct(col("dur"), col("da"), col("db"),
-        col("c")))).as("arr"),
-      sum(col("da") + col("db") + col("c")).as("n"))
+    val packed = survivalGrid(events, userCol, tsCol, eventTypeCol,
+      Seq(typeA, typeB))
     // pass 1: risk sets, combined-event log factors, per-cause hazards
     val p1 = packed.select(
       transform(col("arr"), (x, i) => {
-        val removed = aggregate(slice(col("arr"), lit(1), i), lit(0L),
-          (acc, e) => acc + e.getField("da") + e.getField("db") +
-            e.getField("c"))
-        val nRisk = col("n") - removed
-        val da = x.getField("da"); val db = x.getField("db")
+        val nRisk = col("n") -
+          gridFold(col("arr"), i, Seq("d1", "d2", "c"), inclusive = false)
+        val da = x.getField("d1"); val db = x.getField("d2")
         val any = da + db
         val nd = nRisk.cast(DoubleType)
         struct(x.getField("dur").as("dur"), da.as("da"), db.as("db"),
           x.getField("c").as("c"), nRisk.as("n_risk"),
           when(any > 0 && nRisk > any, Q.sig9(log(
             (nRisk - any).cast(DoubleType) / nd)))
-            .otherwise(lit(0.0)).as("lf"),
-          (any > 0 && nRisk === any).as("hz"),
+            .otherwise(lit(0.0)).as("term"),
+          when(any > 0 && nRisk === any, 1L).otherwise(0L).as("hz"),
           when(da > 0, Q.sig9(da.cast(DoubleType) / nd))
             .otherwise(lit(0.0)).as("ha"),
           when(db > 0, Q.sig9(db.cast(DoubleType) / nd))
@@ -1132,36 +1057,31 @@ object Behavior {
       }).as("arr2"))
     // pass 2: S(t−) from the EXCLUSIVE log prefix, S(t) inclusive,
     // and the per-duration incidence terms S(t−)·h_k
-    def logSum(i: Column, len: Column) =
-      aggregate(slice(col("arr2"), lit(1), len), lit(0L).cast(decAcc),
-        (acc, e) => (acc + e.getField("lf").cast(decAcc)).cast(decAcc))
-    def zeroHit(i: Column, len: Column) =
-      aggregate(slice(col("arr2"), lit(1), len), lit(false),
-        (acc, e) => acc || e.getField("hz"))
+    val arr2 = col("arr2")
+    def surv(i: Column, inclusive: Boolean) = productLimit(
+      gridFold(arr2, i, Seq("hz"), inclusive),
+      gridFold(arr2, i, Seq("term"), inclusive, dec = true))
     val p2 = p1.select(
-      transform(col("arr2"), (x, i) => {
-        val sMinus = when(zeroHit(i, i), lit(0.0))
-          .otherwise(Q.sig9(exp(Q.decOut(logSum(i, i), 12))))
+      transform(arr2, (x, i) => {
+        val sMinus = surv(i, inclusive = false)
         struct(x.getField("dur").as("dur"), x.getField("da").as("da"),
           x.getField("db").as("db"), x.getField("c").as("c"),
           x.getField("n_risk").as("n_risk"), sMinus.as("s_minus"),
-          when(zeroHit(i, i + 1), lit(0.0))
-            .otherwise(Q.sig9(exp(Q.decOut(logSum(i, i + 1), 12))))
-            .as("survival"),
+          surv(i, inclusive = true).as("survival"),
           Q.sig9(sMinus * x.getField("ha")).as("term_a"),
           Q.sig9(sMinus * x.getField("hb")).as("term_b"))
       }).as("arr3"))
     // pass 3: inclusive running incidence sums in exact decimal
-    def runSum(field: String, i: Column) =
-      aggregate(slice(col("arr3"), lit(1), i + 1), lit(0L).cast(decAcc),
-        (acc, e) => (acc + e.getField(field).cast(decAcc)).cast(decAcc))
-    p2.select(explode(transform(col("arr3"), (x, i) =>
+    val arr3 = col("arr3")
+    def cif(i: Column, f: String) =
+      gridFold(arr3, i, Seq(f), inclusive = true, dec = true)
+    p2.select(explode(transform(arr3, (x, i) =>
       struct(x.getField("dur").as("dur"), x.getField("da").as("da"),
         x.getField("db").as("db"), x.getField("c").as("c"),
         x.getField("n_risk").as("n_risk"),
         x.getField("s_minus").as("s_minus"),
         x.getField("survival").as("survival"),
-        runSum("term_a", i).as("ca"), runSum("term_b", i).as("cb"))))
+        cif(i, "term_a").as("ca"), cif(i, "term_b").as("cb"))))
       .as("r"))
       .select(col("r.dur").as("dur_days"),
         col("r.n_risk").cast(LongType).as("n_risk"),

@@ -334,17 +334,12 @@ object BehaviorQueries {
 
   // ===== Kaplan-Meier time-to-conversion ==============================
 
-  /** Survival curve of days-to-first-purchase per user, censoring
-    * non-converters at their last activity — the estimator a plain
-    * conversion rate gets wrong. Factors are exact integer ratios;
-    * the log-product runs in decimal; survival pins to 0.0 if a
-    * factor hits zero exactly. */
-  private val kmQ: QFn = (s, d) =>
-    graft.ext.Behavior.kaplanMeier(Tables.events(s, d),
-      "user_id", "ts", "event_type", targetType = "purchase")
-
-  private val kmSql =
-    s"""WITH pu AS (
+  /** The oracle twin of the survival grid, shared by the KM,
+    * Nelson–Aalen and pipeline-12 oracles: per-user time to first
+    * purchase (censored at last activity), the per-duration event and
+    * censoring counts, and the at-risk count n_risk per duration. */
+  private val gridCtes =
+    """WITH pu AS (
        |  SELECT user_id, min(ts) AS t0,
        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS tp,
        |    max(ts) AS tl
@@ -367,7 +362,19 @@ object BehaviorQueries {
        |    nt.n - COALESCE(SUM(d + c) OVER (ORDER BY dur
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
        |      AS n_risk
-       |  FROM bd, nt),
+       |  FROM bd, nt),""".stripMargin
+
+  /** Survival curve of days-to-first-purchase per user, censoring
+    * non-converters at their last activity — the estimator a plain
+    * conversion rate gets wrong. Factors are exact integer ratios;
+    * the log-product runs in decimal; survival pins to 0.0 if a
+    * factor hits zero exactly. */
+  private val kmQ: QFn = (s, d) =>
+    graft.ext.Behavior.kaplanMeier(Tables.events(s, d),
+      "user_id", "ts", "event_type", targetType = "purchase")
+
+  private val kmSql =
+    s"""$gridCtes
        |tm AS (
        |  SELECT dur, d, c, n_risk,
        |    CASE WHEN d > 0 AND n_risk > d THEN
@@ -443,30 +450,7 @@ object BehaviorQueries {
     val h = Q.sqlSig9("CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)")
     val v = Q.sqlSig9("CAST(d AS DOUBLE) / " +
       "(CAST(n_risk AS DOUBLE) * CAST(n_risk AS DOUBLE))")
-    s"""WITH pu AS (
-       |  SELECT user_id, min(ts) AS t0,
-       |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS tp,
-       |    max(ts) AS tl
-       |  FROM events GROUP BY 1),
-       |du AS (
-       |  SELECT CAST(CASE WHEN tp IS NOT NULL
-       |      THEN date_diff('day', CAST(t0 AS DATE), CAST(tp AS DATE))
-       |      ELSE date_diff('day', CAST(t0 AS DATE), CAST(tl AS DATE))
-       |      END AS BIGINT) AS dur,
-       |    tp IS NOT NULL AS obs
-       |  FROM pu),
-       |bd AS (
-       |  SELECT dur,
-       |    CAST(sum(CASE WHEN obs THEN 1 ELSE 0 END) AS BIGINT) AS d,
-       |    CAST(sum(CASE WHEN obs THEN 0 ELSE 1 END) AS BIGINT) AS c
-       |  FROM du GROUP BY 1),
-       |nt AS (SELECT CAST(sum(d + c) AS BIGINT) AS n FROM bd),
-       |rk AS (
-       |  SELECT dur, d, c,
-       |    nt.n - COALESCE(SUM(d + c) OVER (ORDER BY dur
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |      AS n_risk
-       |  FROM bd, nt),
+    s"""$gridCtes
        |tm AS (
        |  SELECT dur, d, c, n_risk,
        |    CASE WHEN d > 0 THEN $h ELSE 0.0 END AS h,
@@ -501,30 +485,7 @@ object BehaviorQueries {
     val h = Q.sqlSig9("CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)")
     val v = Q.sqlSig9("CAST(d AS DOUBLE) / " +
       "(CAST(n_risk AS DOUBLE) * CAST(n_risk AS DOUBLE))")
-    s"""WITH pu AS (
-       |  SELECT user_id, min(ts) AS t0,
-       |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS tp,
-       |    max(ts) AS tl
-       |  FROM events GROUP BY 1),
-       |du AS (
-       |  SELECT CAST(CASE WHEN tp IS NOT NULL
-       |      THEN date_diff('day', CAST(t0 AS DATE), CAST(tp AS DATE))
-       |      ELSE date_diff('day', CAST(t0 AS DATE), CAST(tl AS DATE))
-       |      END AS BIGINT) AS dur,
-       |    tp IS NOT NULL AS obs
-       |  FROM pu),
-       |bd AS (
-       |  SELECT dur,
-       |    CAST(sum(CASE WHEN obs THEN 1 ELSE 0 END) AS BIGINT) AS d,
-       |    CAST(sum(CASE WHEN obs THEN 0 ELSE 1 END) AS BIGINT) AS c
-       |  FROM du GROUP BY 1),
-       |nt AS (SELECT CAST(sum(d + c) AS BIGINT) AS n FROM bd),
-       |rk AS (
-       |  SELECT dur, d, c,
-       |    nt.n - COALESCE(SUM(d + c) OVER (ORDER BY dur
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |      AS n_risk
-       |  FROM bd, nt),
+    s"""$gridCtes
        |tm AS (
        |  SELECT dur, d, c, n_risk,
        |    CASE WHEN d > 0 AND n_risk > d THEN

@@ -543,6 +543,40 @@ class BehaviorSpec extends SparkSpec {
     got.values.foreach { v => assert(near(v._6 + v._7 + v._8, 1.0)) }
   }
 
+  test("survival family on empty input: the four grid operators " +
+      "return no rows, logRank its one zero row; schemas unchanged") {
+    val empty = Seq.empty[(String, java.sql.Timestamp, String, Long)]
+      .toDF("u", "ts", "et", "grp")
+    val grid = Seq(
+      Behavior.kaplanMeier(empty, "u", "ts", "et", "purchase") ->
+        Seq("dur_days", "n_risk", "n_events", "n_censored", "survival"),
+      Behavior.nelsonAalen(empty, "u", "ts", "et", "purchase") ->
+        Seq("dur_days", "n_risk", "n_events", "n_censored", "hazard",
+          "cum_hazard", "cum_var", "fh_survival"),
+      Behavior.survivalTable(empty, "u", "ts", "et", "purchase") ->
+        Seq("dur_days", "n_risk", "n_events", "n_censored", "survival",
+          "hazard", "cum_hazard", "cum_var", "fh_survival"),
+      Behavior.competingRisks(empty, "u", "ts", "et", "purchase",
+        "error") ->
+        Seq("dur_days", "n_risk", "n_a", "n_b", "n_censored", "s_minus",
+          "survival", "cif_a", "cif_b"))
+    grid.foreach { case (df, cols) =>
+      assert(df.columns.toSeq === cols)
+      assert(df.collect().isEmpty, cols.mkString(","))
+    }
+    val lr = Behavior.logRank(empty, "u", "ts", "et", "purchase", "grp")
+    assert(lr.columns.toSeq === Seq("group_a", "group_b", "n_users_a",
+      "n_users_b", "o_a", "e_a", "v", "z"))
+    val rows = lr.collect()
+    assert(rows.length === 1)
+    val r = rows(0)
+    assert(r.isNullAt(0) && r.isNullAt(1)) // no arms seen
+    assert(r.getAs[Long]("n_users_a") == 0L &&
+      r.getAs[Long]("n_users_b") == 0L && r.getAs[Long]("o_a") == 0L)
+    assert(r.getAs[Double]("e_a") == 0.0 && r.getAs[Double]("v") == 0.0)
+    assert(r.isNullAt(7)) // z is NULL when V = 0
+  }
+
   test("competingRisks: an everyone-exits duration pins S and all " +
       "later S(t-) terms to exactly 0") {
     import spark.implicits._

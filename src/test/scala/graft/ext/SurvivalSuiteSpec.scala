@@ -41,6 +41,37 @@ class SurvivalSuiteSpec extends SparkSpec {
     }
   }
 
+  test("competingRisks with a cause that never occurs equals " +
+      "kaplanMeier: n_risk, events and survival bit for bit") {
+    val rnd = new scala.util.Random(20241019L)
+    val day0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    def ts(day: Int, hour: Int) =
+      java.sql.Timestamp.valueOf(day0.plusDays(day).plusHours(hour))
+    val random = (1 to 300).flatMap { u =>
+      val start = rnd.nextInt(10)
+      val last = if (rnd.nextDouble() < 0.6) "purchase" else "visit"
+      Seq(("u" + u, ts(start, rnd.nextInt(12)), "visit"),
+        ("u" + u, ts(start + rnd.nextInt(20), 12 + rnd.nextInt(12)), last))
+    }
+    // the last duration's risk set all converts: a zero KM factor
+    val tail = Seq("z1", "z2").flatMap(u =>
+      Seq((u, ts(0, 1), "visit"), (u, ts(40, 13), "purchase")))
+    val df = (random ++ tail).toDF("user_id", "ts", "event_type")
+      .repartition(4)
+    def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+    val km = Behavior.kaplanMeier(df, "user_id", "ts", "event_type",
+        "purchase")
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), bits(r.getDouble(4))))).toMap
+    val cr = Behavior.competingRisks(df, "user_id", "ts", "event_type",
+        "purchase", "error")
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), bits(r.getDouble(6))))).toMap
+    assert(km.size > 20)
+    assert(km(40L) === ((2L, 2L, bits(0.0))))
+    assert(cr === km)
+  }
+
   test("rmst integrates a KM step curve exactly, clamps at tau, and " +
       "treats an empty curve as full survival") {
     // curve: S=1 on [0,2), 0.5 on [2,5), 0.25 from 5 on
