@@ -48,7 +48,7 @@ object Basket {
       .select(col(basketCol).as("b"), col(itemCol).as("i"))
       .where(col("b").isNotNull && col("i").isNotNull)
       .distinct()
-      .localCheckpoint(eager = false) // read 4x; lazy: builds inside the job (percentRank convention)
+      .transform(Checkpoints.cut) // read 4x: itemN, nB, both pair sides
     val itemN = items.groupBy(col("i")).agg(count(lit(1)).as("c"))
       .where(col("c") >= minSupport)
     val nB = items.agg(countDistinct(col("b")).as("n_baskets"))

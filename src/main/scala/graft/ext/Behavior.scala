@@ -304,7 +304,7 @@ object Behavior {
         datediff(col("__maxd"), col("__last")).cast(LongType)
           .as("recency_days"),
         col("frequency"), col("monetary"))
-      .localCheckpoint() // three binning passes + the final joins
+      .transform(Checkpoints.cut) // three binning passes + the final joins
     def binned(vc: String, out: String) = {
       val b = Profile.equiDepthBins(
           base.select(col(vc)).withColumn("__all", lit(1)),
@@ -344,7 +344,10 @@ object Behavior {
     * also carries the two arm values `ga` and `gb`.
     *
     * Scale shape: ONE user-keyed aggregate collapses the stream and
-    * one duration-keyed aggregate collapses the users; every later
+    * one duration-keyed aggregate collapses the users (with an arm,
+    * one (duration, arm value)-keyed aggregate, packed into one row
+    * whose extremes are `ga` and `gb`; the split by arm then folds
+    * inside that row, so the users are read once); every later
     * recursion folds inside the single O(B²)-work array row
     * ([[gridFold]]) — no unpartitioned window over anything
     * unbounded. */
@@ -366,22 +369,40 @@ object Behavior {
       datediff(to_date(coalesce(first, col("tl"))), to_date(col("t0")))
         .cast(LongType).as("dur"),
       cause.as("cause")) ++ arm.map(_ => col("g")): _*)
-    val arms = arm.map(_ =>
-      spells.agg(min(col("g")).as("ga"), max(col("g")).as("gb")))
-    val sides = if (arm.isEmpty) Seq("" -> lit(true)) else Seq(
-      "_a" -> (col("g") === col("ga")), "_b" -> (col("g") =!= col("ga")))
     val outcomes = (1 to targets.size).map(k => s"d$k" -> k) :+ ("c" -> 0)
-    val cells = for ((o, k) <- outcomes; (s, side) <- sides) yield
-      (o + s) -> (col("cause") === k && side)
-    val counts = cells.map { case (f, hit) =>
-      sum(when(hit, 1L).otherwise(0L)).as(f) }
-    val byDur = arms.fold(spells)(a => spells.crossJoin(broadcast(a)))
-      .groupBy(col("dur")).agg(counts.head, counts.tail: _*)
-    val fields = cells.map { case (f, _) => col(f) }
-    val packed = byDur.agg(
-      array_sort(collect_list(struct(col("dur") +: fields: _*))).as("arr"),
-      sum(fields.reduce(_ + _)).as("n"))
-    arms.fold(packed)(a => packed.crossJoin(broadcast(a)))
+    val perOutcome = outcomes.map { case (o, k) =>
+      sum(when(col("cause") === k, 1L).otherwise(0L)).as(o) }
+    arm match {
+      case None =>
+        val fields = outcomes.map { case (o, _) => col(o) }
+        spells.groupBy(col("dur")).agg(perOutcome.head, perOutcome.tail: _*)
+          .agg(array_sort(collect_list(struct(col("dur") +: fields: _*)))
+            .as("arr"), sum(fields.reduce(_ + _)).as("n"))
+      case Some(_) =>
+        val sides = Seq[(String, Column => Column)](
+          "_a" -> (_ === col("ga")), "_b" -> (_ =!= col("ga")))
+        val split = for ((o, _) <- outcomes; (s, side) <- sides) yield {
+          val hit = (e: Column, d: Column) =>
+            e.getField("dur") === d && side(e.getField("g"))
+          (o + s) -> ((d: Column) => aggregate(
+            filter(col("cells"), e => hit(e, d)), lit(0L),
+            (a, e) => a + e.getField(o)))
+        }
+        val arr = array_sort(transform(
+          array_distinct(transform(col("cells"), _.getField("dur"))),
+          d => struct(d.as("dur") +:
+            split.map { case (f, sumAt) => sumAt(d).as(f) }: _*)))
+        val counts = outcomes.map { case (o, _) => col(o) }
+        spells.groupBy(col("dur"), col("g"))
+          .agg(perOutcome.head, perOutcome.tail: _*)
+          .agg(collect_list(struct(col("dur") +: col("g") +: counts: _*))
+              .as("cells"),
+            // a user with a non-NULL arm is in arm A or arm B
+            sum(when(col("g").isNotNull, counts.reduce(_ + _))
+              .otherwise(0L)).as("n"),
+            min(col("g")).as("ga"), max(col("g")).as("gb"))
+          .select(arr.as("arr"), col("n"), col("ga"), col("gb"))
+    }
   }
 
   /** The survival family's one prefix fold over a [[survivalGrid]]
@@ -556,13 +577,14 @@ object Behavior {
       .withColumn("__xv", xv)
       .select(col("__t"), col("__xb"), col("__xv"),
         col("__d"), col("__c"), (col("__d") + col("__c")).as("__cnt"))
-      .localCheckpoint() // bounded (durations x xBins); read every iter
+      // bounded (durations x xBins); read every iteration
+      .transform(Checkpoints.cut)
     val et = cells.groupBy(col("__t"))
       .agg(sum(col("__d")).cast(LongType).as("__dd"),
         Q.dsumStable(col("__d").cast(DoubleType) * col("__xv"), 6)
           .as("__sx"))
       .where(col("__dd") > 0L)
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read every iteration
     var fit = spark.range(1).select(lit(0.0).as("beta"))
     val rows = (1 to iters).map { k =>
       val ew = cells.crossJoin(broadcast(fit))
@@ -592,7 +614,7 @@ object Behavior {
           Q.sig9(col("beta") + Q.sig9(col("score") / col("info"))))
           .otherwise(col("beta")).as("beta"),
           col("score"), col("info"))
-        .localCheckpoint() // one row; cuts the iteration lineage
+        .transform(Checkpoints.cut) // one row; cuts the iteration lineage
       fit = stepped.select(col("beta"))
       stepped.select(lit(k.toLong).as("iter"), col("beta"), col("score"),
         col("info"))
@@ -1122,7 +1144,8 @@ object Behavior {
       .select(col(userCol).as("user"), to_date(col(tsCol)).as("day"))
       .where(col("user").isNotNull && col("day").isNotNull)
       .distinct()
-      .localCheckpoint() // reused by flags, yesterday and churn joins
+      // reused by flags, yesterday and churn joins
+      .transform(Checkpoints.cut)
     val first = active.groupBy(col("user"))
       .agg(min(col("day")).as("first_day"))
     val prev = active.select(col("user"),

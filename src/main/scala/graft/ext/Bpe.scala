@@ -44,8 +44,7 @@ import graft.core.Parquet
   *
   * The dict is lineage-cut each round ([[Checkpoints.cut]]): it is the
   * loop-carried artifact, and without materialization every round's
-  * argmax would lazily re-run all prior rounds. Pass `checkpointDir`
-  * for the durable `checkpoint()` posture on a real cluster.
+  * argmax would lazily re-run all prior rounds.
   */
 object Bpe {
 
@@ -75,8 +74,7 @@ object Bpe {
     * (step, lhs, rhs, merged, pair_count) — the merges table IS the
     * tokenizer artifact (steps contiguous from 1; fewer rows than
     * `merges` when the vocabulary exhausts early). */
-  def train(toks: DataFrame, tokCol: String, merges: Int,
-            checkpointDir: Option[String] = None): DataFrame =
+  def train(toks: DataFrame, tokCol: String, merges: Int): DataFrame =
     // Delegates to the batched trainer at batch = 1, which BpeSpec pins
     // as EXACTLY this method's sequential semantics (one top pair per
     // round, stale-count ordering impossible at batch 1). The batched
@@ -87,7 +85,7 @@ object Bpe {
     // (guide §1.2/§2.6: per-stage overhead); the collected top row is a
     // bounded tokenizer artifact (the orderedRules contract), not a
     // data collect.
-    trainBatched(toks, tokCol, merges, batch = 1, checkpointDir)
+    trainBatched(toks, tokCol, merges, batch = 1)
 
   /** Batched BPE trainer: up to `batch` MUTUALLY NON-INTERACTING merge
     * rules per Spark round, for production merge counts (R = 32k–100k)
@@ -116,13 +114,12 @@ object Bpe {
     * (step, lhs, rhs, merged, pair_count) schema, steps contiguous
     * from 1. */
   def trainBatched(toks: DataFrame, tokCol: String, merges: Int,
-                   batch: Int = 32,
-                   checkpointDir: Option[String] = None): DataFrame = {
+                   batch: Int = 32): DataFrame = {
     require(merges >= 1, "merges must be >= 1")
     require(batch >= 1, "batch must be >= 1")
     val spark = toks.sparkSession
     import spark.implicits._
-    var words = Checkpoints.cut(wordDict(toks, tokCol), checkpointDir)
+    var words = Checkpoints.cut(wordDict(toks, tokCol))
     val rules = Seq.newBuilder[(Long, String, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -156,7 +153,7 @@ object Bpe {
               case (d, (l, r, _)) =>
                 d.select(merge4(col("sym"), lit(l), lit(r)).as("sym"),
                   col("cnt"))
-            }, checkpointDir)
+            })
         }
         step += kept.size
       }
@@ -244,15 +241,11 @@ object Bpe {
     * then rebuilds per document through [[rebuild]]'s equi-join on the
     * Zipf-bounded dict.
     *
-    * `checkpointDir` is accepted for signature compatibility with the
-    * fold twin; the local path has no loop-carried lineage to cut.
-    *
     * Output: (idCol, n_syms, bpe_text) — bpe_text is the
     * space-separated symbol sequence of the document in token order;
     * token-less documents keep (0, ""). */
   def encode(docs: DataFrame, idCol: String, tokCol: String,
-             rules: DataFrame,
-             checkpointDir: Option[String] = None): DataFrame = {
+             rules: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val ruleArr = orderedRules(rules)
@@ -275,8 +268,7 @@ object Bpe {
     * single-pass local fold is the production path; this stays as the
     * executable contract both engines share. */
   def encodeSqlFold(docs: DataFrame, idCol: String, tokCol: String,
-                    rules: DataFrame,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    rules: DataFrame): DataFrame = {
     val steps = orderedRules(rules).indices.map(_ + 1L)
     val dict0 = docs.select(explode(col(tokCol)).as("w")).distinct()
       .select(col("w"), spaced(col("w")).as("sym"))
@@ -285,7 +277,7 @@ object Bpe {
         .select(col("lhs"), col("rhs"))
       val next = d.crossJoin(broadcast(rule))
         .select(col("w"), merge4(col("sym"), col("lhs"), col("rhs")).as("sym"))
-      if (i % 16 == 0) Checkpoints.cut(next, checkpointDir) else next
+      if (i % 16 == 0) Checkpoints.cut(next) else next
     }
     rebuild(docs, idCol, tokCol, dict)
   }
@@ -351,10 +343,9 @@ object Bpe {
     * where it covers every symbol by construction). */
   def encodeIds(docs: DataFrame, idCol: String, tokCol: String,
                 rules: DataFrame,
-                vocabTable: Option[DataFrame] = None,
-                checkpointDir: Option[String] = None): DataFrame = {
+                vocabTable: Option[DataFrame] = None): DataFrame = {
     val voc = vocabTable.getOrElse(vocab(docs, tokCol, rules))
-    val enc = encode(docs, idCol, tokCol, rules, checkpointDir)
+    val enc = encode(docs, idCol, tokCol, rules)
     enc.filter(col("n_syms") > 0)
       .select(col(idCol),
         posexplode(split(col("bpe_text"), " ")).as(Seq("pos", "sym")))

@@ -2,83 +2,44 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 
-/** Materialization policy for iterative operators (connected
-  * components, Lloyd refinement, BPE rounds): every round's
-  * loop-carried frame must be cut from its lineage or each iteration
-  * lazily re-runs all prior ones.
+/** The one lineage-cut policy: every cut in graft goes through here.
   *
-  * `localCheckpoint` (the default) stores blocks on the executors —
-  * right for a single-JVM session and for honest re-measurement (it is
-  * invisible to the CacheManager), but blocks die with an executor, so
-  * a long-running cluster job would recompute from nothing it can
-  * reach. Passing `checkpointDir` switches to durable `checkpoint()`
-  * into that directory (HDFS/S3 on a real cluster) — the posture the
-  * scaladocs of [[Dedup.dupClusters]] and friends have always named;
-  * this makes it a one-argument switch instead of a fork of the
-  * operator. */
+  * Iterative operators (connected components, Lloyd refinement, BPE
+  * rounds) cut their loop-carried frame each round, or each iteration
+  * lazily re-runs all prior ones; multi-consumer frames are cut so N
+  * consumers read one materialization instead of N recomputations.
+  *
+  * Durability is a property of the context, not of the call: when the
+  * SparkContext has a checkpoint dir (`--conf
+  * spark.checkpoint.dir=hdfs://…`, which Spark installs at context
+  * start), every cut is a durable `checkpoint()` into it. Otherwise it
+  * is `localCheckpoint()`: blocks on the executors — right for a
+  * single-JVM session, and invisible to the CacheManager — but a local
+  * checkpoint truncates lineage, so a block lost with its executor
+  * fails the job instead of being recomputed. */
 object Checkpoints {
 
-  /** What THIS object installed per context: (caller dir, the resolved
-    * `<dir>/<random UUID>` SparkContext actually stores — it appends a
-    * fresh UUID subdirectory on every setCheckpointDir call, so
-    * `getCheckpointDir` can never equal the caller's dir). Weak keys:
-    * contexts stop pinning entries once they are collectable. */
-  private val installed = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.SparkContext,
-      (String, Option[String])]())
+  private def durable(df: DataFrame): Boolean =
+    df.sparkSession.sparkContext.getCheckpointDir.isDefined
 
-  /** Cut `df`'s lineage: durable `checkpoint()` under `dir` when set,
-    * else executor-local `localCheckpoint()`. Both are eager.
-    *
-    * Dir policy (per context):
-    *  - consecutive cuts to ONE dir — the iterative-operator loop —
-    *    install it once and share one UUID checkpoint directory;
-    *  - a checkpoint dir configured OUTSIDE this object is never
-    *    silently overridden: the first durable cut on such a context
-    *    fails loudly (clear the external dir, or route the operator's
-    *    cuts to it by passing None? — None means local; pass the same
-    *    dir to agree with it);
-    *  - operators alternating DIFFERENT dirs on one context are legal
-    *    but re-pay setCheckpointDir per flip (a fresh UUID subdir +
-    *    mkdirs): SparkContext holds exactly one checkpoint dir and no
-    *    public API re-enters a previous UUID subdir. Prefer one
-    *    durable dir per session. */
-  def cut(df: DataFrame, dir: Option[String]): DataFrame = dir match {
-    case Some(d) =>
-      val sc = df.sparkSession.sparkContext
-      installed.synchronized {
-        val cur = installed.get(sc)
-        val active = sc.getCheckpointDir
-        val cachedAndUntouched =
-          cur != null && cur._1 == d && active == cur._2
-        if (!cachedAndUntouched) {
-          require(cur != null || active.isEmpty,
-            s"SparkContext already has checkpoint dir ${active.orNull} " +
-              "configured outside graft.ext.Checkpoints; refusing to " +
-              s"silently override it with $d — clear it or pass the same dir")
-          sc.setCheckpointDir(d)
-          installed.put(sc, (d, sc.getCheckpointDir))
-        }
-      }
-      df.checkpoint()
-    case None => df.localCheckpoint()
-  }
+  /** Cut `df`'s lineage, eagerly: `checkpoint()` into the context's
+    * checkpoint dir when it has one, else `localCheckpoint()`. */
+  def cut(df: DataFrame): DataFrame =
+    if (durable(df)) df.checkpoint() else df.localCheckpoint()
 
-  /** [[cut]] whose LOCAL branch defers materialization into the first
-    * consumer's job (`localCheckpoint(eager = false)`) — for a
-    * loop-carried frame with a SINGLE consumer per round, where the
-    * eager cut is a pure serial job barrier (the percentRank
-    * lazy-rank-table move). Only for deterministic frames (a racy
-    * partition recompute must be value-identical), and NOT for frames
-    * that two concurrent exchange futures consume — the race
-    * materializes the frame twice (measured +0.5 s on q_x_ann_pq when
-    * the PQ codebook, consumed by both the code assignment and the
-    * serving LUT broadcast, was made lazy). The durable branch stays
-    * eager: `checkpoint()` semantics are unchanged. */
-  def cutLazy(df: DataFrame, dir: Option[String]): DataFrame = dir match {
-    case Some(_) => cut(df, dir)
-    case None => df.localCheckpoint(eager = false)
-  }
+  /** [[cut]] whose local branch defers materialization into the first
+    * consumer's job (`localCheckpoint(eager = false)`) — for a frame
+    * with EXACTLY ONE consumer, where the eager cut is a pure serial
+    * job barrier. Only for deterministic frames (a racy partition
+    * recompute must be value-identical). A second consumer — another
+    * branch of the same plan, or two concurrent exchange futures —
+    * races the first to build the blocks and computes partitions twice
+    * (the log shows "Block rdd_N already exists"; measured +0.5 s on
+    * q_x_ann_pq when the PQ codebook, read by both the code assignment
+    * and the serving LUT broadcast, was made lazy): use [[cut]] there.
+    * The durable branch stays eager. */
+  def cutLazy(df: DataFrame): DataFrame =
+    if (durable(df)) df.checkpoint() else df.localCheckpoint(eager = false)
 
   /** [[cut]] that first restores cluster-width parallelism when the
     * frame has collapsed below it. Iterative operators carry small
@@ -93,11 +54,7 @@ object Checkpoints {
     * at-scale case — pays nothing; only a coalesced-small frame pays
     * one cheap exchange of its own (small) bytes before the expensive
     * stage. */
-  def spreadCut(df: DataFrame, dir: Option[String] = None): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val cur = df.rdd.getNumPartitions
-    if (cur < p) cut(df.repartition(p), dir) else cut(df, dir)
-  }
+  def spreadCut(df: DataFrame): DataFrame = cut(spread(df))
 
   /** The no-materialization half of [[spreadCut]]: gated cluster-width
     * repartition with NO lineage cut — for a SINGLE heavy consumer
@@ -112,10 +69,4 @@ object Checkpoints {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
-
-  /** Test hook: forget what was installed for `sc` (specs share one
-    * context per JVM and need a clean slate to exercise the
-    * first-install paths). */
-  private[ext] def forget(sc: org.apache.spark.SparkContext): Unit =
-    installed.synchronized { installed.remove(sc); () }
 }

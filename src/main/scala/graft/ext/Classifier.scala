@@ -101,7 +101,7 @@ object Classifier {
       .groupBy(col(scoreCol).cast("double").as("s"))
       .agg(sum(when(y === 1.0, 1L).otherwise(0L)).as("p"),
         sum(when(y === 1.0, 0L).otherwise(1L)).as("q"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
   }
 
   /** Exact ROC AUC (Mann–Whitney with the standard tie correction):
@@ -253,14 +253,14 @@ object Classifier {
         Q.dsum(Q.sig9(col("__x2") * col("__x2"))).as("s22"),
         Q.dsum(Q.sig9(col("__x1") * col("__y"))).as("sy1"),
         Q.dsum(Q.sig9(col("__x2") * col("__y"))).as("sy2"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read twice: the totals and the output
     val tot = g.agg(
       Q.dsumStable(col("s11"), 6).as("t11"),
       Q.dsumStable(col("s12"), 6).as("t12"),
       Q.dsumStable(col("s22"), 6).as("t22"),
       Q.dsumStable(col("sy1"), 6).as("ty1"),
       Q.dsumStable(col("sy2"), 6).as("ty2"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // one row, read by `full` and the output
     // full-data fit once (same Cramer shape as the per-group solves)
     def solve(a: Column, b: Column, c: Column, r1: Column, r2: Column) = {
       val det = Q.sig9(a * c - b * b)
@@ -484,7 +484,7 @@ object Classifier {
         col(predCol).cast("string").as("p"))
       .where(col("t").isNotNull && col("p").isNotNull)
       .groupBy(col("t"), col("p")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // reused: totals + both margins
+      .transform(Checkpoints.cut) // reused: totals + both margins
     val tot = cells.agg(
       coalesce(sum(col("c")), lit(0L)).cast("long").as("n"),
       coalesce(sum(when(col("t") === col("p"), col("c"))
@@ -519,7 +519,7 @@ object Classifier {
         col(predCol).cast("string").as("p"))
       .where(col("t").isNotNull && col("p").isNotNull)
       .groupBy(col("t"), col("p")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read 5x: classes (twice), tp, np, nt
     val classes = cells.select(col("t").as("label"))
       .union(cells.select(col("p"))).distinct()
     val tp = cells.where(col("t") === col("p"))
@@ -820,7 +820,7 @@ object Classifier {
         sum(d15(col("y") * col("y"))).as("syy"))
       // folds-row frame with TWO consumers (the totals rollup and the
       // (fold, lambda) grid) — cut it or the corpus aggregates twice
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val tot = fm.agg(sum(col("n")).cast("long").as("nt"),
       sum(col("s11")).as("t11"), sum(col("s12")).as("t12"),
       sum(col("s22")).as("t22"), sum(col("sy1")).as("ty1"),
@@ -940,7 +940,7 @@ object Classifier {
       Q.dsum(lit(1.0)).as("sw"), Q.dsum(col("x")).as("swx"),
       Q.dsum(col("x") * col("x")).as("swxx"),
       Q.dsum(col("y")).as("swy"),
-      Q.dsum(col("x") * col("y")).as("swxy"))).localCheckpoint()
+      Q.dsum(col("x") * col("y")).as("swxy"))).transform(Checkpoints.cut)
     var fit = ols
     for (_ <- 1 to iters) {
       val r = col("y") - (col("a") + col("b") * col("x"))
@@ -1008,7 +1008,7 @@ object Classifier {
       .agg(count(lit(1)).as("__n"))
       .withColumn("__w", lit(1.0))
       .withColumn("__m", lit(1.0))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val splits = spark.range(1).select(
         explode(array(features.map(lit(_)): _*)).as("__feature"))
       .select(col("__feature"),
@@ -1064,7 +1064,7 @@ object Classifier {
       cells = updated.crossJoin(broadcast(z))
         .withColumn("__w", col("__w") / col("__z"))
         .drop("__z")
-        .localCheckpoint()
+        .transform(Checkpoints.cut)
       val ens = cells.agg(Q.sig9(
         sum(when((col("__m") > 1.0).cast("long") =!= col("__y"),
           col("__n")).otherwise(lit(0L))).cast("double") /
@@ -1120,12 +1120,12 @@ object Classifier {
       .agg(count(lit(1)).as("__n"),
         Q.dsumStable(col("__yv"), 6).as("__sy"),
         Q.dsumStable(col("__yv") * col("__yv"), 6).as("__sy2"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read twice: f0 and the crossJoin below
     val f0 = cells.agg(Q.dsumStable(col("__sy"), 6).as("__ssy"),
         sum(col("__n")).as("__nn"))
       .select(Q.sig9(col("__ssy") / col("__nn").cast("double")).as("__f0"))
     cells = cells.crossJoin(broadcast(f0))
-      .withColumn("__f", col("__f0")).drop("__f0").localCheckpoint()
+      .withColumn("__f", col("__f0")).drop("__f0").transform(Checkpoints.cut)
     val spark = df.sparkSession
     val splits = spark.range(1).select(
         explode(array(features.map(lit(_)): _*)).as("__feature"))
@@ -1174,7 +1174,7 @@ object Classifier {
           when(binFor(col("__bf")) <= col("__bs"), col("__gle"))
             .otherwise(col("__ggt")))
         .drop("__bf", "__bs", "__bgain", "__gle", "__ggt")
-        .localCheckpoint()
+        .transform(Checkpoints.cut)
       val mse = cells.agg(
           Q.dsumStable(col("__sy2") - lit(2.0) * col("__f") * col("__sy") +
             col("__n").cast("double") * col("__f") * col("__f"), 6)

@@ -74,7 +74,7 @@ object Curriculum {
     val counts = df.filter(col(scoreCol).isNotNull)
       .groupBy(col(scoreCol).cast("double").as("s"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     // 2. count of scores strictly below each distinct score
     val cum = Prefix.below(counts, Nil, "s", Seq("c"))
       .select(col("s"), col("c"), col("below_c").as("cum_before"))

@@ -192,7 +192,7 @@ object Dedup {
     val toks = Checkpoints
       .spread(docs.select(col(idCol), col(textCol)))
       .select(col(idCol), Hashing.tokens(col(textCol)).as("tk"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val occ = toks
       .select(col(idCol), posexplode(spanWindows(col("tk"), k))
         .as(Seq("pos", "w")))
@@ -377,12 +377,10 @@ object Dedup {
     // materialize the signature frame ONCE: it feeds the band self-join
     // (twice) and both verify joins, and ObjectHashAggregate subtrees
     // are not deduplicated by ReuseExchange — without this the corpus
-    // is shingled ~4x inside one query. localCheckpoint (not persist):
-    // it is computed eagerly, is invisible to the CacheManager (so
-    // repeated runs re-measure honestly), and needs no unpersist hook.
-    // On a multi-executor cluster with a checkpoint dir, checkpoint()
-    // is the durable equivalent — same as dupClusters below.
-    val sig = minhashSig(toks, idCol, tokCol, family).localCheckpoint()
+    // is shingled ~4x inside one query. A cut (not persist): it is
+    // computed eagerly, is invisible to the CacheManager (so repeated
+    // runs re-measure honestly), and needs no unpersist hook.
+    val sig = Checkpoints.cut(minhashSig(toks, idCol, tokCol, family))
     val bands = banded(sig, idCol, family)
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band_id") === col("y.band_id") &&
@@ -414,7 +412,8 @@ object Dedup {
       threshold: Double,
       family: MinHashFamily = DefaultFamily): DataFrame = {
     import graft.queries.Q
-    val sig = minhashSig(sample, idCol, tokCol, family).localCheckpoint()
+    // read 4x: the shingle explode, both truth verify joins, banding
+    val sig = Checkpoints.cut(minhashSig(sample, idCol, tokCol, family))
     val ex = sig.select(col(idCol), explode(col("sh")).as("h"))
     val truth = ex.as("x").join(ex.as("y"),
         col("x.h") === col("y.h") &&
@@ -428,7 +427,7 @@ object Dedup {
       .select(col("a_id"), col("b_id"),
         jaccard(col("sa"), col("sb")).as("jacc"))
       .where(col("jacc") >= threshold)
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read twice: n_truth and the tp semi-join
     val bands = banded(sig, idCol, family)
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band_id") === col("y.band_id") &&
@@ -436,7 +435,7 @@ object Dedup {
           col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("a_id"), col(s"y.$idCol").as("b_id"))
       .distinct()
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read twice: n_cand and tp
     val tp = cand.join(truth.select(col("a_id"), col("b_id")),
       Seq("a_id", "b_id"), "left_semi")
     sample.agg(count(lit(1)).cast("long").as("n_sample"))
@@ -527,7 +526,7 @@ object Dedup {
         s"MinHash family than (${family.numHashes}, ${family.numBands})")
     // batch-sized, but still referenced by banding + both verify joins:
     // materialize once (same rationale as minhashNearDupsFromTokens)
-    val newSig = minhashSig(newToks, idCol, tokCol, family).localCheckpoint()
+    val newSig = Checkpoints.cut(minhashSig(newToks, idCol, tokCol, family))
     val newBands = banded(newSig, idCol, family)
     val allBands = newBands.unionByName(banded(stored, idCol, family))
     // candidate pairs are LSH-bounded; materialize because they feed the
@@ -538,7 +537,7 @@ object Dedup {
         col(s"x.$idCol") =!= col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("a_id"), col(s"y.$idCol").as("b_id"))
       .distinct()
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read twice: the b-id semi-join, verify
     // shingle sets for the b side: batch docs carry them in-flight in
     // newSig; stored candidates are re-shingled from corpusToks after
     // the semi-join prunes it to candidate ids
@@ -634,7 +633,7 @@ object Dedup {
     // signature append WRITES it — break the self-reference first.
     val kept = batch
       .join(drops, batch(idCol) === drops("a_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     keptSink(kept)
     appendSignatures(kept, idCol, tokCol, sigPath, family)
     if (Layout.dataFiles(spark, sigPath).size > compactAfterFiles)
@@ -662,20 +661,17 @@ object Dedup {
     * diameter is unknown or large (transitive chains, link graphs).
     */
   def dupClustersStar(pairs: DataFrame, aCol: String = "a_id",
-                      bCol: String = "b_id", maxIter: Int = 50,
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      bCol: String = "b_id", maxIter: Int = 50): DataFrame = {
     // nodes come from the UNFILTERED pairs: a doc appearing only in a
     // self-pair is a singleton cluster, not absent (same contract as
     // dupClusters)
     val allNodes = Checkpoints.cut(
       pairs.select(col(aCol).as("node"))
-        .unionByName(pairs.select(col(bCol).as("node"))).distinct(),
-      checkpointDir)
+        .unionByName(pairs.select(col(bCol).as("node"))).distinct())
     var edges = Checkpoints.cut(
       pairs.select(col(aCol).as("x"), col(bCol).as("y"))
         .filter(col("x") =!= col("y"))
-        .distinct(),
-      checkpointDir)
+        .distinct())
 
     // large-star: processed from the SMALLER endpoint u of every edge,
     // each larger neighbor re-links to min(neighborhood(u) + u)
@@ -706,7 +702,7 @@ object Dedup {
     var converged = false
     var i = 0
     while (i < maxIter && !converged) {
-      val next = Checkpoints.cut(smallStar(largeStar(edges)), checkpointDir)
+      val next = Checkpoints.cut(smallStar(largeStar(edges)))
       // both sides are distinct sets: equal counts + empty one-sided
       // difference is full set equality at half the anti-join cost
       converged = next.count() == edges.count() &&
@@ -735,14 +731,11 @@ object Dedup {
     * Iterative min-label propagation: every round each node takes the min
     * of its own and its neighbors' labels; converges in diameter rounds
     * (dup clusters are shallow — chains of mutated copies — so this is
-    * small). Lineage is truncated per round ([[Checkpoints.cut]]):
-    * executor-local by default, durable `checkpoint()` under
-    * `checkpointDir` on a real cluster. The per-round convergence count
-    * is the standard iterative-algorithm driver check, not a data
-    * collect. */
+    * small). Lineage is truncated per round ([[Checkpoints.cut]]).
+    * The per-round convergence count is the standard
+    * iterative-algorithm driver check, not a data collect. */
   def dupClusters(pairs: DataFrame, aCol: String = "a_id",
-                  bCol: String = "b_id", maxIter: Int = 20,
-                  checkpointDir: Option[String] = None): DataFrame = {
+                  bCol: String = "b_id", maxIter: Int = 20): DataFrame = {
     val edges = pairs.select(col(aCol).as("x"), col(bCol).as("y"))
     // checkpoint the edge set BEFORE the loop: it is joined every round,
     // and without this the whole upstream pair-generation pipeline
@@ -750,16 +743,14 @@ object Dedup {
     val sym = Checkpoints.cut(
       edges
         .unionByName(edges.select(col("y").as("x"), col("x").as("y")))
-        .distinct(),
-      checkpointDir)
+        .distinct())
     // start from round 1's state directly: with identity labels the
     // first round computes least(self, min neighbor) — one grouped min,
     // no join. Saves a full join+agg round every query.
     var labels = Checkpoints.cut(
       sym.groupBy(col("x").as("node"))
         .agg(min(col("y")).as("mn"))
-        .select(col("node"), least(col("node"), col("mn")).as("cluster")),
-      checkpointDir)
+        .select(col("node"), least(col("node"), col("mn")).as("cluster")))
     var converged = false
     var i = 0
     while (i < maxIter && !converged) {
@@ -774,8 +765,7 @@ object Dedup {
             least(col("l.cluster"), coalesce(col("nc"), col("l.cluster")))
               .as("cluster"),
             (col("nc").isNotNull && col("nc") < col("l.cluster"))
-              .as("changed")),
-        checkpointDir)
+              .as("changed")))
       converged = updated.filter(col("changed")).isEmpty
       labels = updated.select(col("node"), col("cluster"))
       i += 1

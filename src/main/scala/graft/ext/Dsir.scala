@@ -51,30 +51,29 @@ object Dsir {
   /** Per-bucket smoothed log importance ratio table:
     * (bucket, lr) with lr = sig9(ln((ct+1)(Nq+B) / ((cq+1)(Nt+B)))) —
     * ct/cq = target/raw occurrence counts of the bucket, Nt/Nq their
-    * totals. B rows; built from two aggregates over the exploded
-    * feature stream plus two one-row total frames (broadcast). */
+    * totals. B rows; built from one aggregate over both exploded
+    * feature streams plus two window totals over its rows. */
   def logRatios(targetFeats: DataFrame, rawFeats: DataFrame,
                 buckets: Int): DataFrame = {
-    // the B-row count frames are checkpointed: the totals are derived
-    // from THEM (sum over B rows), not from a second global aggregate
-    // whose plan would re-run the full tokenize+explode corpus scan —
-    // one scan per corpus, guaranteed, not left to exchange reuse.
-    // LAZY (the percentRank convention): eager serialized the two
-    // corpus featurizes back-to-back at plan-construction time; lazy
-    // lets them overlap inside the consumer's job.
-    val tc = targetFeats.groupBy(col("b")).agg(count(lit(1)).as("ct"))
-      .localCheckpoint(eager = false)
-    val qc = rawFeats.groupBy(col("b")).agg(count(lit(1)).as("cq"))
-      .localCheckpoint(eager = false)
-    val nt = tc.agg(sum(col("ct")).as("nt"))
-    val nq = qc.agg(sum(col("cq")).as("nq"))
+    // ONE (b)-keyed count aggregate over both corpora's features, and
+    // the totals are window sums over its <= B rows: each corpus is
+    // featurized once, with no lineage cut (a separate global
+    // aggregate would re-run the full tokenize+explode scan). nt is
+    // NULL when the target has no features, like a sum over no rows.
+    val counts = targetFeats.select(col("b"), lit(1L).as("t"))
+      .unionAll(rawFeats.select(col("b"), lit(0L).as("t")))
+      .groupBy(col("b"))
+      .agg(sum(col("t")).as("ct"), sum(lit(1L) - col("t")).as("cq"))
+    val nt = sum(col("ct")).over()
     // raw-side buckets drive the table: a bucket never seen in the raw
     // corpus can never be referenced by a scored document
-    qc.join(tc, Seq("b"), "left")
-      .crossJoin(broadcast(nt)).crossJoin(broadcast(nq))
+    counts
+      .select(col("b"), col("ct"), col("cq"),
+        when(nt > 0L, nt).as("nt"), sum(col("cq")).over().as("nq"))
+      .where(col("cq") > 0L)
       .select(col("b"),
         Q.sig9(log(
-          ((coalesce(col("ct"), lit(0L)) + 1L).cast("double") *
+          ((col("ct") + 1L).cast("double") *
             (col("nq") + buckets).cast("double")) /
           ((col("cq") + 1L).cast("double") *
             (col("nt") + buckets).cast("double"))))

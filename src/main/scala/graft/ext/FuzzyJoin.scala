@@ -67,17 +67,16 @@ object FuzzyJoin {
     // prefix generation, verify fetch) and the df aggregate twice (one
     // prefix join per side): materialize both once so the corpus is
     // scanned and token-hashed exactly once per side — the
-    // Dedup.minhashNearDups localCheckpoint convention (durable
-    // checkpoint dir is the multi-executor equivalent).
-    val l = hashSets(left, leftId, leftToks).localCheckpoint()
-    val r = hashSets(right, rightId, rightToks).localCheckpoint()
+    // Dedup.minhashNearDups convention.
+    val l = hashSets(left, leftId, leftToks).transform(Checkpoints.cut)
+    val r = hashSets(right, rightId, rightToks).transform(Checkpoints.cut)
 
     // Global document frequency of every token hash across BOTH sides:
     // the shared total order that makes the two prefixes comparable.
     val dfc = l.select(explode(col("hs")).as("h"))
       .unionAll(r.select(explode(col("hs")).as("h")))
       .groupBy("h").agg(count(lit(1)).as("df"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // one prefix join per side
 
     val lp = prefixTokens(l, dfc, threshold)
       .select(col("id").as("left_id"), col("n").as("ln"), col("h"))
@@ -184,12 +183,13 @@ object FuzzyJoin {
       threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val l = hashSets(left, leftId, leftToks).localCheckpoint()
-    val r = hashSets(right, rightId, rightToks).localCheckpoint()
-    // document frequency over the INDEX (right) side only
+    // each side is read by its prefix pass and the verify fetch
+    val l = hashSets(left, leftId, leftToks).transform(Checkpoints.cut)
+    val r = hashSets(right, rightId, rightToks).transform(Checkpoints.cut)
+    // document frequency over the INDEX (right) side only; read once,
+    // by the prefix join, so it is not cut
     val dfc = r.select(explode(col("hs")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("df"))
-      .localCheckpoint()
     // A's prefix under the (df_right, h) order; df 0 for unseen tokens
     val p = (col("n") - ceil(col("n") * threshold) + 1).cast("int")
     val lp = l.select(col("id"), col("n"), explode(col("hs")).as("h"))

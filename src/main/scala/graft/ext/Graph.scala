@@ -18,12 +18,11 @@ import graft.queries.Q
   * (node count, dangling mass). The rank frame is node-sized and
   * NEVER collected: iterations chain DataFrame-to-DataFrame with a
   * lineage cut per round to keep the plan bounded (lineage would
-  * otherwise grow linearly in iterations). Every operator takes a
-  * `checkpointDir: Option[String]` routed through [[Checkpoints.cut]]:
-  * None = executor-local `localCheckpoint` (single-JVM sessions);
-  * a durable dir (HDFS/S3) is the cluster posture — an executor loss
-  * replays the round from storage instead of restarting the whole
-  * iteration chain.
+  * otherwise grow linearly in iterations). Every cut goes through
+  * [[Checkpoints.cut]]: durable when the session has
+  * `spark.checkpoint.dir` (HDFS/S3 — the cluster posture, an executor
+  * loss replays the round from storage instead of failing the whole
+  * iteration chain), executor-local `localCheckpoint` otherwise.
   *
   * Numeric design: the power iteration runs on N-SCALED mass
   * `R = N·rank` (mean 1.0 at any graph size), and only the final
@@ -58,6 +57,7 @@ import graft.queries.Q
   * sum; the update (1−d) + d·(S + Dm/N) is a fixed IEEE expression.
   */
 object Graph {
+  import Checkpoints.cut
 
   /** Decimal-round scale for the per-destination mass sums — see the
     * determinism contract above. */
@@ -135,22 +135,14 @@ object Graph {
     * @param nodes single-column frame of ALL node ids (nodes with no
     *              out-edges hold + redistribute rank as dangling mass;
     *              nodes absent from `edges` entirely still rank)
-    * @param checkpointDir durable checkpoint directory for the
-    *              per-iteration lineage cuts ([[Checkpoints.cut]]) —
-    *              None = executor-local `localCheckpoint` (single-JVM
-    *              sessions); set it on a real cluster so an executor
-    *              loss replays from storage instead of restarting the
-    *              whole iteration chain
     * @return (node, rank) — sig9'd doubles summing to ~1
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, nodes: DataFrame, nodeCol: String,
-      iters: Int, damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1,
       s"damping must be in (0, 1), got $damping")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val n = cut(nodes.select(col(nodeCol).as("node")).distinct())
     // checkpointed frames carry no size statistics, so Catalyst will
     // NEVER auto-broadcast them — left alone, every iteration
@@ -232,20 +224,18 @@ object Graph {
     * round. Seeds outside `nodes` are ignored (inner-joined away);
     * the seed set must be nonempty.
     *
-    * Same size-aware join strategy, integer-weight precondition and
-    * `checkpointDir` durability switch as [[pageRank]].
+    * Same size-aware join strategy and integer-weight precondition as
+    * [[pageRank]].
     *
     * @return (node, rank) — sig9'd doubles summing to ~1, zero for
     *         nodes unreachable from the seeds */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, wCol: String, nodes: DataFrame, nodeCol: String,
       seeds: DataFrame, seedCol: String, iters: Int,
-      damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1,
       s"damping must be in (0, 1), got $damping")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val n = cut(nodes.select(col(nodeCol).as("node")).distinct())
     val sd = cut(seeds.select(col(seedCol).as("node")).distinct()
       .join(n, Seq("node")))
@@ -323,9 +313,9 @@ object Graph {
     * products) hub mass concentrates on the source side and authority
     * mass on the target side.
     *
-    * Same scale shape, size-aware join strategy, integer-weight
-    * precondition and `checkpointDir` durability switch as
-    * [[pageRank]]; the two normalization totals are O(1)-row broadcast
+    * Same scale shape, size-aware join strategy and integer-weight
+    * precondition as [[pageRank]]; the two normalization totals are
+    * O(1)-row broadcast
     * scalars. Graphs with no edges yield all-zero scores (guarded —
     * mean-1 rescale of a zero vector would divide by zero).
     *
@@ -334,9 +324,8 @@ object Graph {
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, nodes: DataFrame, nodeCol: String,
-      iters: Int, checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val n = cut(nodes.select(col(nodeCol).as("node")).distinct())
     val (nNodes, nBytes) = measure(n)
     val broadcastable =
@@ -374,7 +363,7 @@ object Graph {
       // next half-step's node-side build; the final join's two sides
       // materialize in separate stages), so the eager cut was a pure
       // serial job barrier per half-step — 10 of them at 5 iterations
-      Checkpoints.cutLazy(res, checkpointDir)
+      Checkpoints.cutLazy(res)
     }
 
     var hubs = cut(n.withColumn("hub", lit(1.0)))
@@ -406,26 +395,21 @@ object Graph {
     *
     * @param edges undirected edges as (aCol, bCol) pairs — any
     *              orientation/duplication; self-loops dropped
-    * @param checkpointDir durable lineage-cut directory (see
-    *              [[pageRank]]); None = localCheckpoint
     * @return (node, n_tri) for nodes in >= 1 triangle
     */
-  def triangleCounts(edges: DataFrame, aCol: String, bCol: String,
-      checkpointDir: Option[String] = None): DataFrame =
+  def triangleCounts(edges: DataFrame, aCol: String,
+      bCol: String): DataFrame =
     triangleCountsCanonical(
       edges.select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
         .where(col("a") =!= col("b"))
-        .distinct(),
-      checkpointDir)
+        .distinct())
 
   /** [[triangleCounts]] over edges ALREADY in canonical form
     * ((a, b) with a < b, distinct, no self-loops) — callers that have
     * canonicalized for their own degree pass ([[clusteringCoef]])
     * skip the redundant second least/greatest + distinct shuffle. */
-  private[ext] def triangleCountsCanonical(undIn: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
+  private[ext] def triangleCountsCanonical(undIn: DataFrame): DataFrame = {
     val und = cut(undIn)
     // size-aware join strategy (the pageRank lesson): checkpointed
     // frames have no stats, so hint explicitly — the WEDGE set is the
@@ -533,11 +517,9 @@ object Graph {
     */
   def linkPredict(edges: DataFrame, aCol: String, bCol: String,
       wCol: String, k: Int,
-      maxPopularity: Int = Int.MaxValue,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxPopularity: Int = Int.MaxValue): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxPopularity >= 1, s"maxPopularity must be >= 1")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val und = cut(edges
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"),
@@ -597,10 +579,8 @@ object Graph {
     * @return (node, dist) — one row per node within k hops; nodes
     *         unreachable in k hops are absent */
   def khopDistances(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, k: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      seeds: DataFrame, seedCol: String, k: Int): DataFrame = {
     require(k >= 0, s"k must be >= 0, got $k")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val spark = edges.sparkSession
     val e = cut(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -656,10 +636,9 @@ object Graph {
     * @return surviving (node, degree) after the peel — degree within
     *         the surviving subgraph; nodes peeled out are absent */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val spark = edges.sparkSession
     var e = cut(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -714,10 +693,9 @@ object Graph {
     * @return (node, dist) — min total weight over paths of <= rounds
     *         hops from any seed; unreached nodes are absent */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
-      wCol: String, seeds: DataFrame, seedCol: String, rounds: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      wCol: String, seeds: DataFrame, seedCol: String,
+      rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val spark = edges.sparkSession
     val e = cut(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
@@ -782,9 +760,8 @@ object Graph {
     *
     * @return (node, community) after `rounds` synchronous updates */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val spark = edges.sparkSession
     val e = cut(edges
       .select(col(srcCol).cast("long").as("src"),
@@ -1040,10 +1017,9 @@ object Graph {
     * @return one row per radius 0..rounds:
     *         (r, n_pairs, n_nodes, avg_ball) */
   def neighborhoodExact(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 0 && rounds <= 16,
       s"rounds must be in [0, 16], got $rounds")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val e = cut(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
@@ -1071,7 +1047,7 @@ object Graph {
     // frame feeds exactly one count — no cut at all, so its pair
     // frame is never materialized to executor storage.
     var reach = Checkpoints.spreadCut(
-      nodes.select(col("v"), col("v").as("u")), checkpointDir)
+      nodes.select(col("v"), col("v").as("u")))
     var out = row(0, reach)
     (1 to rounds).foreach { r =>
       val nxt = reach
@@ -1079,7 +1055,7 @@ object Graph {
           col("dst").as("u"))
         .unionByName(reach).distinct()
       if (r < rounds) {
-        reach = Checkpoints.spreadCut(nxt, checkpointDir)
+        reach = Checkpoints.spreadCut(nxt)
         out = out.unionByName(row(r, reach))
       } else out = out.unionByName(row(r, nxt))
     }
@@ -1108,11 +1084,9 @@ object Graph {
     * @return one row per radius 0..rounds:
     *         (r, n_nodes, nf_est, avg_ball_est) */
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, p: Int = 8, salt: String = "hb",
-      checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int, p: Int = 8, salt: String = "hb"): DataFrame = {
     require(rounds >= 0 && rounds <= 64,
       s"rounds must be in [0, 64], got $rounds")
-    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, checkpointDir)
     val e = cut(edges
       .select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
       .where(col("esrc").isNotNull && col("edst").isNotNull)
@@ -1152,7 +1126,7 @@ object Graph {
     // at sf0.1 before the spread).
     var regs = Checkpoints.spreadCut(Sketch.hllRegisters(
       nodes.select(col("node"), col("node").as("k")), "k", p, salt,
-      sliceCols = Seq("node")), checkpointDir)
+      sliceCols = Seq("node")))
     var out = row(0, regs)
     (1 to rounds).foreach { r =>
       val pulled = eSide(e)
@@ -1167,7 +1141,7 @@ object Graph {
       // register table of the run purely as a serial job barrier —
       // skip it, exactly like [[neighborhoodExact]]'s last round
       if (r < rounds) {
-        regs = Checkpoints.spreadCut(merged, checkpointDir)
+        regs = Checkpoints.spreadCut(merged)
         out = out.unionByName(row(r, regs))
       } else out = out.unionByName(row(r, merged))
     }

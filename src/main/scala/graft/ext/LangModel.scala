@@ -167,9 +167,8 @@ object LangModel {
     // the counts frame feeds BOTH the top-V cut and the grand total;
     // unmaterialized, each consumer would re-run the full corpus scan
     // (vocab-sized checkpoint vs a second 100 TB pass — same contract
-    // as the ivfIndex artifact; on a cluster use checkpoint() with a
-    // reliable dir)
-    val counts = unigramCounts(toks, tokCol).localCheckpoint()
+    // as the ivfIndex artifact)
+    val counts = unigramCounts(toks, tokCol).transform(Checkpoints.cut)
     val total = counts.agg(sum(col("c")).cast("long").as("n_total"))
     val top = counts.orderBy(col("c").desc, col("tok").asc).limit(topV)
     val w = org.apache.spark.sql.expressions.Window

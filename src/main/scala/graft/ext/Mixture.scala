@@ -49,14 +49,14 @@ object Mixture {
     */
   def ipfRake(df: DataFrame, target: DataFrame, rowCol: String,
       colCol: String, rounds: Int = 2, sumScale: Int = 6): DataFrame = {
-    // localCheckpoint the bounded frames: each IPF half-step references
-    // its input twice (marginal sums + the base), so an un-checkpointed
-    // lineage would re-run the corpus aggregate 4^rounds times — the
-    // checkpoint pins "one corpus scan per side", and per-sweep
-    // checkpoints below keep the iteration's plan depth linear
+    // cut the bounded frames: each IPF half-step references its input
+    // twice (marginal sums + the base), so an uncut lineage would
+    // re-run the corpus aggregate 4^rounds times — the cut pins "one
+    // corpus scan per side", and per-sweep cuts below keep the
+    // iteration's plan depth linear
     val cells = df.groupBy(col(rowCol), col(colCol))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     def tn(dim: String): DataFrame =
       target.groupBy(col(dim)).agg(count(lit(1)).as("tn"))
         .select(col(dim).as("k"), col("tn"))
@@ -90,8 +90,9 @@ object Mixture {
             * col("tn").cast("double")
             / col("t_total").cast("double")).as(out))
     }
-    val rowTm = targetMass(rowTn, rowCol, "tm_r").localCheckpoint()
-    val colTm = targetMass(colTn, colCol, "tm_c").localCheckpoint()
+    // each read by every round's half-step
+    val rowTm = targetMass(rowTn, rowCol, "tm_r").transform(Checkpoints.cut)
+    val colTm = targetMass(colTn, colCol, "tm_c").transform(Checkpoints.cut)
 
     def halfStep(cur: DataFrame, dim: String, tm: DataFrame,
         tmCol: String): DataFrame = {
@@ -115,7 +116,7 @@ object Mixture {
     var cur = cells.withColumn("w", lit(1.0))
     for (_ <- 1 to rounds) {
       cur = halfStep(cur, rowCol, rowTm, "tm_r")
-      cur = halfStep(cur, colCol, colTm, "tm_c").localCheckpoint()
+      cur = halfStep(cur, colCol, colTm, "tm_c").transform(Checkpoints.cut)
     }
     cur.select(col(rowCol), col(colCol), col("n"), col("w").as("weight"),
       Q.sig9(col("n").cast("double") * col("w")).as("mass"))

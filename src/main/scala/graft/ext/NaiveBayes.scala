@@ -129,7 +129,7 @@ object NaiveBayes {
     // read many times below (doc counts, token explode, scoring):
     // materialize the folded corpus once (the FuzzyJoin convention)
     val base = docs.select(col(idCol).as("id"), col(labelCol).as("label"),
-      col(toksCol).as("tk"), foldOf.as("fold")).localCheckpoint()
+      col(toksCol).as("tk"), foldOf.as("fold")).transform(Checkpoints.cut)
     val tx = base.select(col("label"), col("fold"), explode(col("tk")).as("t"))
 
     val folds = spark_(base).range(0, k).select(col("id").cast("int").as("fold"))

@@ -413,7 +413,7 @@ object Profile {
     val y = col(metricCol).cast("double")
     val x = col(covCol).cast("double")
     val base = units.select(col(groupCol).as("g"), y.as("y"), x.as("x"))
-      .localCheckpoint() // pooled stats + two moment passes
+      .transform(Checkpoints.cut) // pooled stats + two moment passes
     val means = base.agg(count(lit(1)).as("n"),
       Q.dsum(col("x")).as("sx"), Q.dsum(col("y")).as("sy"))
       .select(col("n"),
@@ -743,18 +743,12 @@ object Profile {
   def percentRank(df: DataFrame, keyCols: Seq[String],
       valCol: String): DataFrame = {
     val keys = keyCols.map(col)
-    // LAZY checkpoint: the distinct-value frame is still materialized
-    // once and shared by the prefix sum's branches, but it computes
-    // INSIDE the consumer's job instead of serially at plan-construction
-    // time — operators that build several percentRank tables
-    // (spearman's two, a battery's many) overlap those builds instead
-    // of paying them back-to-back before the job starts. The frame is
-    // deterministic (hash aggregate of exact counts), so a racy
-    // partition recompute is benign.
+    // eager: the prefix sum's group bounds and its binned pass both
+    // read the distinct-value frame (a lazy cut computed it twice)
     val counts = df.filter(col(valCol).isNotNull)
       .groupBy(keys :+ col(valCol).cast("double").as("s"): _*)
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .transform(Checkpoints.cut)
     Prefix.below(counts, keyCols, "s", Seq("c"))
       .withColumn("pct", when(col("tot_c") > 1,
         col("below_c").cast("double") / (col("tot_c") - 1).cast("double")))
@@ -1110,7 +1104,7 @@ object Profile {
         .select(col("s"), lit(ac).as("ac"), lit(1L - ac).as("bc"))
     side(a, 1L).unionAll(side(b, 0L)).groupBy(col("s"))
       .agg(sum(col("ac")).as("ac"), sum(col("bc")).as("bc"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read by both Prefix.below passes
   }
 
   /** Exact two-sample Kolmogorov–Smirnov distance — the
@@ -1400,7 +1394,7 @@ object Profile {
     val counts = df.filter(col(valCol).isNotNull)
       .groupBy(keys :+ col(valCol).cast("long").as("s"): _*)
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read by both Prefix.below passes
       .withColumn("sc", col("s").cast(dec) * col("c").cast(dec))
     Prefix.below(counts, keyCols, "s", Seq("c", "sc"))
       .withColumn("term", col("c").cast(dec) *
@@ -1515,7 +1509,7 @@ object Profile {
     // percentRank builds would (the group key is the column tag), but
     // the input is scanned once instead of twice and the two binned
     // prefix passes collapse into one (guide §2.4). The combined rank
-    // table is cut lazily and served to both tag joins.
+    // table is cut and served to both tag joins.
     val unpiv = rows.select(explode(array(
         struct(lit(0).as("__w"), col("x").as("v")),
         struct(lit(1).as("__w"), col("y").as("v")))).as("e"))
@@ -1523,7 +1517,7 @@ object Profile {
     val pr = percentRank(unpiv, Seq("__w"), "v")
       .select(col("__w"), col("s"),
         (lit(2L) * col("n_below") + col("cnt") + lit(1L)).as("r2"))
-      .localCheckpoint(eager = false)
+      .transform(Checkpoints.cut)
     def r2(w: Int, vc: String, out: String) =
       pr.where(col("__w") === w)
         .select(col("s").as(s"__$vc"), col("r2").as(out))
@@ -1583,7 +1577,7 @@ object Profile {
       .select(col("s"),
         (lit(2L) * col("n_below") + col("cnt") + lit(1L)).as("r2"),
         col("cnt"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read twice: the tie sum, the rank join
     val cntDec = col("cnt").cast(dec)
     val ties = pr.agg(
       sum(cntDec * cntDec * cntDec - cntDec).as("tie_t"),
@@ -1738,7 +1732,7 @@ object Profile {
         col(colCol).cast("string").as("c"))
       .where(col("r").isNotNull && col("c").isNotNull)
       .groupBy(col("r"), col("c")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read 4x: both margins, total, terms
     val rm = cells.groupBy(col("r")).agg(sum(col("cnt")).as("rn"))
     val cm = cells.groupBy(col("c")).agg(sum(col("cnt")).as("cn"))
     val tot = cells.agg(sum(col("cnt")).as("n"))
@@ -1843,7 +1837,7 @@ object Profile {
         col(valCol).isNotNull)
       .groupBy(col(blockCol).as("b"), col(treatCol).as("tr"))
       .agg(Q.dsum(col(valCol).cast("double")).as("cv"))
-      .localCheckpoint() // reused: k scalar + the block pack
+      .transform(Checkpoints.cut) // reused: k scalar + the block pack
     val kRow = cell.agg(countDistinct(col("tr")).as("k"))
     val packed = cell.groupBy(col("b"))
       .agg(collect_list(struct(col("tr"), col("cv"))).as("arr"))
@@ -1862,7 +1856,7 @@ object Profile {
       .agg(count(lit(1)).as("n_blocks"),
         sum(col("rho")).cast(dec0).as("r2"),
         sum(col("rho").cast(dec0) * col("rho")).as("a4c"))
-      .localCheckpoint() // reused: scalar pass + output rows
+      .transform(Checkpoints.cut) // reused: scalar pass + output rows
     val stat = perTr.agg(
         count(lit(1)).as("kk"), max(col("n_blocks")).as("n"),
         sum(col("a4c")).as("a4"),
@@ -2041,7 +2035,7 @@ object Profile {
         sum(col("f")).cast("long").as("x"))
       .withColumn("raw_rate", Q.sig9(
         col("x").cast(DoubleType) / col("n").cast(DoubleType)))
-      .localCheckpoint() // moments + the shrink pass reuse it
+      .transform(Checkpoints.cut) // moments + the shrink pass reuse it
     val mom = items.agg(
       count(lit(1)).cast("long").as("n_items"),
       Q.dsum(col("raw_rate")).as("s1"),
@@ -2149,7 +2143,7 @@ object Profile {
       s"quantilePerMille must be in [500, 1000), got $quantilePerMille")
     val keys = keyCols.map(col)
     val pr = percentRank(df, keyCols, valCol)
-      .localCheckpoint() // totals, threshold and tail fold reuse it
+      .transform(Checkpoints.cut) // totals, threshold and tail fold reuse it
     val totals = pr.groupBy(keys: _*)
       .agg(max(col("n_below") + col("cnt")).as("n"))
       .withColumn("hi", greatest(lit(1L),
@@ -2204,7 +2198,7 @@ object Profile {
       .where(col("b").isNotNull && col("t").isNotNull &&
         col(flagCol).isNotNull)
       .groupBy(col("b"), col("t")).agg(max(col("x")).as("x"))
-      .localCheckpoint() // k, completeness and both totals reuse it
+      .transform(Checkpoints.cut) // k, completeness and both totals reuse it
     val k = cells.select(col("t")).distinct().count()
     val blocks = cells.groupBy(col("b"))
       .agg(count(lit(1)).as("kb"), sum(col("x")).as("bi"))
@@ -2359,7 +2353,7 @@ object Profile {
       .withColumn("ok", col("n1_s") > 0 && col("n1_s") < col("n_s"))
       .withColumn("e", when(col("ok"), Q.sig9(
         col("n1_s").cast(DoubleType) / col("n_s").cast(DoubleType))))
-      .localCheckpoint() // reused: row-pass broadcast + strat fold
+      .transform(Checkpoints.cut) // reused: row-pass broadcast + strat fold
     val tot = strata.agg(
       coalesce(sum(when(col("ok"), col("n_s"))), lit(0L)).as("n_used"),
       coalesce(sum(when(!col("ok"), col("n_s"))), lit(0L))
@@ -2438,7 +2432,7 @@ object Profile {
         col(valCol).cast("double").as("s"))
       .where(col("g").isNotNull && col("s").isNotNull)
       .groupBy(col("g"), col("s")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // grid, totals and global CDF all reuse it
+      .transform(Checkpoints.cut) // grid, totals and global CDF all reuse it
     val grid = cnt.select(col("g")).distinct()
       .crossJoin(cnt.select(col("s")).distinct()) // G×V, G bounded
       .join(cnt, Seq("g", "s"), "left_outer")

@@ -75,7 +75,7 @@ object Recommend {
     // distinct scan (guide §5: cheap lineage cut for a 3x-read frame)
     val itemN = b.groupBy("__i").agg(count(lit(1)).as("__n"))
       .where(col("__n") >= minSupport)
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val itemSide: DataFrame => DataFrame =
       if (Graph.measure(itemN)._2 <= Graph.broadcastBudget(
           baskets.sparkSession)) (df: DataFrame) => broadcast(df)
@@ -96,7 +96,9 @@ object Recommend {
     }.getOrElse {
       val ord = b.groupBy("__b")
         .agg(array_sort(collect_list(col("__i"))).as("ps"))
-      Checkpoints.spread(ord.localCheckpoint())
+      // cut first, so the fan-out below runs at cluster width instead
+      // of the AQE-coalesced partitions of the groupBy (guide §2.6)
+      Checkpoints.spread(Checkpoints.cut(ord))
         .select(col("__b"), explode(col("ps")).as("a"), col("ps"))
         .select(col("__b"), col("a"), explode(col("ps")).as("b"))
         .where(col("a") < col("b"))
@@ -115,24 +117,22 @@ object Recommend {
     val cos = graft.queries.Q.sig9(
       col("nab").cast("double") /
         sqrt(col("na").cast("double") * col("nb").cast("double")))
-    // cosine computed ONCE per distinct pair, and the whole pair-count
-    // subtree cut before the symmetrizing union — without the cut the
-    // union's two branches each re-run the count aggregate and its
-    // joins (two identical Exchanges in the plan, ReuseExchange does
-    // not collapse them across the differing projections); lazy, so
-    // the first materialization runs inside the consumer's job
-    val pairs = nab
+    // cosine computed ONCE per distinct pair, and both directions come
+    // out of ONE explode — the pair-count subtree has a single
+    // consumer, so it runs once with no lineage cut (a symmetrizing
+    // union would read it twice)
+    val sym = nab
       .join(itemSide(itemN.select(col("__i").as("ia"),
         col("__n").as("na"))), "ia")
       .join(itemSide(itemN.select(col("__i").as("ib"),
         col("__n").as("nb"))), "ib")
       .withColumn("cosine", cos)
-      .localCheckpoint(eager = false)
-    val sym = pairs
-      .select(col("ia").as("item"), col("ib").as("neighbor"),
+      .select(explode(array(
+          struct(col("ia").as("item"), col("ib").as("neighbor")),
+          struct(col("ib").as("item"), col("ia").as("neighbor")))).as("e"),
         col("nab"), col("cosine"))
-      .unionByName(pairs.select(col("ib").as("item"),
-        col("ia").as("neighbor"), col("nab"), col("cosine")))
+      .select(col("e.item").as("item"), col("e.neighbor").as("neighbor"),
+        col("nab"), col("cosine"))
 
     val w = Window.partitionBy(col("item"))
       .orderBy(col("cosine").desc, col("neighbor").asc)

@@ -394,7 +394,7 @@ object Sampling {
       .where(col("s").isNotNull && col("tk").isNotNull)
     val g = d.groupBy(col("s")).agg(sum(col("tk")).as("gtk"))
       .withColumn("o", -col("s")) // ascending o == descending score
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read by both Prefix.below passes
     val cum = Prefix.below(g, Nil, "o", Seq("gtk"))
       .select(col("s"), col("gtk"), col("below_gtk").as("before"))
     val fullScores = cum.where(col("before") + col("gtk") <= budget)

@@ -135,10 +135,7 @@ object Similarity {
     * a hot-key join and depresses recall. The hash draw is just as
     * reproducible (pure function of ids) without the correlation;
     * selection is a TakeOrderedAndProject top-k, never a full sort.
-    *
-    * `checkpointDir` switches the per-iteration and index
-    * materialization to durable `checkpoint()` ([[Checkpoints.cut]]) —
-    * pass a reachable HDFS/S3 dir on a real cluster. */
+    * The per-iteration and index cuts go through [[Checkpoints.cut]]. */
   /** Nearest-centroid assignment of a (vid, vv) frame against a
     * broadcast (cid, cv) centroid table — the shared kernel of index
     * build and incremental extension. The argmax is a struct-max hash
@@ -183,7 +180,6 @@ object Similarity {
 
   def ivfIndex(vectors: DataFrame, k: Int, idCol: String = "vec_id",
                vecCol: String = "embedding", iters: Int = 1,
-               checkpointDir: Option[String] = None,
                trainFrac: Double = 1.0): (DataFrame, DataFrame) = {
     require(iters >= 1, "iters must be >= 1")
     val v = vectors.select(col(idCol).as("vid"), col(vecCol).as("vv"))
@@ -212,8 +208,7 @@ object Similarity {
           .agg(array_sort(collect_list(struct(col("dim"), col("m"))))
             .as("dm"))
           .select(col("cid"),
-            transform(col("dm"), s => s.getField("m")).as("cv")),
-        checkpointDir)
+            transform(col("dm"), s => s.getField("m")).as("cv")))
     }
     // An index IS a materialized artifact: the centroid table above is
     // already cut; materialize the assignment too, or every consumer
@@ -223,8 +218,7 @@ object Similarity {
     // centroids — train-on-sample never drops vectors from the index
     val index = Checkpoints.cut(
       assignToCentroids(v, cents.select(col("cid"), col("cv")))
-        .select(col("vid").as(idCol), col("cid").as("centroid_id")),
-      checkpointDir)
+        .select(col("vid").as(idCol), col("cid").as("centroid_id")))
     (centOut, index)
   }
 
@@ -322,10 +316,8 @@ object Similarity {
     */
   def semDedup(vectors: DataFrame, k: Int, threshold: Double,
                idCol: String = "vec_id",
-               vecCol: String = "embedding", iters: Int = 1,
-               checkpointDir: Option[String] = None): DataFrame = {
-    val (cents, index) = ivfIndex(vectors, k, idCol, vecCol, iters,
-      checkpointDir)
+               vecCol: String = "embedding", iters: Int = 1): DataFrame = {
+    val (cents, index) = ivfIndex(vectors, k, idCol, vecCol, iters)
     val v = vectors.select(col(idCol).as("vid"), col(vecCol).as("vv"),
       normSq(col(vecCol)).as("nsq"))
     val m = v.join(index.withColumnRenamed(idCol, "vid"), Seq("vid"))
@@ -557,7 +549,6 @@ object Similarity {
     * step drop out (standard k-means-with-empty-clusters behavior). */
   def pqTrain(vectors: DataFrame, m: Int, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              checkpointDir: Option[String] = None,
               trainFrac: Double = 1.0)
       : (DataFrame, DataFrame) = {
     require(m >= 1 && k >= 1, "m and k must be >= 1")
@@ -593,15 +584,14 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("dim"), col("mv"))))
           .as("dm"))
         .select(col("sub"), col("cid"),
-          transform(col("dm"), s => s.getField("mv")).as("cv")),
-      checkpointDir)
+          transform(col("dm"), s => s.getField("mv")).as("cv")))
     // lazy: codes have exactly ONE consumer per query (the packCodes
     // pivot feeding the serving path), so the eager cut was a pure
     // serial job barrier; the codebook above stays EAGER — the code
     // assignment and the serving LUT broadcast consume it from two
     // concurrent exchange futures, and a lazy cut materializes it twice
     // (measured +0.5 s on q_x_ann_pq).
-    val codes = Checkpoints.cutLazy(pqAssign(sv, codebook), checkpointDir)
+    val codes = Checkpoints.cutLazy(pqAssign(sv, codebook))
     (codebook, codes)
   }
 
@@ -832,8 +822,7 @@ object Similarity {
   def ivfPqResidualTrain(vectors: DataFrame, centroids: DataFrame,
                          index: DataFrame, m: Int, k: Int,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         checkpointDir: Option[String] = None)
+                         vecCol: String = "embedding")
       : (DataFrame, DataFrame) = {
     val v = vectors.select(col(idCol).as("vid"),
       transform(col(vecCol), x => x.cast("double")).as("vv"))
@@ -844,8 +833,7 @@ object Similarity {
         Seq("centroid_id"))
       .select(col("vid"),
         zip_with(col("vv"), col("cv"), (a, b) => a - b).as("rv"))
-    pqTrain(r, m, k, idCol = "vid", vecCol = "rv",
-      checkpointDir = checkpointDir)
+    pqTrain(r, m, k, idCol = "vid", vecCol = "rv")
   }
 
   /** [[ivfPqTopKPacked]] over residual codes: identical routing,
@@ -1013,8 +1001,9 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lambda > 0 && lambda < 1, s"lambda must be in (0,1), got $lambda")
     val oml = 1.0 - lambda
+    // read by both pair sides, the rank-1 argmax and every round
     val base = cands.select(col("qid"), col("cid"), col("rel"), col("cv"))
-      .withColumn("cn", normSq(col("cv"))).localCheckpoint()
+      .withColumn("cn", normSq(col("cv"))).transform(Checkpoints.cut)
     val a = base.select(col("qid"), col("cid").as("cid_a"),
       col("cv").as("va"), col("cn").as("na"))
     val b = base.select(col("qid"), col("cid").as("cid_b"),
@@ -1023,7 +1012,7 @@ object Similarity {
       a.join(b, "qid").filter(col("cid_a") =!= col("cid_b")),
       Seq("qid", "cid_a", "cid_b"),
       cosine(dot(col("va"), col("vb")), col("na"), col("nb")), "sim")
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // read by every one of the k-1 rounds
 
     def argmaxPerQ(df: DataFrame): DataFrame = {
       val best = df.groupBy("qid").agg(max(col("score")).as("__b"))
@@ -1049,7 +1038,7 @@ object Similarity {
         .select(col("qid"), col("cid"), col("score"))
       selected = selected
         .unionByName(argmaxPerQ(scored).withColumn("rank", lit(i.toLong)))
-        .localCheckpoint()
+        .transform(Checkpoints.cut)
     }
     selected.select(col("qid"), col("rank"), col("cid"),
       col("score").as("mmr_score"))
@@ -1080,8 +1069,7 @@ object Similarity {
     * (least(md, dist-to-newest-center)) plus ONE TakeOrdered(1) —
     * the newest center rides into the plan as a broadcast literal,
     * nothing shuffles, and lineage is cut per round through
-    * [[Checkpoints.cut]] (durable when `checkpointDir` is given — the
-    * Graph convention). The k driver-side single-row collects are the
+    * [[Checkpoints.cut]]. The k driver-side single-row collects are the
     * bounded artifact the operator exists to produce (k = O(10³) at
     * most), same class as the BPE merge table.
     *
@@ -1096,13 +1084,12 @@ object Similarity {
     *
     * @return k rows: (rnk, id, dist) — dist NULL for the seed row */
   def kCenterSelect(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, checkpointDir: Option[String] = None): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = emb.sparkSession
     import spark.implicits._
     val base = Checkpoints.cut(
-      emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")),
-      checkpointDir)
+      emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")))
     def sqd(v: Column, c: Seq[Float]): Column = {
       val cl = typedlit(c)
       (normSq(v) + normSq(cl)) - lit(2.0) * dot(v, cl)
@@ -1111,7 +1098,7 @@ object Similarity {
     var picks = Vector((1L, first.getLong(0), Option.empty[Double]))
     var cvec = first.getSeq[Float](1)
     var state = Checkpoints.cut(
-      base.withColumn("md", sqd(col("v"), cvec)), checkpointDir)
+      base.withColumn("md", sqd(col("v"), cvec)))
     for (i <- 2 to k) {
       val nxt = state.orderBy(col("md").desc, col("id").asc)
         .limit(1).head()
@@ -1119,8 +1106,7 @@ object Similarity {
         Some(graft.functions.GraftMath.sig9(nxt.getDouble(2)))))
       cvec = nxt.getSeq[Float](1)
       state = Checkpoints.cut(
-        state.withColumn("md", least(col("md"), sqd(col("v"), cvec))),
-        checkpointDir)
+        state.withColumn("md", least(col("md"), sqd(col("v"), cvec))))
     }
     picks.toDF("rnk", "id", "dist")
   }
@@ -1145,21 +1131,20 @@ object Similarity {
     * array_min — no shuffle, no join); the update is ONE
     * (cid, dim)-keyed hash aggregate over the posexploded vectors
     * (map-side partial, k·dim output rows). Lineage is cut per round
-    * via [[Checkpoints.cut]] (durable when `checkpointDir` is given).
+    * via [[Checkpoints.cut]].
     *
     * @return k·dim rows: (cid, dim, cval, n_assigned) — the trained
     *         centroids after `iters` rounds in long format, with each
     *         cluster's population from the FINAL assignment pass */
   def kmeans(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, checkpointDir: Option[String] = None): DataFrame = {
+      iters: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = emb.sparkSession
     import spark.implicits._
     import graft.queries.Q
     val base = Checkpoints.cut(
-      emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")),
-      checkpointDir)
+      emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")))
     var centers: Seq[(Long, Seq[Double])] = base
       .orderBy(col("id").asc).limit(k).collect()
       .sortBy(_.getLong(0)).zipWithIndex
@@ -1176,7 +1161,7 @@ object Similarity {
           lit(cid).as("cid"))
       }
       val assigned = Checkpoints.cut(base.withColumn("cid",
-        array_min(array(dists: _*)).getField("cid")), checkpointDir)
+        array_min(array(dists: _*)).getField("cid")))
       lastSizes = assigned.groupBy(col("cid"))
         .agg(count(lit(1)).as("n_assigned"))
       val means = assigned

@@ -101,8 +101,8 @@ object Spatial {
     *
     * @return (idCol, gx, gy, core, cluster_id nullable) */
   def gridCluster(pts: DataFrame, idCol: String, xCol: String,
-      yCol: String, cell: Double, minPts: Long, maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      yCol: String, cell: Double, minPts: Long,
+      maxIter: Int = 50): DataFrame = {
     require(cell > 0, s"gridCluster: cell must be positive, got $cell")
     require(minPts > 0, s"gridCluster: minPts must be positive, got $minPts")
     // p is consumed twice (cell counts, final assignment join) and its
@@ -117,14 +117,12 @@ object Spatial {
       .select(col(idCol), col(xCol).cast("double").as("__x"),
         col(yCol).cast("double").as("__y"))
       .withColumn("__gx", floor(col("__x") / cell).cast("long"))
-      .withColumn("__gy", floor(col("__y") / cell).cast("long")),
-      checkpointDir)
+      .withColumn("__gy", floor(col("__y") / cell).cast("long")))
     val cells = p.groupBy(col("__gx"), col("__gy"))
       .agg(count(lit(1)).as("__n"))
     val core = Checkpoints.cut(cells.where(col("__n") >= minPts)
       .select(col("__gx"), col("__gy"),
-        ((col("__gx") + Off) * Side + (col("__gy") + Off)).as("__cid")),
-      checkpointDir)
+        ((col("__gx") + Off) * Side + (col("__gy") + Off)).as("__cid")))
     // 8-neighbor adjacency via the same home-vs-probe trick; self-pairs
     // keep isolated core cells as singleton clusters
     val homeC = core.select(col("__cid").as("a_id"), col("__gx"),
@@ -141,8 +139,7 @@ object Spatial {
       .select(col("a_id"), col("b_id"))
       .unionByName(core.select(col("__cid").as("a_id"),
         col("__cid").as("b_id")))
-    val cc = Dedup.dupClustersStar(pairs, "a_id", "b_id", maxIter,
-      checkpointDir)
+    val cc = Dedup.dupClustersStar(pairs, "a_id", "b_id", maxIter)
       .select(col("doc_id").as("__cid"), col("cluster_id"))
     p.join(core.select(col("__gx"), col("__gy"), col("__cid")),
         Seq("__gx", "__gy"), "left")

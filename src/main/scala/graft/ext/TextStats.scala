@@ -356,7 +356,8 @@ object TextStats {
         Hashing.tokens(col(textCol)).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("ntok"),
         col("tk"))
-      .localCheckpoint() // read three times (positions, counts, explode)
+      // read three times (positions, counts, explode)
+      .transform(Checkpoints.cut)
     // position of each doc in ingest order, windowlessly
     val pos = Profile.percentRank(
         perDoc.select(lit(1).as("__g"), col("doc_id")),
@@ -478,14 +479,14 @@ object TextStats {
     // cut the corpus tokenizes three times, and a single-split
     // documents scan runs each pass on one core (guide §2.6). spread
     // is a gated no-op once the scan arrives at cluster width; the
-    // localCheckpoint holds the small aggregated (doc, token) frame.
+    // cut holds the small aggregated (doc, token) frame.
     val tf = Checkpoints.spread(docs.select(col(idCol), col(textCol)))
       .select(col(idCol), size(toks).cast("long").as("dl"),
         explode(toks).as("token"))
       .groupBy(col(idCol), col("token"))
       .agg(count(lit(1)).cast("long").as("tf_cnt"),
         min(col("dl")).as("dl"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val dfc = tf.groupBy(col("token"))
       .agg(count(lit(1)).cast("long").as("df"))
     val nDocs = tf.select(col(idCol)).distinct()

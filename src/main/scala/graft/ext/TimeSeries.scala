@@ -490,7 +490,8 @@ object TimeSeries {
     val idx = series
       .select(keys :+ col(tsCol) :+ col(valCol).cast(LongType).as("__x"): _*)
       .withColumn("__i", row_number().over(w))
-      .localCheckpoint() // read three times below (totals, both join sides)
+      // read three times below (totals, both join sides)
+      .transform(Checkpoints.cut)
     val tot = idx.groupBy(keys: _*)
       .agg(count(lit(1)).as("__n"), sum(col("__x")).as("__s"),
         sum(col("__x").cast(dec) * col("__x").cast(dec)).as("__q"))
@@ -544,8 +545,8 @@ object TimeSeries {
     def side(df: DataFrame, v: String) = df.select(
       unix_micros(col(tsCol)).as(s"__us_$v"),
       col(valCol).cast(LongType).as(s"__$v"))
-    val av = side(a, "x").localCheckpoint() // totals + join side
-    val bv = side(b, "y").localCheckpoint()
+    val av = side(a, "x").transform(Checkpoints.cut) // totals + join side
+    val bv = side(b, "y").transform(Checkpoints.cut) // totals + join side
     def tot(df: DataFrame, v: String) = df.agg(
       count(lit(1)).as(s"__n_$v"), sum(col(s"__$v")).as(s"__s_$v"),
       sum(col(s"__$v").cast(dec) * col(s"__$v").cast(dec)).as(s"__q_$v"))
@@ -598,7 +599,7 @@ object TimeSeries {
     val keys = keyCols.map(col)
     val prof = seasonalProfile(events, keyCols, tsCol, valCol)
     val res = deseasonalize(events, prof, keyCols, tsCol, valCol)
-      .localCheckpoint() // two moment passes
+      .transform(Checkpoints.cut) // two moment passes
     val mv = Profile.groupMoments(res, keyCols, valCol)
       .select(keys :+ col("n") :+ col("var_v").as("var_total"): _*)
     val mr = Profile.groupMoments(res, keyCols, "resid")
@@ -686,7 +687,7 @@ object TimeSeries {
     val dec = DecimalType(38, 0)
     val keys = keyCols.map(col)
     val idx = indexed(series, keyCols, tsCol, valCol)
-      .localCheckpoint() // both pair sides + the tie aggregate
+      .transform(Checkpoints.cut) // both pair sides + the tie aggregate
     val pairs = idx.as("l").join(idx.as("r"),
         keyCols.map(k => col(s"l.$k") === col(s"r.$k"))
           .reduce(_ && _) && col("r.__i") > col("l.__i"))
@@ -731,7 +732,7 @@ object TimeSeries {
       valCol: String): DataFrame = {
     val keys = keyCols.map(col)
     val idx = indexed(series, keyCols, tsCol, valCol)
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // both pair sides of the self-join
     // the division stays inside a when-guard even though the join
     // condition already excludes i_r == i_l: Catalyst pushes the
     // downstream isNotNull(slope) filter INTO the join, where ANSI
@@ -1109,7 +1110,7 @@ object TimeSeries {
     val idx = series
       .select(keys :+ col(tsCol) :+ col(valCol).cast(LongType).as("__x"): _*)
       .withColumn("__i", row_number().over(w))
-      .localCheckpoint() // read four times below
+      .transform(Checkpoints.cut) // read four times below
     val tot = idx.groupBy(keys: _*)
       .agg(count(lit(1)).as("__n"), sum(col("__x")).as("__s"),
         sum(col("__x").cast(dec) * col("__x").cast(dec)).as("__q"))

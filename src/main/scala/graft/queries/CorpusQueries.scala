@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ext.{Decontam, Hashing, LangModel, Layout, Retrieval, Sampling}
+import graft.ext.{Checkpoints, Decontam, Hashing, LangModel, Layout, Retrieval,
+  Sampling}
 import Q._
 
 /** Round-5 corpus operators under the DuckDB oracle: benchmark
@@ -189,12 +190,11 @@ object CorpusQueries {
   private val cmsQ: QFn = (s, d) => {
     val ex = Tables.documents(s, d)
       .select(explode(Hashing.tokens(col("text"))).as("tok"))
-    // counts materialized ONCE (the FuzzyJoin localCheckpoint
-    // convention): top-30, sketch build and the final join all read
-    // the checkpointed vocabulary frame — the corpus tokenizes and
-    // aggregates exactly once
+    // counts materialized ONCE (the FuzzyJoin convention): top-30,
+    // sketch build and the final join all read the cut vocabulary
+    // frame — the corpus tokenizes and aggregates exactly once
     val exact = ex.groupBy(col("tok")).agg(count(lit(1)).as("exact"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val top = exact.orderBy(col("exact").desc, col("tok").asc).limit(30)
     val sk = graft.ext.Sketch.countMinWeighted(
       exact, "tok", "exact", cmsD, cmsW, "cms")

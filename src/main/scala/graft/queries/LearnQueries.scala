@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Shared, Tables}
-import graft.ext.{Classifier, Hashing}
+import graft.ext.{Checkpoints, Classifier, Hashing}
 import Q._
 
 /** In-engine model training under the DuckDB oracle: full-batch
@@ -404,7 +404,7 @@ object LearnQueries {
         Seq("doc_id"))
       .select(col("doc_id"), col("pred"), col("best_score"),
         col("true_lang"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // shared by three queries
   }
 
   private val nbQ: QFn = nbPred.fresh

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Shared, Tables}
-import graft.ext.{FuzzyJoin, Hashing, Scd2}
+import graft.ext.{Checkpoints, FuzzyJoin, Hashing, Scd2}
 import Q._
 
 /** Record-linkage and dimension-historization operators under the
@@ -172,11 +172,12 @@ object LinkQueries {
   private val coEdges = Shared("q_x_pagerank", "q_x_ppr") { (s, d) =>
     val w = coPurchase(s, d).pairs.groupBy("a", "b")
       .agg(count(lit(1)).as("w"))
+    // both shared by two queries, each reading them every iteration
     val e = w.unionByName(w.select(col("b").as("a"), col("a").as("b"),
         col("w")))
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val nodes = Tables.lineitem(s, d).select(col("l_partkey")).distinct()
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     (e, nodes)
   }
 
@@ -401,13 +402,13 @@ object LinkQueries {
     val ord = Tables.lineitem(s, d).groupBy("l_orderkey")
       .agg(array_sort(array_distinct(collect_list(col("l_partkey"))))
         .as("ps"))
-    val ordCk = graft.ext.Checkpoints.spread(ord.localCheckpoint())
+    val ordCk = Checkpoints.spread(Checkpoints.cut(ord))
     val pairs = ordCk
       .select(col("l_orderkey").as("o"), explode(col("ps")).as("a"),
         col("ps"))
       .select(col("o"), col("a"), explode(col("ps")).as("b"))
       .where(col("a") < col("b"))
-      .localCheckpoint()
+      .transform(Checkpoints.cut) // shared by eight queries
     CoPurchase(ordCk, pairs)
   }
   private def coPurchasePairs(s: SparkSession, d: String): DataFrame =
@@ -419,7 +420,7 @@ object LinkQueries {
   private val triCounts = Shared("q_x_triangles", "q_x_clustering_coef") {
     (s, d) =>
       graft.ext.Graph.triangleCounts(coPurchasePairs(s, d), "a", "b")
-        .localCheckpoint()
+        .transform(Checkpoints.cut) // shared by two queries
   }
 
   /** Per-part triangle counts over the undirected co-purchase graph.
@@ -762,7 +763,7 @@ object LinkQueries {
     * q_x_modularity grades the very partition q_x_lpa emits. */
   private val lpaAssign = Shared("q_x_lpa", "q_x_modularity") { (s, d) =>
     graft.ext.Graph.labelPropagation(coPurchaseEdges(s, d), "a", "b",
-      lpaRounds).localCheckpoint()
+      lpaRounds).transform(Checkpoints.cut) // shared by two queries
   }
 
   private val lpaQ: QFn = (s, d) =>
@@ -1175,7 +1176,7 @@ object LinkQueries {
     // the materialized pair set (the un-cut union re-scanned lineitem
     // once per direction; the operators' own edge distinct then
     // dedups the pre-distinct frame a second time)
-    val li = graft.ext.Checkpoints.spreadCut(Tables.lineitem(s, d)
+    val li = Checkpoints.spreadCut(Tables.lineitem(s, d)
       .where(col("l_suppkey") % 16 === 1)
       .select(col("l_suppkey").as("a"),
         (col("l_partkey") + partNodeOffset).as("b"))

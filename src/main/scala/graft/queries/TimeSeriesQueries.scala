@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ext.TimeSeries
+import graft.ext.{Checkpoints, TimeSeries}
 
 /** Regular-grid time-series operators over the `events` fixture under
   * the DuckDB oracle ([[graft.ext.TimeSeries]]): OHLC downsampling and
@@ -769,7 +769,7 @@ object TimeSeriesQueries {
     // spreadCut BELOW the md5 arm assignment: a single-split events
     // scan otherwise pins both per-row md5s (arm + replicate coin) to
     // one core (guide §2.6)
-    val ev = graft.ext.Checkpoints.spreadCut(Tables.events(s, d)
+    val ev = Checkpoints.spreadCut(Tables.events(s, d)
       .select(col("user_id"), col("value"), col("event_id")))
     graft.ext.Profile.permutationTest(ev.withColumn("grp", grp),
       "grp", "value", "event_id", replicates = permReps)
@@ -1989,7 +1989,7 @@ object TimeSeriesQueries {
       col("z").as("value"), naux, col("n_a"), col("n_b"))
     val prop = propTestQ(s, d).select(lit("prop").as("stat"),
       col("z").as("value"), naux, col("n_a"), col("n_b"))
-    val cu = cupedQ(s, d).localCheckpoint() // one CUPED pass, two rows
+    val cu = cupedQ(s, d).transform(Checkpoints.cut) // one CUPED pass, two rows
     val cuRaw = cu.select(lit("cuped_raw").as("stat"),
       col("z_raw").as("value"), col("theta").as("aux"),
       col("n_a"), col("n_b"))
@@ -2113,7 +2113,7 @@ object TimeSeriesQueries {
     // three raw columns at cluster width and is a lineage barrier, so
     // the arm evaluates post-exchange on all cores; gated — a no-op
     // repartition-wise on any many-split input at scale.
-    val ev = graft.ext.Checkpoints.spreadCut(
+    val ev = Checkpoints.spreadCut(
       Tables.events(s, d)
         .where(col("user_id").isNotNull)
         .select(col("user_id"), col("event_type"), col("value")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.queries.Q
 import graft.core.Parquet
+import graft.ext.Checkpoints
 
 /** Structured-Streaming surface of the engine over the `events` table
   * shape (event_id, ts, user_id, event_type, value, props).
@@ -1424,10 +1425,10 @@ object EventPipeline {
         import graft.ext.{Dedup, Multimodal}
         // decode is a mapPartitions codec pass — materialize once, or
         // every downstream branch re-decodes the batch
-        val g = decode(batch).localCheckpoint()
+        val g = decode(batch).transform(Checkpoints.cut)
         val hashed = g.filter(col("decoded"))
           .select(col(idCol), Multimodal.dhash60(col("grid")).as("dh"))
-          .localCheckpoint()
+          .transform(Checkpoints.cut) // three band passes + the kept join
         val sp = new org.apache.hadoop.fs.Path(storePath)
         val store =
           if (sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1455,7 +1456,9 @@ object EventPipeline {
         val keptHashes = hashed
           .join(dropVsStore.union(dropInBatch).distinct(), Seq(idCol),
             "left_anti")
-          .localCheckpoint()
+          // read by both writes; eager, so it has read the store before
+          // the store append below writes it
+          .transform(Checkpoints.cut)
         // kept payloads (decoded survivors + flagged undecodables)
         // land FIRST, then the store extension
         batch

@@ -51,6 +51,23 @@ object SparkSpec {
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
   sys.addShutdownHook(made.forEach(FileUtils.deleteQuietly(_)))
 
+  /** Run `body` with `dir` as the context's checkpoint dir — the
+    * durable posture of every [[graft.ext.Checkpoints]] cut — and
+    * clear it afterwards, whatever `body` does: the suites share one
+    * context, and a dir left set would make every later suite's cuts
+    * durable. Spark has no public API to unset the dir, so the clear
+    * goes through the (Scala-public, `private[spark]`) setter. */
+  def withCheckpointDir[T](dir: String)(body: => T): T = {
+    val sc = session().sparkContext
+    sc.setCheckpointDir(dir)
+    try body
+    finally {
+      sc.getClass.getMethods.find(_.getName == "checkpointDir_$eq").get
+        .invoke(sc, None)
+      ()
+    }
+  }
+
   /** A new temp dir, deleted with everything in it when the JVM ends:
     * a suite's files outlive its tests, which may read them back, but
     * not the test run. */

@@ -14,7 +14,11 @@ import scala.jdk.CollectionConverters._
   *    every session comes from [[Session]];
   *  - a window partitioned on `"bin"` is a hand-copied binned prefix
   *    sum; every exact running rank or CDF comes from
-  *    [[graft.ext.Prefix.below]]. */
+  *    [[graft.ext.Prefix.below]];
+  *  - a bare `.localCheckpoint(` or `.checkpoint(` cuts lineage past
+  *    the one cut policy, and stays executor-local when the session
+  *    asks for durable cuts; every cut comes from
+  *    [[graft.ext.Checkpoints]]. */
 class HelperGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -60,5 +64,15 @@ class HelperGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "a window partitioned on \"bin\" re-copies the binned prefix " +
         "sum; use graft.ext.Prefix.below:\n  " + hits.mkString("\n  "))
+  }
+
+  test("no bare localCheckpoint( or checkpoint( in src/main/scala " +
+      "outside Checkpoints") {
+    val hits = outside("""\.\s*(?:localCheckpoint|checkpoint)\s*\(""",
+      root.resolve("graft/ext/Checkpoints.scala"))
+    assert(hits.isEmpty,
+      "a bare cut bypasses the one cut policy (durable when the context " +
+        "has a checkpoint dir); use graft.ext.Checkpoints.cut or " +
+        "cutLazy:\n  " + hits.mkString("\n  "))
   }
 }

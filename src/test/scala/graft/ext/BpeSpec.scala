@@ -311,8 +311,10 @@ class BpeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("bpeck").toString
     val a = Bpe.train(corpus, "tk", merges = 3)
       .as[(Long, String, String, String, Long)].collect().toSeq
-    val b = Bpe.train(corpus, "tk", merges = 3, checkpointDir = Some(dir))
-      .as[(Long, String, String, String, Long)].collect().toSeq
+    val b = SparkSpec.withCheckpointDir(dir) {
+      Bpe.train(corpus, "tk", merges = 3)
+        .as[(Long, String, String, String, Long)].collect().toSeq
+    }
     assert(a == b)
   }
 }

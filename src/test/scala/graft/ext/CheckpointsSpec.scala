@@ -1,66 +1,47 @@
 package graft.ext
 
 import graft.SparkSpec
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def sc = spark.sparkContext
-
-  /** Clear the context's checkpoint dir (private[spark] var, set-only
-    * public API) so each test exercises the first-install path. */
-  private def clearScDir(): Unit = {
-    val m = sc.getClass.getMethods.find(_.getName == "checkpointDir_$eq").get
-    m.invoke(sc, None)
-    Checkpoints.forget(sc)
-  }
-
   private def df = Seq(1, 2, 3).toDF("x").select(col("x") * 2 as "y")
 
-  test("consecutive cuts to one dir share a single UUID subdirectory") {
-    clearScDir()
-    val d = java.nio.file.Files.createTempDirectory("ckpol1").toString
-    Checkpoints.cut(df, Some(d)).collect()
-    val first = sc.getCheckpointDir
-    assert(first.exists(_.startsWith("file:")) || first.exists(_.startsWith(d)))
-    Checkpoints.cut(df, Some(d)).collect()
-    assert(sc.getCheckpointDir == first,
-      "second cut to the same dir must not re-install a fresh UUID subdir")
-  }
+  /** The reliable checkpoint file behind a cut frame (None when the cut
+    * is executor-local). */
+  private def ckFile(cut: DataFrame): Option[String] =
+    cut.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
+      .get.getCheckpointFile
 
-  test("alternating dirs is legal (re-set per flip) and stays correct") {
-    clearScDir()
-    val a = java.nio.file.Files.createTempDirectory("ckpolA").toString
-    val b = java.nio.file.Files.createTempDirectory("ckpolB").toString
-    assert(Checkpoints.cut(df, Some(a)).as[Int].collect().sorted.toSeq ==
-      Seq(2, 4, 6))
-    val dirA = sc.getCheckpointDir
-    assert(Checkpoints.cut(df, Some(b)).as[Int].collect().sorted.toSeq ==
-      Seq(2, 4, 6))
-    val dirB = sc.getCheckpointDir
-    assert(dirA != dirB)
-    // back to A: a NEW UUID subdir under A (documented cost), correct data
-    assert(Checkpoints.cut(df, Some(a)).as[Int].collect().sorted.toSeq ==
-      Seq(2, 4, 6))
-    assert(sc.getCheckpointDir != dirA && sc.getCheckpointDir != dirB)
-  }
+  private def files(d: Path): Long =
+    Files.walk(d).iterator().asScala.count(Files.isRegularFile(_))
 
-  test("an externally-configured checkpoint dir is never silently " +
-      "overridden") {
-    clearScDir()
-    val ext = java.nio.file.Files.createTempDirectory("ckpolExt").toString
-    sc.setCheckpointDir(ext) // configured OUTSIDE Checkpoints
-    val mine = java.nio.file.Files.createTempDirectory("ckpolMine").toString
-    val e = intercept[IllegalArgumentException] {
-      Checkpoints.cut(df, Some(mine))
+  test("with a context checkpoint dir every cut writes under it and " +
+      "returns the local rows; with none, nothing is written") {
+    val cuts = Seq[(String, DataFrame => DataFrame)](
+      "cut" -> Checkpoints.cut, "cutLazy" -> Checkpoints.cutLazy,
+      "spreadCut" -> Checkpoints.spreadCut)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    for ((name, cut) <- cuts) {
+      val local = cut(df)
+      val want = local.as[Int].collect().sorted.toSeq
+      assert(want == Seq(2, 4, 6), name)
+      assert(ckFile(local).isEmpty, s"$name wrote a checkpoint file")
+      val d = SparkSpec.tempDir(s"ck-$name")
+      SparkSpec.withCheckpointDir(d.toString) {
+        val durable = cut(df)
+        assert(durable.as[Int].collect().sorted.toSeq == want, name)
+        assert(ckFile(durable).exists(_.contains(d.getFileName.toString)),
+          s"$name: ${ckFile(durable)} is not under $d")
+      }
+      assert(files(d) > 0, s"$name wrote nothing under the checkpoint dir")
     }
-    assert(e.getMessage.contains("outside graft.ext.Checkpoints"))
-    // the external dir is untouched, and local cuts still work
-    assert(sc.getCheckpointDir.exists(_.contains(
-      new java.io.File(ext).getName)))
-    assert(Checkpoints.cut(df, None).as[Int].collect().sorted.toSeq ==
-      Seq(2, 4, 6))
-    clearScDir() // leave a clean context for later suites
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "withCheckpointDir must clear the dir it set")
   }
 }

@@ -278,14 +278,13 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (7L, 9L))
       .toDF("a_id", "b_id")
     val local = Dedup.dupClusters(pairs).as[(Long, Long)].collect().toMap
-    val durable = Dedup.dupClusters(pairs, checkpointDir = Some(s"$dir/a"))
-      .as[(Long, Long)].collect().toMap
-    assert(local == durable)
     val localS = Dedup.dupClustersStar(pairs).as[(Long, Long)].collect().toMap
-    val durableS = Dedup
-      .dupClustersStar(pairs, checkpointDir = Some(s"$dir/b"))
-      .as[(Long, Long)].collect().toMap
-    assert(localS == durableS)
+    SparkSpec.withCheckpointDir(dir) {
+      assert(Dedup.dupClusters(pairs).as[(Long, Long)].collect().toMap ==
+        local)
+      assert(Dedup.dupClustersStar(pairs).as[(Long, Long)].collect().toMap ==
+        localS)
+    }
   }
 
   test("shingles: fewer than n tokens -> empty, order-sensitive") {

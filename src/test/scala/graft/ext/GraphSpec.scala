@@ -12,6 +12,10 @@ class GraphSpec extends SparkSpec {
     rows.toDF("a", "b", "w")
   private def nodes(ids: Long*): DataFrame = ids.toDF("v")
 
+  /** `body` with `dir`, when given, as the durable checkpoint dir. */
+  private def durable[T](dir: Option[String])(body: => T): T =
+    dir.fold(body)(SparkSpec.withCheckpointDir(_)(body))
+
   private def run(e: DataFrame, n: DataFrame, iters: Int)
       : Map[Long, Double] =
     Graph.pageRank(e, "a", "b", "w", n, "v", iters)
@@ -212,10 +216,10 @@ class GraphSpec extends SparkSpec {
   // ===== k-hop BFS ====================================================
 
   private def runKhop(e: Seq[(Long, Long)], seeds: Seq[Long], k: Int,
-      dir: Option[String] = None): Map[Long, Long] =
-    Graph.khopDistances(e.toDF("a", "b"), "a", "b", seeds.toDF("v"), "v",
-        k, checkpointDir = dir)
+      dir: Option[String] = None): Map[Long, Long] = durable(dir) {
+    Graph.khopDistances(e.toDF("a", "b"), "a", "b", seeds.toDF("v"), "v", k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
 
   /** Naive per-round relaxation reference. */
   private def refKhop(e: Seq[(Long, Long)], seeds: Seq[Long], k: Int)
@@ -271,27 +275,17 @@ class GraphSpec extends SparkSpec {
     val e3 = Seq((1L, 2L, 2L), (2L, 3L, 1L), (3L, 1L, 3L), (1L, 3L, 1L))
     val ns = Seq(1L, 2L, 3L, 4L)
     val pr0 = run(edges(e3: _*), nodes(ns: _*), 3)
-    val pr1 = Graph.pageRank(edges(e3: _*), "a", "b", "w", nodes(ns: _*),
-        "v", iters = 3, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(pr1 === pr0)
     val h0 = runHits(edges(e3: _*), nodes(ns: _*), 3)
-    val h1 = Graph.hits(edges(e3: _*), "a", "b", "w", nodes(ns: _*), "v",
-        iters = 3, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
-      .toMap
-    assert(h1 === h0)
     val te = Seq((1L, 2L), (2L, 3L), (1L, 3L), (2L, 4L), (3L, 4L))
-    val t1 = Graph.triangleCounts(te.toDF("a", "b"), "a", "b",
-        checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(t1 === runTri(te))
+    val t0 = runTri(te)
     val le = Seq((1L, 2L, 5L), (1L, 3L, 4L), (1L, 4L, 3L), (2L, 3L, 1L))
-    val l1 = Graph.linkPredict(le.toDF("a", "b", "w"), "a", "b", "w",
-        k = 10, checkpointDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getDouble(3))).toMap
-    assert(l1 === runLp(le, k = 10))
+    val l0 = runLp(le, k = 10)
+    SparkSpec.withCheckpointDir(dir) {
+      assert(run(edges(e3: _*), nodes(ns: _*), 3) === pr0)
+      assert(runHits(edges(e3: _*), nodes(ns: _*), 3) === h0)
+      assert(runTri(te) === t0)
+      assert(runLp(le, k = 10) === l0)
+    }
     // and the durable blocks actually landed on disk
     assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir))
       .count() > 0, "durable checkpoint dir should be non-empty")
@@ -357,9 +351,10 @@ class GraphSpec extends SparkSpec {
   }
 
   private def runCore(e: DataFrame, k: Int, rounds: Int,
-      dir: Option[String] = None): Map[Long, Long] =
-    Graph.kCore(e, "a", "b", k, rounds, dir)
+      dir: Option[String] = None): Map[Long, Long] = durable(dir) {
+    Graph.kCore(e, "a", "b", k, rounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
 
   test("kCore: pendants peel in cascade; the clique survives with its " +
       "inner degrees; extra rounds past convergence are no-ops") {
@@ -391,9 +386,11 @@ class GraphSpec extends SparkSpec {
 
   private def runSp(e: Seq[(Long, Long, Long)], seeds: Seq[Long],
       rounds: Int, dir: Option[String] = None): Map[Long, Long] =
-    Graph.shortestPaths(e.toDF("a", "b", "w"), "a", "b", "w",
-        seeds.toDF("v"), "v", rounds, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    durable(dir) {
+      Graph.shortestPaths(e.toDF("a", "b", "w"), "a", "b", "w",
+          seeds.toDF("v"), "v", rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
 
   test("shortestPaths: a cheaper two-hop route beats the direct edge; " +
       "the round budget bounds path length") {
@@ -425,8 +422,10 @@ class GraphSpec extends SparkSpec {
       ck: Option[String] = None, parts: Int = 3): Map[Long, Long] = {
     val und = (e ++ e.map(p => (p._2, p._1))).toDF("a", "b")
       .repartition(parts)
-    Graph.labelPropagation(und, "a", "b", rounds, ck)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    durable(ck) {
+      Graph.labelPropagation(und, "a", "b", rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
   }
 
   test("labelPropagation: two triangles over a bridge separate; the " +

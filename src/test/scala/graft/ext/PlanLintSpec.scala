@@ -95,7 +95,7 @@ class PlanLintSpec extends SparkSpec {
     def round(d: org.apache.spark.sql.DataFrame, cut: Boolean, i: Int) = {
       val next = d.crossJoin(broadcast(one))
         .select((col("id") + col("o")).as("id"))
-      if (cut && i % 16 == 0) Checkpoints.cut(next, None) else next
+      if (cut && i % 16 == 0) Checkpoints.cut(next) else next
     }
     val base = Seq(Tuple1(0L)).toDF("id")
     val uncut = (1 to 64).foldLeft(base)((d, i) => round(d, cut = false, i))

@@ -190,13 +190,14 @@ class SimilaritySpec extends SparkSpec {
       "checkpointDir path matches the local one") {
     val dir = java.nio.file.Files.createTempDirectory("ivfck").toString
     val (c1, i1) = Similarity.ivfIndex(base, k = 4, iters = 2)
-    val (c2, i2) = Similarity.ivfIndex(base, k = 4, iters = 2,
-      checkpointDir = Some(dir))
     assert(i1.count() == 40)
-    assert(c1.as[(Long, Seq[Double])].collect().toMap ==
-      c2.as[(Long, Seq[Double])].collect().toMap)
-    assert(i1.as[(Long, Long)].collect().toMap ==
-      i2.as[(Long, Long)].collect().toMap)
+    SparkSpec.withCheckpointDir(dir) {
+      val (c2, i2) = Similarity.ivfIndex(base, k = 4, iters = 2)
+      assert(c1.as[(Long, Seq[Double])].collect().toMap ==
+        c2.as[(Long, Seq[Double])].collect().toMap)
+      assert(i1.as[(Long, Long)].collect().toMap ==
+        i2.as[(Long, Long)].collect().toMap)
+    }
   }
 
   test("quantizeInt8: codes in [0,255], endpoints exact, constant dims " +
